@@ -121,7 +121,8 @@ object Bench {
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "300000").toLong
     val levels = sys.env.getOrElse("SPARK_GRAFT_BENCH_LEVELS", "2,8,32")
       .split(",").map(_.trim.toInt).toSeq
-    val pagesPath = "/root/repo/target/bench_pages"
+    // under the working directory (the child JVMs below inherit it)
+    val pagesPath = new java.io.File("target/bench_pages").getAbsolutePath
 
     args.collectFirst { case a if a.startsWith("--level=") => a.drop(8).toInt } match {
       case Some(p) => runLevel(p, pagesPath, nDocs); return

@@ -1484,9 +1484,11 @@ object SparkEntry {
     * ABSOLUTE path at query-build time (the oracle SQL is executed by the
     * driver's DuckDB from an unknown cwd): working-dir-relative when run
     * from a checkout, env override for anything else. */
-  private val GoldenDir: String = sys.env.get("GRAFT_GOLDEN_DIR").getOrElse {
+  private lazy val GoldenDir: String = sys.env.get("GRAFT_GOLDEN_DIR").getOrElse {
     val rel = new java.io.File("src/test/resources/golden")
     if (rel.isDirectory) rel.getAbsolutePath
-    else "/root/repo/src/test/resources/golden"
+    else sys.error("CPython golden parquets not found: src/test/resources/golden is " +
+      "missing under the working directory; run from the repository root or set " +
+      "GRAFT_GOLDEN_DIR to the golden directory")
   }
 }

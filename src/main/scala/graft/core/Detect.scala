@@ -1,6 +1,5 @@
 package graft.core
 
-import java.util.regex.Pattern
 import scala.collection.immutable.VectorBuilder
 
 /** Pure text→hits detection, a port of the reference's detector semantics.
@@ -15,62 +14,49 @@ import scala.collection.immutable.VectorBuilder
   */
 object Detect {
 
-  private def scan(pat: Pattern, text: String, kind: String, conf: Double,
-                   reason: String, out: VectorBuilder[Hit]): Unit = {
-    val m = Scrub.matcherFor(pat, text) // thread-confined matcher reuse
-    while (m.find()) out += Hit(kind, m.group(), m.start(), m.end(), conf, reason)
-    Scrub.release(m)
+  /** One detector: a pattern name, run alone as a one-pattern scan, with the
+    * reference's fixed confidence and reason. */
+  private final class Detector(name: String, val conf: Double, val reason: String) {
+    val names: Seq[String] = Vector(name)
   }
 
-  // one cheap scan prunes whole pattern families (same trigger logic as
-  // Scrub.triggered; a pruned pattern could not have matched)
-  private def triggers(text: String): (Boolean, Boolean, Boolean) = {
-    var hasAt = false
-    var hasDigit = false
-    var hasJp = false
-    var i = 0
-    while (i < text.length && !(hasAt && hasDigit && hasJp)) {
-      val c = text.charAt(i)
-      if (c == '@') hasAt = true
-      else if (Character.isDigit(c)) hasDigit = true
-      else if (c >= '　') hasJp = true
-      i += 1
+  private val regexDetectors = Vector(
+    new Detector("email", 0.99, "regex:email"),
+    new Detector("phone", 0.95, "regex:phone"),
+    new Detector("amount", 0.90, "regex:amount"),
+    new Detector("id", 0.88, "regex:id"))
+
+  private val nerDetectors = Vector(
+    new Detector("postal", 0.85, "offline_rule_postal"),
+    new Detector("address", 0.80, "offline_rule_address"),
+    new Detector("name_kanji", 0.75, "offline_rule_name"),
+    new Detector("name_hiragana", 0.75, "offline_rule_name"),
+    new Detector("name_katakana", 0.75, "offline_rule_name"))
+
+  private val allDetectors = regexDetectors ++ nerDetectors
+
+  /** All hits of each detector in turn, through [[Scrub]]'s scan loop. One
+    * trigger scan of the text prunes the detectors that could not match. */
+  private def detect(detectors: Vector[Detector], text: String): Vector[Hit] = {
+    val mask = Scrub.triggerMask(text)
+    val out = new VectorBuilder[Hit]
+    detectors.foreach { d =>
+      val prep = Scrub.prepared(d.names, mask)
+      Scrub.forEachHit(prep, text, { (i, start, end) =>
+        out += Hit(prep.kinds(i), text.substring(start, end), start, end, d.conf, d.reason)
+      })
     }
-    (hasAt, hasDigit, hasJp)
+    out.result()
   }
 
   /** app/detectors.py:28-34 — email/phone/amount/id with fixed confs. */
-  def classifyByRegex(text: String): Vector[Hit] = {
-    val (hasAt, hasDigit, _) = triggers(text)
-    if (!hasAt && !hasDigit) return Vector.empty
-    val out = new VectorBuilder[Hit]
-    if (hasAt) scan(Patterns.Email, text, "email", 0.99, "regex:email", out)
-    if (hasDigit) {
-      scan(Patterns.Phone, text, "phone", 0.95, "regex:phone", out)
-      scan(Patterns.Amount, text, "amount", 0.90, "regex:amount", out)
-      scan(Patterns.Id, text, "id", 0.88, "regex:id", out)
-    }
-    out.result()
-  }
+  def classifyByRegex(text: String): Vector[Hit] = detect(regexDetectors, text)
 
   /** app/security_manager.py:177-212 — rule-based postal/address/name NER. */
-  def ruleNer(text: String): Vector[Hit] = {
-    val (_, hasDigit, hasJp) = triggers(text)
-    if (!hasDigit && !hasJp) return Vector.empty
-    val out = new VectorBuilder[Hit]
-    if (hasDigit) scan(Patterns.Postal, text, "address", 0.85, "offline_rule_postal", out)
-    if (hasJp) {
-      scan(Patterns.Address, text, "address", 0.80, "offline_rule_address", out)
-      scan(Patterns.NameKanji, text, "name", 0.75, "offline_rule_name", out)
-      scan(Patterns.NameHiragana, text, "name", 0.75, "offline_rule_name", out)
-      scan(Patterns.NameKatakana, text, "name", 0.75, "offline_rule_name", out)
-    }
-    out.result()
-  }
+  def ruleNer(text: String): Vector[Hit] = detect(nerDetectors, text)
 
   /** merge_with_ner (app/detectors.py:36-38): regex hits ++ ner hits. */
-  def detectAll(text: String): Vector[Hit] =
-    classifyByRegex(text) ++ ruleNer(text)
+  def detectAll(text: String): Vector[Hit] = detect(allDetectors, text)
 
   /** Per-type counts; `includeAmount=false` reproduces the /detect/summary
     * quirk where `amount` is silently excluded (app/main.py:647,672-673). */

@@ -26,6 +26,19 @@ import java.util.regex.Pattern
   *     Consequence (verified against CPython): `東京都新宿区西新宿2-8-1` does
   *     NOT match; `東京都新宿区西 新宿` matches `東京都新宿区西 `.
   *
+  * Email carries one addition the reference does not have: a run-start
+  * guard `(?<![A-Za-z0-9._%+-])`. Unguarded, a scan tries the local part
+  * `[A-Za-z0-9._%+-]+` at every offset of a local-part run and re-reads the
+  * rest of the run each time, so a document with an `@` scans in time
+  * quadratic in its longest run. Whether an email matches from an offset
+  * inside a run does not depend on the offset: `@` is not a local-part
+  * char, so every offset of a run reaches the same `@` and the same domain.
+  * The guard therefore only drops offsets whose run start was already
+  * tried — except where a scan RESUMES inside a run, right after a match
+  * that ended there. That case is handled by the one scan loop in
+  * [[Scrub]], which tries the unguarded [[EmailBody]] once per run; the two
+  * together keep CPython's leftmost-first result exactly.
+  *
   * `UNICODE_CHARACTER_CLASS` pins `\d`/`\s`/`\b` to Python 3 `re` semantics
   * (full-width digits, ideographic space, Unicode word boundaries).
   * Parity is enforced by golden vectors generated from CPython
@@ -35,7 +48,17 @@ object Patterns {
   private def p(re: String): Pattern =
     Pattern.compile(re, Pattern.UNICODE_CHARACTER_CLASS)
 
-  val Email: Pattern  = p("""[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}""")
+  /** The reference's email regex, unguarded: tried anchored where a scan
+    * resumes inside a local-part run. */
+  val EmailBody: Pattern = p("""[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}""")
+  /** [[EmailBody]] tried only at the start of a local-part run. */
+  val Email: Pattern = p("""(?<![A-Za-z0-9._%+-])""" + EmailBody.pattern)
+
+  /** Chars of email's local-part class `[A-Za-z0-9._%+-]`. */
+  def isEmailLocal(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
+      c == '.' || c == '_' || c == '%' || c == '+' || c == '-'
+
   val Phone: Pattern  = p("""(?:0\d{1,4}-\d{1,4}-\d{3,4})|(?:\+81-\d{1,4}-\d{1,4}-\d{3,4})""")
   val Amount: Pattern = p("""(?:¥|JPY)?\s?\d{1,3}(?:,\d{3})+""")
   val Id: Pattern     = p("""\b(?:ACC|USR|ORD)-\d{4,6}\b""")

@@ -14,6 +14,23 @@ import scala.collection.mutable
   * earlier-listed pattern wins; overlaps resolve leftmost-first. All inner
   * groups of the ported patterns are non-capturing, so group i ↔ pattern i.
   *
+  * Every regex PII scan — this scrub, its span view [[unionHits]] and the
+  * per-pattern scans of [[Detect]] — runs through one loop, [[forEachHit]],
+  * which keeps each scan linear in the document length. Email is guarded to
+  * run starts (see [[Patterns]]): the union tries it only where the previous
+  * char is not a local-part char. An unguarded scan also tries email where
+  * it RESUMES inside a local-part run, i.e. right after a match that ended
+  * between two local-part chars; the loop makes up for exactly that case by
+  * trying the unguarded [[Patterns.EmailBody]] anchored there. Email is the
+  * first alternative, so a success is the match CPython returns at that
+  * offset. A failure holds for the whole run (every offset of a run reaches
+  * the same `@` and domain), so the loop records the run's end and later
+  * resumes inside it skip the check. Elsewhere the guard only removes
+  * email attempts the unguarded union already knew to fail, so the
+  * leftmost-first result is unchanged. A guard-only alternative,
+  * `(?:(?<![A-Za-z0-9._%+-])|\G)`, stays quadratic: `\G` re-reads the rest of
+  * the run after every digit-pattern match inside it.
+  *
   * Three alias modes:
   *  - [[Scrub.scrubTags]]   — fixed `<KIND>` tokens (oracle-friendly);
   *  - [[Scrub.scrubDict]]   — north-star `<PERSON_1>`-style numbered aliases
@@ -40,7 +57,7 @@ object Scrub {
   /** Compiled union for a pattern-name list. Cached: the set of distinct
     * policy combinations is tiny and executors reuse them across rows. */
   private val unionCache = new java.util.concurrent.ConcurrentHashMap[Seq[String], Pattern]()
-  def union(names: Seq[String]): Pattern =
+  private def union(names: Seq[String]): Pattern =
     unionCache.computeIfAbsent(names, ns =>
       Pattern.compile(
         ns.map(n => "(" + Patterns.pattern(n).pattern + ")").mkString("|"),
@@ -53,7 +70,7 @@ object Scrub {
   private val matcherCache =
     ThreadLocal.withInitial[java.util.HashMap[Pattern, java.util.regex.Matcher]](
       () => new java.util.HashMap())
-  private[core] def matcherFor(p: Pattern, text: CharSequence): java.util.regex.Matcher = {
+  private def matcherFor(p: Pattern, text: CharSequence): java.util.regex.Matcher = {
     val m = matcherCache.get().computeIfAbsent(p, pp => pp.matcher(""))
     m.reset(text)
     m
@@ -61,7 +78,7 @@ object Scrub {
   /** Drop the matcher's document reference once scanning finishes — a
     * cached matcher would otherwise pin the last-scanned (possibly
     * MB-sized) text per (thread, pattern) indefinitely. */
-  private[core] def release(m: java.util.regex.Matcher): Unit = m.reset("")
+  private def release(m: java.util.regex.Matcher): Unit = m.reset("")
 
   /** Trigger classes per pattern: a pattern cannot match unless the text
     * contains at least one of its trigger characters, so one cheap char scan
@@ -77,7 +94,7 @@ object Scrub {
   private def isJpTrigger(c: Char): Boolean = c >= '　'
 
   /** Trigger bitmask of a text: bit0 '@', bit1 digit, bit2 CJK/kana. */
-  private def triggerMask(text: CharSequence): Int = {
+  private[core] def triggerMask(text: CharSequence): Int = {
     var mask = 0
     var i = 0
     val n = text.length
@@ -102,19 +119,74 @@ object Scrub {
     * compiled union, built once per combination — the per-ROW work is one
     * cache lookup + array index, no collection allocation (at millions of
     * rows per executor the old per-row `names.filter` was real garbage). */
-  private final class Prepared(val names: Seq[String], val pattern: Pattern)
+  private[core] final class Prepared(val names: Seq[String], val pattern: Pattern) {
+    /** Hit kind of union group i + 1. */
+    val kinds: Array[String] = names.map(kindOf).toArray
+    /** Email is the first alternative: [[forEachHit]]'s resume rule applies. */
+    val emailFirst: Boolean = names.headOption.contains("email")
+  }
   private val preparedCache =
     new java.util.concurrent.ConcurrentHashMap[Seq[String], Array[Prepared]]()
-  private def prepared(names0: Seq[String], mask: Int): Prepared =
-    preparedCache.computeIfAbsent(names0, ns =>
+  private[core] def prepared(names0: Seq[String], mask: Int): Prepared =
+    preparedCache.computeIfAbsent(names0, { ns =>
+      // the resume rule emits email where the unguarded union would try it
+      // FIRST; that holds only while email leads the order (it does in
+      // ReferenceOrder, FullOrder and every policy filter of them)
+      require(!ns.contains("email") || ns.head == "email",
+        s"email must be the first pattern of a scan order: $ns")
       Array.tabulate(8) { m =>
         val f = filterByMask(ns, m)
         new Prepared(f, if (f.isEmpty) null else union(f))
-      })(mask)
+      }
+    })(mask)
 
   /** Drop patterns whose trigger char never occurs. */
   def triggered(text: CharSequence, names: Seq[String]): Seq[String] =
     prepared(names, triggerMask(text)).names
+
+  /** Receives the matches of [[forEachHit]] in text order; `i` indexes the
+    * matching pattern in `prep.names` (and its hit kind in `prep.kinds`). */
+  private[core] trait HitSink { def hit(i: Int, start: Int, end: Int): Unit }
+
+  /** The union scan loop: `sink` gets every match of the unguarded union
+    * `prep.pattern` stands for, as (pattern index, start, end), leftmost-first.
+    * Linear in the text: the guarded email is tried once per local-part run,
+    * and a resume inside a run tries [[Patterns.EmailBody]] at most once per
+    * run (see the object scaladoc). */
+  private[core] def forEachHit(prep: Prepared, text: CharSequence, sink: HitSink): Unit = {
+    if (prep.pattern == null) return
+    val m = matcherFor(prep.pattern, text)
+    val n = text.length
+    var email: java.util.regex.Matcher = null
+    var failedRunEnd = 0 // resumes before this offset sit in a run email fails
+    var pos = 0
+    while (pos >= 0) {
+      val resumeMidRun = prep.emailFirst && pos > 0 && pos < n && pos >= failedRunEnd &&
+        Patterns.isEmailLocal(text.charAt(pos - 1)) && Patterns.isEmailLocal(text.charAt(pos))
+      var emailEnd = -1
+      if (resumeMidRun) {
+        if (email == null) email = matcherFor(Patterns.EmailBody, text)
+        email.region(pos, n)
+        if (email.lookingAt()) emailEnd = email.end()
+        else {
+          var i = pos + 1
+          while (i < n && Patterns.isEmailLocal(text.charAt(i))) i += 1
+          failedRunEnd = i
+        }
+      }
+      if (emailEnd >= 0) {
+        sink.hit(0, pos, emailEnd)
+        pos = emailEnd
+      } else if (m.find(pos)) {
+        var idx = 1
+        while (m.start(idx) < 0) idx += 1
+        sink.hit(idx - 1, m.start(), m.end())
+        pos = m.end()
+      } else pos = -1
+    }
+    release(m)
+    if (email != null) release(email)
+  }
 
   /** One left-to-right pass; `aliasFor(kind, matchedText)` supplies the
     * replacement. Returns the scrubbed text, or NULL when nothing matched —
@@ -124,23 +196,17 @@ object Scrub {
                aliasFor: (String, String) => String): String = {
     if (names0.isEmpty || text.length == 0) return null
     val prep = prepared(names0, triggerMask(text))
-    val names = prep.names
-    if (names.isEmpty) return null
-    val m = matcherFor(prep.pattern, text)
+    if (prep.pattern == null) return null
     var sb: java.lang.StringBuilder = null
     var last = 0
-    while (m.find()) {
+    forEachHit(prep, text, { (i, start, end) =>
       if (sb == null) sb = new java.lang.StringBuilder(text.length + 16)
-      var idx = 1
-      while (m.group(idx) == null) idx += 1
-      sb.append(text, last, m.start())
-      sb.append(aliasFor(kindOf(names(idx - 1)), m.group()))
-      last = m.end()
-    }
-    val out = if (sb == null) null
+      sb.append(text, last, start)
+      sb.append(aliasFor(prep.kinds(i), text.subSequence(start, end).toString))
+      last = end
+    })
+    if (sb == null) null
     else { sb.append(text, last, text.length); sb.toString }
-    release(m)
-    out
   }
 
   /** String-total [[scrubRaw]]: unchanged input returns the input itself. */
@@ -282,16 +348,11 @@ object Scrub {
   def unionHits(text: CharSequence, names0: Seq[String]): Vector[Hit] = {
     if (names0.isEmpty || text.length == 0) return Vector.empty
     val prep = prepared(names0, triggerMask(text))
-    val names = prep.names
-    if (names.isEmpty) return Vector.empty
-    val m = matcherFor(prep.pattern, text)
+    if (prep.pattern == null) return Vector.empty
     val out = Vector.newBuilder[Hit]
-    while (m.find()) {
-      var idx = 1
-      while (m.group(idx) == null) idx += 1
-      out += Hit(kindOf(names(idx - 1)), m.group(), m.start(), m.end(), 1.0, "regex")
-    }
-    release(m)
+    forEachHit(prep, text, { (i, start, end) =>
+      out += Hit(prep.kinds(i), text.subSequence(start, end).toString, start, end, 1.0, "regex")
+    })
     out.result()
   }
 

@@ -26,7 +26,8 @@ import org.apache.spark.sql.SparkSession
   */
 object ClusterBench {
   def main(args: Array[String]): Unit = {
-    val pagesPath = args.headOption.getOrElse("/root/repo/target/bench_pages")
+    // default: the corpus graft.Bench writes under the working directory
+    val pagesPath = args.headOption.getOrElse(new java.io.File("target/bench_pages").getAbsolutePath)
     val nDocs = args.lift(1).map(_.toLong).getOrElse(300000L)
     val runs = args.lift(2).map(_.toInt).getOrElse(6)
     val s = SparkSession.builder()

@@ -82,6 +82,35 @@ object CorePropsSpec extends Properties("core") {
         (kind != "amount" || !orig.startsWith("JPY") || a1.startsWith("JPY"))
     }
 
+  // ---- linear union scan == the unguarded reference union -----------------
+
+  /** Glued tokens skewed to email, digit and JP alphabets, so local-part runs
+    * touch `@`, digit-pattern matches end inside runs and scans resume
+    * mid-run. Short enough for the quadratic reference. */
+  private val scanText: Gen[String] =
+    Gen.choose(1, 14).flatMap(k => Gen.listOfN(k, Gen.frequency(
+      6 -> Gen.oneOf("@", ".", "-", "_", "+", "%", ",", " ", "\n", "〒", "¥", "JPY"),
+      5 -> Gen.stringOfN(3, Gen.oneOf("ab1x.-_Z9".toSeq)).map(_ + "@"),
+      4 -> Gen.choose(1, 8).flatMap(Gen.stringOfN(_, Gen.alphaNumChar)),
+      4 -> Gen.choose(1, 8).flatMap(Gen.stringOfN(_, Gen.numChar)),
+      4 -> Gen.oneOf("x@ab.co", "b.cox", "03-1234-5678", "+81-3-1234-567",
+        "1234567", "123-4567", "1,234", "ACC-12345", "USR-9999", ".jp", "@c.com"),
+      3 -> Gen.choose(1, 5).flatMap(Gen.stringOfN(_, Gen.oneOf(
+        Gen.choose('一', '龠'), Gen.choose('ぁ', 'ゔ'), Gen.choose('ァ', 'ヶ')))),
+      1 -> Gen.oneOf("東京都", "新宿区", "さん", "様", "　")
+    )).map(_.mkString))
+
+  property("union scan reproduces the unguarded union find() loop") =
+    forAll(Gen.listOfN(25, scanText)) { texts =>
+      texts.forall { t =>
+        UnguardedUnion.orders.forall(o =>
+          UnguardedUnion.engineSpans(t, o) == UnguardedUnion.spans(t, o)) &&
+          Detect.classifyByRegex(t).filter(_.kind == "email")
+            .map(h => ("email", h.start, h.end)) ==
+            UnguardedUnion.spans(t, Vector("email"))
+      }
+    }
+
   // ---- dedup math invariants ----------------------------------------------
 
   property("minhash signature: fixed length, self-similarity 1") =

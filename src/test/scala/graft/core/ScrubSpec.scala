@@ -87,19 +87,41 @@ class ScrubSpec extends AnyFunSuite {
       "mixed a@b.cc 03-1234-5678 山田太郎さん 〒123-4567 ¥1,234 ACC-12345",
       "", "@", "1", "　")
     texts.foreach { t =>
-      val full = Scrub.union(Scrub.FullOrder).matcher(t)
       val sb = new java.lang.StringBuilder
       var last = 0
-      while (full.find()) {
-        var idx = 1
-        while (full.group(idx) == null) idx += 1
-        sb.append(t, last, full.start())
-          .append("<" + Scrub.kindOf(Scrub.FullOrder(idx - 1)).toUpperCase + ">")
-        last = full.end()
+      UnguardedUnion.spans(t, Scrub.FullOrder).foreach { case (name, start, end) =>
+        sb.append(t, last, start).append("<" + Scrub.kindOf(name).toUpperCase + ">")
+        last = end
       }
       sb.append(t.substring(last))
       assert(Scrub.scrubTags(t, Scrub.FullOrder) == sb.toString, s"text=$t")
     }
+  }
+
+  test("scans resuming inside a local-part run find the unguarded union's email") {
+    val seeds = Seq("x1234567y@ab.co", "03-1234-5678abc@x.com", "a@b.cox_y@c.com",
+      "〒123-4567ab@cd.ef", "ACC-12345x@y.zz", "x1234567y@ab", "x1234567" * 5 + "@ab.co",
+      "zz 〒123-4567ab〒765-4321cd@e.fg", "1,234a@b.cc", "ACC-12345_ORD-99999@q.rs")
+    seeds.foreach { t =>
+      UnguardedUnion.orders.foreach { o =>
+        assert(UnguardedUnion.engineSpans(t, o) == UnguardedUnion.spans(t, o),
+          s"text=$t order=$o")
+      }
+    }
+    // the loop's local-part test is the regex class, char for char
+    val local = java.util.regex.Pattern.compile("[A-Za-z0-9._%+-]")
+    assert((0 to 0xFFFF).forall(c =>
+      Patterns.isEmailLocal(c.toChar) == local.matcher(c.toChar.toString).matches))
+    // the resumed email is emitted at the offset the previous match ended
+    assert(UnguardedUnion.engineSpans("〒123-4567ab@cd.ef", Scrub.FullOrder) ==
+      Vector(("postal", 0, 9), ("email", 9, 17)))
+    assert(Scrub.scrubTags("a@b.cox_y@c.com") == "<EMAIL><EMAIL>")
+    assert(Detect.classifyByRegex("a@b.cox_y@c.com").map(_.text) ==
+      Vector("a@b.cox", "_y@c.com"))
+  }
+
+  test("email must lead a scan order") {
+    intercept[IllegalArgumentException](Scrub.scrubTags("a@b.cc", Vector("phone", "email")))
   }
 
   test("megabyte documents go through every stage in bounded time") {

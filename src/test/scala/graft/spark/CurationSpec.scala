@@ -3,12 +3,27 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Composed curation path: monotone per-stage counts, exact duplicates
   * collapsed to one representative, planted benchmark leakage removed,
   * and a layout-independent curated id set. */
 class CurationSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** Latest modification time among a directory's entries. */
+  private def mtime(p: String): Long = {
+    val entries = java.nio.file.Files.list(java.nio.file.Paths.get(p))
+    try entries.iterator.asScala.map(java.nio.file.Files.getLastModifiedTime(_).toMillis).max
+    finally entries.close()
+  }
+
+  /** Runs `f` on a fresh temp dir and deletes the dir afterwards. */
+  private def withTempDir(prefix: String)(f: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try f(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 
   // DataGen pages + planted exact copies of one clean page under new urls
   private def corpus = {
@@ -97,63 +112,57 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("staged Recompute mode (the 100-TB shape) yields identical results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cur-stage").toString
-    val (cDefault, rDefault) = Curation.curate(spark, corpus)
-    val (cStaged, rStaged) = Curation.curate(spark, corpus,
-      stageDir = Some(dir))
-    val sD = cDefault.select("url").collect().map(_.getString(0)).toSet
-    val sS = cStaged.select("url").collect().map(_.getString(0)).toSet
-    assert(sD == sS, "staged survivors diverged from localCheckpoint mode")
-    assert((rDefault.input, rDefault.kept, rDefault.afterNearDup) ==
-      (rStaged.input, rStaged.kept, rStaged.afterNearDup))
-    // the staged tables exist and are re-readable (resume surface)
-    assert(spark.read.parquet(s"$dir/kept").count() == rStaged.kept)
-    assert(spark.read.parquet(s"$dir/deduped").count() == rStaged.afterNearDup)
-    // stageResume: a re-run reuses the committed stages (files untouched)
-    // and still returns identical results; default mode rewrites them
-    def mtime(p: String) =
-      java.nio.file.Files.list(java.nio.file.Paths.get(p)).toArray
-        .map(_.asInstanceOf[java.nio.file.Path])
-        .map(java.nio.file.Files.getLastModifiedTime(_).toMillis).max
-    val t0 = mtime(s"$dir/kept")
-    val (cResumed, rResumed) = Curation.curate(spark, corpus,
-      stageDir = Some(dir), stageResume = true)
-    assert(mtime(s"$dir/kept") == t0, "resume rewrote a committed stage")
-    assert(cResumed.select("url").collect().map(_.getString(0)).toSet == sS)
-    assert(rResumed.kept == rStaged.kept)
-    val (_, rRewrit) = Curation.curate(spark, corpus, stageDir = Some(dir))
-    assert(mtime(s"$dir/kept") != t0, "default staged mode must rewrite")
-    assert(rRewrit.kept == rStaged.kept)
+    withTempDir("graft-cur-stage") { dir =>
+      val (cDefault, rDefault) = Curation.curate(spark, corpus)
+      val (cStaged, rStaged) = Curation.curate(spark, corpus,
+        stageDir = Some(dir))
+      val sD = cDefault.select("url").collect().map(_.getString(0)).toSet
+      val sS = cStaged.select("url").collect().map(_.getString(0)).toSet
+      assert(sD == sS, "staged survivors diverged from localCheckpoint mode")
+      assert((rDefault.input, rDefault.kept, rDefault.afterNearDup) ==
+        (rStaged.input, rStaged.kept, rStaged.afterNearDup))
+      // the staged tables exist and are re-readable (resume surface)
+      assert(spark.read.parquet(s"$dir/kept").count() == rStaged.kept)
+      assert(spark.read.parquet(s"$dir/deduped").count() == rStaged.afterNearDup)
+      // stageResume: a re-run reuses the committed stages (files untouched)
+      // and still returns identical results; default mode rewrites them
+      val t0 = mtime(s"$dir/kept")
+      val (cResumed, rResumed) = Curation.curate(spark, corpus,
+        stageDir = Some(dir), stageResume = true)
+      assert(mtime(s"$dir/kept") == t0, "resume rewrote a committed stage")
+      assert(cResumed.select("url").collect().map(_.getString(0)).toSet == sS)
+      assert(rResumed.kept == rStaged.kept)
+      val (_, rRewrit) = Curation.curate(spark, corpus, stageDir = Some(dir))
+      assert(mtime(s"$dir/kept") != t0, "default staged mode must rewrite")
+      assert(rRewrit.kept == rStaged.kept)
+    }
   }
 
   test("crash-mid-stage resume: the stage missing its _SUCCESS is rewritten, " +
     "committed stages are not recomputed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cur-crash").toString
-    val (cFull, rFull) = Curation.curate(spark, corpus, stageDir = Some(dir))
-    val sFull = cFull.select("url").collect().map(_.getString(0)).toSet
-    def mtime(p: String) =
-      java.nio.file.Files.list(java.nio.file.Paths.get(p)).toArray
-        .map(_.asInstanceOf[java.nio.file.Path])
-        .map(java.nio.file.Files.getLastModifiedTime(_).toMillis).max
-    val tKept = mtime(s"$dir/kept")
-    val tDedup = mtime(s"$dir/deduped")
-    // simulate a crash between stages: the LATER stage lost its commit
-    // marker (a half-written victim has no _SUCCESS), the earlier one
-    // committed cleanly
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(s"$dir/deduped/_SUCCESS"))
-    val (cRes, rRes) = Curation.curate(spark, corpus,
-      stageDir = Some(dir), stageResume = true)
-    assert(mtime(s"$dir/kept") == tKept,
-      "resume recomputed an already-committed stage")
-    assert(mtime(s"$dir/deduped") != tDedup,
-      "the crashed (marker-less) stage must be rewritten")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/deduped/_SUCCESS")),
-      "the rewritten stage must be committed")
-    assert(cRes.select("url").collect().map(_.getString(0)).toSet == sFull,
-      "post-crash resume changed the survivor set")
-    assert((rRes.input, rRes.kept, rRes.afterNearDup) ==
-      (rFull.input, rFull.kept, rFull.afterNearDup))
+    withTempDir("graft-cur-crash") { dir =>
+      val (cFull, rFull) = Curation.curate(spark, corpus, stageDir = Some(dir))
+      val sFull = cFull.select("url").collect().map(_.getString(0)).toSet
+      val tKept = mtime(s"$dir/kept")
+      val tDedup = mtime(s"$dir/deduped")
+      // simulate a crash between stages: the LATER stage lost its commit
+      // marker (a half-written victim has no _SUCCESS), the earlier one
+      // committed cleanly
+      java.nio.file.Files.delete(
+        java.nio.file.Paths.get(s"$dir/deduped/_SUCCESS"))
+      val (cRes, rRes) = Curation.curate(spark, corpus,
+        stageDir = Some(dir), stageResume = true)
+      assert(mtime(s"$dir/kept") == tKept,
+        "resume recomputed an already-committed stage")
+      assert(mtime(s"$dir/deduped") != tDedup,
+        "the crashed (marker-less) stage must be rewritten")
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$dir/deduped/_SUCCESS")),
+        "the rewritten stage must be committed")
+      assert(cRes.select("url").collect().map(_.getString(0)).toSet == sFull,
+        "post-crash resume changed the survivor set")
+      assert((rRes.input, rRes.kept, rRes.afterNearDup) ==
+        (rFull.input, rFull.kept, rFull.afterNearDup))
+    }
   }
 }
