@@ -39,6 +39,17 @@ import java.util.regex.Pattern
   * [[Scrub]], which tries the unguarded [[EmailBody]] once per run; the two
   * together keep CPython's leftmost-first result exactly.
   *
+  * Each pattern carries a START CLASS in [[byName]]: a predicate over one
+  * UTF-16 unit that holds for every unit a match of the pattern can begin
+  * with (the first char of a match, read under `UNICODE_CHARACTER_CLASS`).
+  * [[Scrub]]'s scan tries a pattern only at offsets whose unit is in its
+  * class, so a class must be a SUPERSET of the true first chars: a pattern
+  * edit that admits a new first char must widen its class too, or the
+  * scrub silently misses matches (ScrubSpec's start-class soundness test
+  * fails on such an edit). A class need not be tight; a wider one only
+  * costs regex attempts. Surrogate units need no class: the scan tries
+  * every pattern there.
+  *
   * `UNICODE_CHARACTER_CLASS` pins `\d`/`\s`/`\b` to Python 3 `re` semantics
   * (full-width digits, ideographic space, Unicode word boundaries).
   * Parity is enforced by golden vectors generated from CPython
@@ -59,6 +70,16 @@ object Patterns {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
       c == '.' || c == '_' || c == '%' || c == '+' || c == '-'
 
+  /** `\d` under `UNICODE_CHARACTER_CLASS`: Unicode decimal digits (Nd). */
+  private def isDigit(c: Char): Boolean = Character.isDigit(c)
+  /** `\s` under `UNICODE_CHARACTER_CLASS`: the Unicode White_Space property,
+    * as `java.util.regex` defines it. */
+  private def isSpace(c: Char): Boolean =
+    (((1 << Character.SPACE_SEPARATOR) | (1 << Character.LINE_SEPARATOR) |
+      (1 << Character.PARAGRAPH_SEPARATOR)) >> Character.getType(c) & 1) != 0 ||
+      (c >= '\t' && c <= '\r') || c == '\u0085'
+  private def isKanji(c: Char): Boolean = c >= '一' && c <= '龠'
+
   val Phone: Pattern  = p("""(?:0\d{1,4}-\d{1,4}-\d{3,4})|(?:\+81-\d{1,4}-\d{1,4}-\d{3,4})""")
   val Amount: Pattern = p("""(?:¥|JPY)?\s?\d{1,3}(?:,\d{3})+""")
   val Id: Pattern     = p("""\b(?:ACC|USR|ORD)-\d{4,6}\b""")
@@ -71,19 +92,34 @@ object Patterns {
   val NameHiragana: Pattern = p("""[ぁ-ゔ]{3,8}(?:さん|様|氏|先生|君|ちゃん)?""")
   val NameKatakana: Pattern = p("""[ァ-ヶ]{3,8}(?:さん|様|氏|先生|君|ちゃん)?""")
 
-  /** name → (pattern, hit kind). Order is the reference's evaluation order. */
-  val byName: Vector[(String, Pattern, String)] = Vector(
-    ("email", Email, "email"),
-    ("phone", Phone, "phone"),
-    ("amount", Amount, "amount"),
-    ("id", Id, "id"),
-    ("postal", Postal, "address"),
-    ("address", Address, "address"),
-    ("name_kanji", NameKanji, "name"),
-    ("name_hiragana", NameHiragana, "name"),
-    ("name_katakana", NameKatakana, "name")
+  /** name → (pattern, hit kind, start class). Order is the reference's
+    * evaluation order. Each start class is commented with the regex class
+    * it implements (see the object scaladoc). */
+  val byName: Vector[(String, Pattern, String, Char => Boolean)] = Vector(
+    // [A-Za-z0-9._%+-]
+    ("email", Email, "email", isEmailLocal),
+    // [0+]
+    ("phone", Phone, "phone", c => c == '0' || c == '+'),
+    // [¥J\s\d]
+    ("amount", Amount, "amount", c => c == '¥' || c == 'J' || isSpace(c) || isDigit(c)),
+    // [AUO]; \b is zero-width
+    ("id", Id, "id", c => c == 'A' || c == 'U' || c == 'O'),
+    // [〒\d]; (?<!\d) is zero-width
+    ("postal", Postal, "address", c => c == '〒' || isDigit(c)),
+    // [一-龠]
+    ("address", Address, "address", isKanji),
+    // [一-龠]
+    ("name_kanji", NameKanji, "name", isKanji),
+    // [ぁ-ゔ]
+    ("name_hiragana", NameHiragana, "name", c => c >= 'ぁ' && c <= 'ゔ'),
+    // [ァ-ヶ]
+    ("name_katakana", NameKatakana, "name", c => c >= 'ァ' && c <= 'ヶ')
   )
 
   def pattern(name: String): Pattern =
-    byName.collectFirst { case (`name`, pat, _) => pat }.get
+    byName.collectFirst { case (`name`, pat, _, _) => pat }.get
+
+  /** Start class of the named pattern. */
+  def startClass(name: String): Char => Boolean =
+    byName.collectFirst { case (`name`, _, _, st) => st }.get
 }

@@ -31,6 +31,19 @@ import scala.collection.mutable
   * `(?:(?<![A-Za-z0-9._%+-])|\G)`, stays quadratic: `\G` re-reads the rest of
   * the run after every digit-pattern match inside it.
   *
+  * The loop does not call `find()` on the whole union: Java's `find` has no
+  * first-char filter for an alternation and would try every alternative at
+  * every offset. Instead each [[Prepared]] scan holds a start table, one
+  * bitmask per UTF-16 unit of the patterns whose start class
+  * ([[Patterns.byName]]) contains that unit, and the loop runs a regex only
+  * at offsets with a non-zero mask: the sub-union of just the masked
+  * patterns, anchored there (`region` + `lookingAt`) with transparent
+  * bounds, so lookbehinds and `\b` still see the text before the offset.
+  * Surrogate units dispatch to every pattern (`\d`/`\s` match
+  * supplementary code points). The result is the union's: a pattern
+  * outside the mask cannot match at that offset, which holds only while
+  * every start class is a superset of its pattern's first chars.
+  *
   * Three alias modes:
   *  - [[Scrub.scrubTags]]   — fixed `<KIND>` tokens (oracle-friendly);
   *  - [[Scrub.scrubDict]]   — north-star `<PERSON_1>`-style numbered aliases
@@ -52,33 +65,13 @@ object Scrub {
   /** Map pattern name → alias kind (postal hits alias as address; the three
     * name patterns alias as name — matching the NER hit types). */
   def kindOf(patternName: String): String =
-    Patterns.byName.collectFirst { case (`patternName`, _, k) => k }.get
+    Patterns.byName.collectFirst { case (`patternName`, _, k, _) => k }.get
 
-  /** Compiled union for a pattern-name list. Cached: the set of distinct
-    * policy combinations is tiny and executors reuse them across rows. */
-  private val unionCache = new java.util.concurrent.ConcurrentHashMap[Seq[String], Pattern]()
-  private def union(names: Seq[String]): Pattern =
-    unionCache.computeIfAbsent(names, ns =>
-      Pattern.compile(
-        ns.map(n => "(" + Patterns.pattern(n).pattern + ")").mkString("|"),
-        Pattern.UNICODE_CHARACTER_CLASS))
-
-  /** Thread-confined Matcher reuse: `Pattern.matcher` allocates per call
-    * (matcher + group arrays); at 32 threads × millions of rows that is a
-    * measurable slice of allocation bandwidth. `reset(text)` reuses the
+  /** Per-thread matcher reuse for [[Patterns.EmailBody]]: `Pattern.matcher`
+    * allocates per call (matcher + group arrays), and `reset(text)` reuses the
     * internal arrays. Matchers are NOT thread-safe — hence per-thread. */
-  private val matcherCache =
-    ThreadLocal.withInitial[java.util.HashMap[Pattern, java.util.regex.Matcher]](
-      () => new java.util.HashMap())
-  private def matcherFor(p: Pattern, text: CharSequence): java.util.regex.Matcher = {
-    val m = matcherCache.get().computeIfAbsent(p, pp => pp.matcher(""))
-    m.reset(text)
-    m
-  }
-  /** Drop the matcher's document reference once scanning finishes — a
-    * cached matcher would otherwise pin the last-scanned (possibly
-    * MB-sized) text per (thread, pattern) indefinitely. */
-  private def release(m: java.util.regex.Matcher): Unit = m.reset("")
+  private val emailBody =
+    ThreadLocal.withInitial[java.util.regex.Matcher](() => Patterns.EmailBody.matcher(""))
 
   /** Trigger classes per pattern: a pattern cannot match unless the text
     * contains at least one of its trigger characters, so one cheap char scan
@@ -93,7 +86,9 @@ object Scrub {
   // so postal stays digit-triggered
   private def isJpTrigger(c: Char): Boolean = c >= '　'
 
-  /** Trigger bitmask of a text: bit0 '@', bit1 digit, bit2 CJK/kana. */
+  /** Trigger bitmask of a text: bit0 '@', bit1 digit, bit2 CJK/kana.
+    * `\d` also matches supplementary digits (e.g. U+1D7CF), so a high
+    * surrogate sets the digit bit when its code point is a digit. */
   private[core] def triggerMask(text: CharSequence): Int = {
     var mask = 0
     var i = 0
@@ -102,7 +97,11 @@ object Scrub {
       val c = text.charAt(i)
       if (c == '@') mask |= 1
       else if (Character.isDigit(c)) mask |= 2
-      else if (isJpTrigger(c)) mask |= 4
+      else if (isJpTrigger(c)) {
+        mask |= 4
+        if (Character.isHighSurrogate(c) && Character.isDigit(Character.codePointAt(text, i)))
+          mask |= 2
+      }
       i += 1
     }
     mask
@@ -115,18 +114,109 @@ object Scrub {
       else (mask & 4) != 0
     }
 
-  /** Per-(names, mask) prepared scan: the filtered pattern list and its
-    * compiled union, built once per combination — the per-ROW work is one
-    * cache lookup + array index, no collection allocation (at millions of
-    * rows per executor the old per-row `names.filter` was real garbage). */
-  private[core] final class Prepared(val names: Seq[String], val pattern: Pattern) {
-    /** Hit kind of union group i + 1. */
+  /** The prepared scan of one pattern list: its hit kinds, its start table
+    * and the compiled sub-unions [[forEachHit]] dispatches to. Built once
+    * per distinct list and immutable after — the per-ROW work is one cache
+    * lookup + array index, no collection allocation. */
+  private[core] final class Prepared(val names: Seq[String]) {
+    /** Hit kind of pattern i. */
     val kinds: Array[String] = names.map(kindOf).toArray
     /** Email is the first alternative: [[forEachHit]]'s resume rule applies. */
     val emailFirst: Boolean = names.headOption.contains("email")
+    private val all = (1 << names.size) - 1
+
+    /** Start table: bit i of `starts(c)` is set iff pattern i can start at
+      * UTF-16 unit c (its start class, [[Patterns.byName]]). Surrogates get
+      * every bit: `\d`/`\s` read the code point at a high surrogate, and the
+      * union's `find()` tries low-surrogate offsets too. */
+    private[core] val starts: Array[Short] = {
+      val classes = names.map(Patterns.startClass).toArray
+      Array.tabulate(65536) { u =>
+        val c = u.toChar
+        if (Character.isSurrogate(c)) all.toShort
+        else {
+          var m = 0
+          var i = 0
+          while (i < classes.length) { if (classes(i)(c)) m |= 1 << i; i += 1 }
+          m.toShort
+        }
+      }
+    }
+
+    /** Sub-union per reachable mask — every value of [[starts]] and, with
+      * email, its email-less variant: the masked patterns joined as
+      * `(p1)|(p2)|...` in list order, so leftmost-first order is kept. */
+    private val subs = new Array[Pattern](all + 1)
+    /** Group g + 1 of `subs(mask)` ↔ pattern index `subIndex(mask)(g)`. */
+    private val subIndex = new Array[Array[Int]](all + 1)
+    locally {
+      val masks = starts.iterator.map(_.toInt)
+        .flatMap(m => if (emailFirst) Iterator(m, m & ~1) else Iterator(m)).toSet - 0
+      masks.foreach { m =>
+        val idx = names.indices.filter(i => (m & (1 << i)) != 0).toArray
+        subIndex(m) = idx
+        subs(m) = Pattern.compile(
+          idx.map(i => "(" + Patterns.pattern(names(i)).pattern + ")").mkString("|"),
+          Pattern.UNICODE_CHARACTER_CLASS)
+      }
+    }
+
+    /** This thread's matchers of the sub-unions. */
+    private val scans = ThreadLocal.withInitial[Scan](() => new Scan(subs))
+
+    private[Scrub] def scan(text: CharSequence): Scan = scans.get().begin(text)
+    private[Scrub] def patternIndex(mask: Int, group: Int): Int = subIndex(mask)(group - 1)
   }
+
+  /** One thread's matchers of a [[Prepared]]'s sub-unions (`subs`, by
+    * mask), reused across documents. `matcher(mask)` binds a matcher to the current text on its
+    * first use in a scan; `release` unbinds them again, so a cached matcher
+    * does not pin the last-scanned (possibly MB-sized) text. `begin`
+    * releases too, so a scan cut short by an exception leaves no matcher
+    * bound to a stale text. */
+  private final class Scan(subs: Array[Pattern]) {
+    private val ms = new Array[java.util.regex.Matcher](subs.length)
+    private val bound = new Array[Boolean](subs.length)
+    private val used = new Array[Int](subs.length)
+    private var nUsed = 0
+    private var text: CharSequence = ""
+
+    def begin(t: CharSequence): Scan = { release(); text = t; this }
+
+    /** The sub-union matcher for `mask`, on the text with transparent
+      * bounds: lookbehinds and `\b` see the text before a region start. */
+    def matcher(mask: Int): java.util.regex.Matcher = {
+      var m = ms(mask)
+      if (m == null) {
+        m = subs(mask).matcher("")
+        m.useTransparentBounds(true).useAnchoringBounds(false)
+        ms(mask) = m
+      }
+      if (!bound(mask)) {
+        m.reset(text)
+        bound(mask) = true
+        used(nUsed) = mask
+        nUsed += 1
+      }
+      m
+    }
+
+    def release(): Unit = {
+      while (nUsed > 0) {
+        nUsed -= 1
+        ms(used(nUsed)).reset("")
+        bound(used(nUsed)) = false
+      }
+      text = ""
+    }
+  }
+
+  private val preparedByNames =
+    new java.util.concurrent.ConcurrentHashMap[Seq[String], Prepared]()
   private val preparedCache =
     new java.util.concurrent.ConcurrentHashMap[Seq[String], Array[Prepared]]()
+  /** The prepared scan of `names0` minus the patterns `mask` (a
+    * [[triggerMask]]) prunes; lists with equal filtered names share one. */
   private[core] def prepared(names0: Seq[String], mask: Int): Prepared =
     preparedCache.computeIfAbsent(names0, { ns =>
       // the resume rule emits email where the unguarded union would try it
@@ -134,10 +224,8 @@ object Scrub {
       // ReferenceOrder, FullOrder and every policy filter of them)
       require(!ns.contains("email") || ns.head == "email",
         s"email must be the first pattern of a scan order: $ns")
-      Array.tabulate(8) { m =>
-        val f = filterByMask(ns, m)
-        new Prepared(f, if (f.isEmpty) null else union(f))
-      }
+      Array.tabulate(8)(m =>
+        preparedByNames.computeIfAbsent(filterByMask(ns, m), f => new Prepared(f)))
     })(mask)
 
   /** Drop patterns whose trigger char never occurs. */
@@ -148,24 +236,40 @@ object Scrub {
     * matching pattern in `prep.names` (and its hit kind in `prep.kinds`). */
   private[core] trait HitSink { def hit(i: Int, start: Int, end: Int): Unit }
 
-  /** The union scan loop: `sink` gets every match of the unguarded union
-    * `prep.pattern` stands for, as (pattern index, start, end), leftmost-first.
-    * Linear in the text: the guarded email is tried once per local-part run,
-    * and a resume inside a run tries [[Patterns.EmailBody]] at most once per
-    * run (see the object scaladoc). */
+  /** The union scan loop: `sink` gets every match of the unguarded union of
+    * `prep.names`, as (pattern index, start, end), leftmost-first.
+    *
+    * First-char dispatch: from the scan position the loop walks the text
+    * and looks each unit up in `prep.starts`; offsets whose mask is 0 are
+    * skipped without running a regex. At a candidate offset it runs the
+    * sub-union of only the masked patterns, anchored there (`region` +
+    * `lookingAt`, transparent bounds). This is the union's own result:
+    * leftmost-first returns the first alternative that matches at the
+    * leftmost offset where any does, and a pattern outside the mask cannot
+    * match at that offset. The email bit is dropped where the previous char
+    * is a local-part char, where the run-start guard fails anyway, and at a
+    * run start whose run is not followed by `@` ([[runEndsAtSign]]), where
+    * the local part cannot end at an `@`.
+    *
+    * Linear in the text: [[runEndsAtSign]] reads each local-part run once,
+    * the guarded email is tried at most once per run, and a resume inside a
+    * run tries [[Patterns.EmailBody]] at most once per run (see the object
+    * scaladoc). */
   private[core] def forEachHit(prep: Prepared, text: CharSequence, sink: HitSink): Unit = {
-    if (prep.pattern == null) return
-    val m = matcherFor(prep.pattern, text)
+    if (prep.names.isEmpty) return
     val n = text.length
+    val scan = prep.scan(text)
+    val starts = prep.starts
+    val emailBit = if (prep.emailFirst) 1 else 0
     var email: java.util.regex.Matcher = null
     var failedRunEnd = 0 // resumes before this offset sit in a run email fails
     var pos = 0
-    while (pos >= 0) {
-      val resumeMidRun = prep.emailFirst && pos > 0 && pos < n && pos >= failedRunEnd &&
+    while (pos < n) {
+      val resumeMidRun = emailBit != 0 && pos > 0 && pos >= failedRunEnd &&
         Patterns.isEmailLocal(text.charAt(pos - 1)) && Patterns.isEmailLocal(text.charAt(pos))
       var emailEnd = -1
       if (resumeMidRun) {
-        if (email == null) email = matcherFor(Patterns.EmailBody, text)
+        if (email == null) { email = emailBody.get(); email.reset(text) }
         email.region(pos, n)
         if (email.lookingAt()) emailEnd = email.end()
         else {
@@ -177,15 +281,43 @@ object Scrub {
       if (emailEnd >= 0) {
         sink.hit(0, pos, emailEnd)
         pos = emailEnd
-      } else if (m.find(pos)) {
-        var idx = 1
-        while (m.start(idx) < 0) idx += 1
-        sink.hit(idx - 1, m.start(), m.end())
-        pos = m.end()
-      } else pos = -1
+      } else {
+        var i = pos
+        var prev = if (pos > 0) text.charAt(pos - 1) else ' '
+        var found = false
+        while (!found && i < n) {
+          val c = text.charAt(i)
+          var mask = starts(c).toInt
+          if ((mask & emailBit) != 0 &&
+              (Patterns.isEmailLocal(prev) || !runEndsAtSign(text, i, n))) mask &= ~1
+          if (mask != 0) {
+            val m = scan.matcher(mask)
+            m.region(i, n)
+            if (m.lookingAt()) {
+              var g = 1
+              while (m.start(g) < 0) g += 1
+              sink.hit(prep.patternIndex(mask, g), i, m.end())
+              pos = m.end()
+              found = true
+            }
+          }
+          prev = c
+          i += 1
+        }
+        if (!found) pos = n
+      }
     }
-    release(m)
-    if (email != null) release(email)
+    scan.release()
+    if (email != null) email.reset("")
+  }
+
+  /** Whether the local-part run starting at `i` is non-empty and followed
+    * by an `@`: the guarded email can match at a run start only then, since
+    * `@` is not a local-part char. */
+  private def runEndsAtSign(text: CharSequence, i: Int, n: Int): Boolean = {
+    var j = i
+    while (j < n && Patterns.isEmailLocal(text.charAt(j))) j += 1
+    j > i && j < n && text.charAt(j) == '@'
   }
 
   /** One left-to-right pass; `aliasFor(kind, matchedText)` supplies the
@@ -196,7 +328,7 @@ object Scrub {
                aliasFor: (String, String) => String): String = {
     if (names0.isEmpty || text.length == 0) return null
     val prep = prepared(names0, triggerMask(text))
-    if (prep.pattern == null) return null
+    if (prep.names.isEmpty) return null
     var sb: java.lang.StringBuilder = null
     var last = 0
     forEachHit(prep, text, { (i, start, end) =>
@@ -348,7 +480,7 @@ object Scrub {
   def unionHits(text: CharSequence, names0: Seq[String]): Vector[Hit] = {
     if (names0.isEmpty || text.length == 0) return Vector.empty
     val prep = prepared(names0, triggerMask(text))
-    if (prep.pattern == null) return Vector.empty
+    if (prep.names.isEmpty) return Vector.empty
     val out = Vector.newBuilder[Hit]
     forEachHit(prep, text, { (i, start, end) =>
       out += Hit(prep.kinds(i), text.subSequence(start, end).toString, start, end, 1.0, "regex")

@@ -334,10 +334,14 @@ object GraftExtensions {
           ner = args.length > 5 && litStr(5, "ner").toBoolean)
       }))
 
-  /** Register on an already-built session (tests, notebooks). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Register on an already-built session (tests, notebooks). Idempotent:
+    * registers only the names the session lacks, so calling it per job
+    * (as `Pipeline.run` does) leaves an installed session untouched. */
+  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     registrations.foreach { case (name, i, builder) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(FunctionIdentifier(name), i, builder)
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id)) registry.registerFunction(id, i, builder)
     }
+  }
 }

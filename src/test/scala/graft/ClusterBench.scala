@@ -21,18 +21,19 @@ import org.apache.spark.sql.SparkSession
   *     [pagesParquet] [nDocs] [runs]
   *
   * Session confs mirror Bench.session (4m splits so every executor core
-  * sees many task waves; AQE; UTC). Reported numbers are NOT the driver
-  * protocol — they contextualize the local[N] scaling table in BENCH.md.
+  * sees many task waves; AQE; UTC); shuffle partitions default to the
+  * master's default parallelism. The docs/s rates divide by the row count
+  * of `pagesParquet`, counted before the timed runs; an `nDocs` argument
+  * that disagrees with it only prints a warning. Reported numbers are NOT
+  * `graft.Bench` figures — they contextualize the local[N] scaling table
+  * in BENCH.md.
   */
 object ClusterBench {
   def main(args: Array[String]): Unit = {
     // default: the corpus graft.Bench writes under the working directory
     val pagesPath = args.headOption.getOrElse(new java.io.File("target/bench_pages").getAbsolutePath)
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(300000L)
     val runs = args.lift(2).map(_.toInt).getOrElse(6)
     val s = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes",
@@ -41,7 +42,16 @@ object ClusterBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    println(s"CLUSTERBENCH master=${s.sparkContext.master}")
+    // one shuffle partition per task slot unless spark-submit set it
+    if (!s.sparkContext.getConf.contains("spark.sql.shuffle.partitions"))
+      s.conf.set("spark.sql.shuffle.partitions", s.sparkContext.defaultParallelism.toLong)
+    println(s"CLUSTERBENCH master=${s.sparkContext.master} " +
+      s"shufflePartitions=${s.conf.get("spark.sql.shuffle.partitions")}")
+    // rates divide by the corpus's real row count, counted before any timing
+    val nDocs = s.read.parquet(pagesPath).count()
+    args.lift(1).map(_.toLong).filter(_ != nDocs).foreach { given =>
+      println(s"CLUSTERBENCH WARN nDocs argument $given != $nDocs rows in $pagesPath; using $nDocs")
+    }
     val conf = Pipeline.Conf(
       security = Pipeline.SecurityLevel.parse(
         sys.env.getOrElse("SPARK_GRAFT_SECURITY", "maximum")))

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{array_sort, col, map_entries, struct, to_json}
+import org.apache.spark.sql.types.MapType
 
 /** Dev-only multi-process parity check (VERDICT r5 #3): run every declared
   * query under a spark-submit-provided master — e.g.
@@ -23,7 +25,31 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
   * can be pointed at local-cluster, a standalone master, or local[N].
   */
 object ClusterCheck {
+  /** Multiset equality. exceptAll both ways is exact for every column type
+    * it supports; map-typed outputs fall back to a multiset of `to_json`
+    * rows, with each map's entries sorted (entry order is not part of a
+    * map's value) and null fields written out rather than dropped. */
+  def sameRows(l: DataFrame, r: DataFrame): Boolean =
+    try l.exceptAll(r).isEmpty && r.exceptAll(l).isEmpty
+    catch {
+      case _: AnalysisException =>
+        def m(df: DataFrame) =
+          df.select(df.schema.fields.toSeq.map { f =>
+            f.dataType match {
+              case _: MapType => array_sort(map_entries(col(f.name))).as(f.name)
+              case _ => col(f.name)
+            }
+          }: _*)
+            .select(to_json(struct(col("*")), Map("ignoreNullFields" -> "false")).as("js"))
+            .groupBy("js").count()
+        m(l).except(m(r)).isEmpty && m(r).except(m(l)).isEmpty
+    }
+
   def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println("usage: graft.ClusterCheck <sfDir> <refDir-from-local-Verify>")
+      sys.exit(2)
+    }
     val Array(sfDir, refDir) = args.take(2)
     val spark = SparkSession.builder()
       .config("spark.sql.shuffle.partitions", "8")
@@ -33,17 +59,6 @@ object ClusterCheck {
     spark.sparkContext.setLogLevel("WARN")
     println(s"CLUSTERCHECK master=${spark.sparkContext.master} " +
       s"defaultParallelism=${spark.sparkContext.defaultParallelism}")
-
-    // multiset equality; exceptAll both ways is exact for all column types
-    // it supports — fall back to a to_json multiset for map-typed outputs
-    def sameRows(l: DataFrame, r: DataFrame): Boolean =
-      try l.exceptAll(r).isEmpty && r.exceptAll(l).isEmpty
-      catch {
-        case _: AnalysisException =>
-          def m(df: DataFrame) =
-            df.selectExpr("to_json(struct(*)) AS js").groupBy("js").count()
-          m(l).except(m(r)).isEmpty && m(r).except(m(l)).isEmpty
-      }
 
     var ok, bad = 0
     val failed = scala.collection.mutable.ListBuffer.empty[String]

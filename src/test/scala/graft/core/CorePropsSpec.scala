@@ -86,7 +86,8 @@ object CorePropsSpec extends Properties("core") {
 
   /** Glued tokens skewed to email, digit and JP alphabets, so local-part runs
     * touch `@`, digit-pattern matches end inside runs and scans resume
-    * mid-run. Short enough for the quadratic reference. */
+    * mid-run; plus the chars at the edges of the start classes and
+    * surrogate pairs. Short enough for the quadratic reference. */
   private val scanText: Gen[String] =
     Gen.choose(1, 14).flatMap(k => Gen.listOfN(k, Gen.frequency(
       6 -> Gen.oneOf("@", ".", "-", "_", "+", "%", ",", " ", "\n", "〒", "¥", "JPY"),
@@ -97,7 +98,12 @@ object CorePropsSpec extends Properties("core") {
         "1234567", "123-4567", "1,234", "ACC-12345", "USR-9999", ".jp", "@c.com"),
       3 -> Gen.choose(1, 5).flatMap(Gen.stringOfN(_, Gen.oneOf(
         Gen.choose('一', '龠'), Gen.choose('ぁ', 'ゔ'), Gen.choose('ァ', 'ヶ')))),
-      1 -> Gen.oneOf("東京都", "新宿区", "さん", "様", "　")
+      1 -> Gen.oneOf("東京都", "新宿区", "さん", "様", "　"),
+      // a boundary char of each start class, a supplementary digit
+      // (U+1D7CF) and an emoji: the scan's table lookup and surrogate path
+      3 -> Gen.oneOf("\u00A0", "\u3000", "１２", "¥", "J", "〒", "+",
+        "\uD835\uDFCF", "\uD83D\uDE00"),
+      1 -> Gen.choose(1, 8).map("\uD835\uDFCF" * _)
     )).map(_.mkString))
 
   property("union scan reproduces the unguarded union find() loop") =

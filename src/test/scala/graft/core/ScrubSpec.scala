@@ -120,6 +120,61 @@ class ScrubSpec extends AnyFunSuite {
       Vector("a@b.cox", "_y@c.com"))
   }
 
+  test("a postal code of supplementary digits is scrubbed") {
+    // U+1D7CF..U+1D7D5: \d matches them, but only as surrogate pairs
+    val t = "code \uD835\uDFCF\uD835\uDFD0\uD835\uDFD1\uD835\uDFD2" +
+      "\uD835\uDFD3\uD835\uDFD4\uD835\uDFD5 here"
+    assert((Scrub.triggerMask(t) & 2) != 0)
+    assert(UnguardedUnion.spans(t, Scrub.FullOrder) == Vector(("postal", 5, 19)))
+    assert(UnguardedUnion.engineSpans(t, Scrub.FullOrder) == Vector(("postal", 5, 19)))
+    assert(Detect.ruleNer(t).map(h => (h.kind, h.start, h.end)) == Vector(("address", 5, 19)))
+    assert(Scrub.scrubTags(t, Scrub.FullOrder) == "code <ADDRESS> here")
+  }
+
+  test("start classes are their documented regex classes") {
+    val documented = Map(
+      "email" -> "[A-Za-z0-9._%+-]", "phone" -> "[0+]", "amount" -> "[¥J\\s\\d]",
+      "id" -> "[AUO]", "postal" -> "[〒\\d]", "address" -> "[一-龠]",
+      "name_kanji" -> "[一-龠]", "name_hiragana" -> "[ぁ-ゔ]", "name_katakana" -> "[ァ-ヶ]")
+    assert(documented.keySet == Patterns.byName.map(_._1).toSet)
+    documented.foreach { case (name, cls) =>
+      val m = java.util.regex.Pattern.compile(cls, java.util.regex.Pattern.UNICODE_CHARACTER_CLASS)
+        .matcher("")
+      val start = Patterns.startClass(name)
+      val wrong = (0 to 0xFFFF).map(_.toChar)
+        .filter(c => start(c) != m.reset(c.toString).matches)
+      assert(wrong.isEmpty, s"$name: ${wrong.take(5).map(c => f"U+${c.toInt}%04X")}")
+    }
+  }
+
+  test("no pattern matches at a unit outside its start class") {
+    // soundness of the scan's first-char dispatch: a pattern is tried only
+    // where its bit is set in the start table, so it must not match anywhere
+    // else. Each unit is tried after a neutral char (lookbehinds and \b see
+    // it through transparent bounds) and before continuations that complete
+    // every pattern from its second char on.
+    val continuations = Seq("81-3-1234-5678", "3-1234-5678", "PY 1,234", "PY1,234",
+      "CC-12345", "SR-12345", "RD-12345", ",234", "1,234", "23-4567", "234567",
+      "@ab.cd", "b@ab.cd", "京都新宿区西 新宿", "田太郎さん", "田 花子様",
+      "まだたろう", "ナカハナコ", " 1,234", "\u3000123-4567", "\u00A012,345")
+    val prep = Scrub.prepared(Scrub.FullOrder, 7)
+    assert(prep.names == Scrub.FullOrder)
+    val all = (1 << Scrub.FullOrder.size) - 1
+    assert((0xD800 to 0xDFFF).forall(u => prep.starts(u) == all),
+      "surrogates must dispatch to every pattern")
+    Scrub.FullOrder.zipWithIndex.foreach { case (name, bit) =>
+      val m = Patterns.pattern(name).matcher("")
+        .useTransparentBounds(true).useAnchoringBounds(false)
+      val hits = for {
+        u <- 0 to 0xFFFF if (prep.starts(u) & (1 << bit)) == 0
+        k <- continuations
+        t = " " + u.toChar + k
+        if m.reset(t).region(1, t.length).lookingAt()
+      } yield t
+      assert(hits.isEmpty, s"$name starts outside its start class: ${hits.take(3)}")
+    }
+  }
+
   test("email must lead a scan order") {
     intercept[IllegalArgumentException](Scrub.scrubTags("a@b.cc", Vector("phone", "email")))
   }

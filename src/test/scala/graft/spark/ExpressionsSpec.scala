@@ -128,6 +128,28 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("install registers only the functions a session lacks") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
+    // a fresh session state: the shared session's registry stays untouched
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    // a function the session already has under a graft name stays as it is
+    val mine = new ExpressionInfo("test", "fingerprint64")
+    registry.registerFunction(FunctionIdentifier("fingerprint64"), mine,
+      (_: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => Literal(7L))
+    GraftExtensions.install(s)
+    GraftExtensions.install(s)
+    assert(registry.lookupFunction(FunctionIdentifier("fingerprint64")).contains(mine))
+    assert(s.sql("SELECT fingerprint64('x')").head().getLong(0) == 7L)
+    // the rest are registered once and still resolve after the second install
+    GraftExtensions.registrations.foreach { case (name, _, _) =>
+      assert(registry.functionExists(FunctionIdentifier(name)), name)
+    }
+    val r = s.sql("SELECT page_stages('mail a@b.cc now', 'tags', '', '').scrubbed")
+    assert(r.head().getString(0) == "mail <EMAIL> now")
+  }
+
   test("null handling: expression yields null on null input") {
     import spark.implicits._
     val got = Seq[(java.lang.Long, String)]((1L, null), (2L, "a@b.cc x"))
