@@ -10,11 +10,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and forced through the `noop` sink so every column is actually computed —
   * a bare `count()` would let Catalyst prune the scrub/LM work entirely.
   *
-  * Scaling evidence (north_rule: efficiency ≥ 0.8 from N to 4N executors; no
-  * real cluster in this sandbox): the identical job runs at local[8] and
-  * local[32] on the identical parquet input — a fresh SparkContext per level
-  * — and both throughputs plus efficiency = thr(4N) / (4 · thr(N)) are
-  * reported in the "scaling" field and recorded in BENCH.md.
+  * Scaling evidence (north_rule: efficiency ≥ 0.8 from N to 4N executors):
+  * the identical job runs at each level of `SPARK_GRAFT_BENCH_LEVELS`
+  * (default local[1] and local[nproc]) on the identical parquet input — a
+  * fresh JVM and SparkContext per level — and every throughput plus
+  * efficiency = thr(M) / ((M/N) · thr(N)) for each pair of consecutive
+  * levels N < M (for 2,8,32: 2→8 and 8→32) are reported in the "scaling"
+  * field.
+  *
+  * Each level's JVM gets `-Xmx$SPARK_DRIVER_MEM`, by default half of the
+  * host's memory clamped to 2–8 GiB, and a young generation of
+  * `-Xmn$SPARK_GRAFT_YOUNG`, by default half of that heap.
   */
 object Bench {
 
@@ -46,6 +52,14 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Half of the host's memory in whole GiB, clamped to 2–8 (MemTotal when
+    * the JVM sees no container limit). */
+  private def defaultHeap: String = {
+    val total = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getTotalMemorySize
+    s"${math.max(2L, math.min(8L, total / (2L << 30)))}g"
+  }
+
   /** JVM flags for level subprocesses (same add-opens as build.sbt — Spark
     * 4.x on JDK 17 needs them when SparkSession is built outside
     * spark-submit). */
@@ -60,12 +74,13 @@ object Bench {
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED")) ++ Seq(
     "-Dspark.ui.enabled=false",
     "-Dspark.sql.session.timeZone=UTC",
-    s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "24g")}",
+    s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", defaultHeap)}",
     "-XX:+UseParallelGC",
     // pre-fault the heap: at 32 threads the first pass over a lazily-mapped
-    // 16 GiB young gen stalls on page faults — measured +15-25% at local[32]
+    // young gen stalls on page faults — measured +15-25% at local[32]
     "-XX:+AlwaysPreTouch",
-    s"-Xmn${sys.env.getOrElse("SPARK_GRAFT_YOUNG", "16g")}")
+    // NewRatio=1: young = old = half the heap, whatever -Xmx is
+    sys.env.get("SPARK_GRAFT_YOUNG").fold("-XX:NewRatio=1")(y => s"-Xmn$y"))
 
   /** Child mode: run ONE level in this fresh JVM and print its result.
     * Repeats the identical job until wall time stops improving (≤3% or 6
@@ -119,8 +134,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "300000").toLong
-    val levels = sys.env.getOrElse("SPARK_GRAFT_BENCH_LEVELS", "2,8,32")
-      .split(",").map(_.trim.toInt).toSeq
+    val levels = sys.env.get("SPARK_GRAFT_BENCH_LEVELS")
+      .fold(Seq(1, Runtime.getRuntime.availableProcessors).distinct)(
+        _.split(",").map(_.trim.toInt).toSeq)
     // under the working directory (the child JVMs below inherit it)
     val pagesPath = new java.io.File("target/bench_pages").getAbsolutePath
 
@@ -160,12 +176,11 @@ object Bench {
     }
     val byLevel = scaling.toMap
     val (_, (thrMax, _, _)) = scaling.maxBy(_._2._1)
-    // one efficiency figure per N→4N pair present in the level list
-    val effPairs = scaling.map(_._1).sorted.flatMap { p =>
-      byLevel.get(p * 4).map { case (thr4, _, _) =>
-        (p, p * 4, thr4 / (4.0 * byLevel(p)._1))
-      }
-    }
+    // one efficiency figure per pair of consecutive levels N < M:
+    // thr(M) / ((M/N) · thr(N)), so 1,nproc reports 1→nproc on any host
+    val effPairs = scaling.map(_._1).sorted.distinct.sliding(2).collect {
+      case Seq(a, b) => (a, b, byLevel(b)._1 / (b.toDouble / a * byLevel(a)._1))
+    }.toSeq
 
     // per-query timings at full parallelism, forced through noop
     val s = session(levels.max)

@@ -17,8 +17,9 @@ package graft.core
 final case class LangIdModel(
     langs: Vector[String],
     // sorted packed-gram keys (16 bits/char, length tag in bits 48+) with
-    // per-lang log-prob rows laid out flat — binary-searched, zero boxing,
-    // trivially java-serializable for broadcast
+    // per-lang log-prob rows laid out flat — zero boxing, trivially
+    // java-serializable for broadcast; classify reads them through the
+    // per-JVM lookup tables below
     gramKeys: Array[Long],
     gramLogProbs: Array[Double], // gramKeys.length × langs.length, row-major
     defaultLogProb: Array[Double]
@@ -47,48 +48,108 @@ final case class LangIdModel(
     x
   }
 
-  private def lookup(key: Long): Int = {
-    var i = (mixHash(key) & idxMask).toInt
+  /** Row of the unseen-gram default in [[rows]]. */
+  private def defaultRow: Int = gramKeys.length
+
+  // gram rows with the default row appended: every gram, seen or not,
+  // adds one row of `rows`, so the summing loop has no branch on a hit/miss
+  // pattern it cannot predict (costs one copy of the log-probs per JVM)
+  @transient private lazy val rows: Array[Double] = gramLogProbs ++ defaultLogProb
+
+  /** Row of `key` in `table` (the index), or [[defaultRow]]. */
+  private def lookup(table: Array[Int], mask: Long, key: Long): Int = {
+    var i = (mixHash(key) & mask).toInt
     while (true) {
-      val r = idxTable(i)
-      if (r < 0) return -1
+      val r = table(i)
+      if (r < 0) return defaultRow
       if (gramKeys(r) == key) return r
-      i = (i + 1) & idxMask
+      i = ((i + 1) & mask).toInt
     }
-    -1
+    defaultRow
+  }
+
+  // unigram rows by char: one load instead of a hash probe. The lowest row
+  // of a key wins, as in the probe order of idxTable.
+  @transient private lazy val uniRow: Array[Int] = {
+    val table = Array.fill(65536)(defaultRow)
+    var r = gramKeys.length - 1
+    while (r >= 0) {
+      val key = gramKeys(r)
+      if ((key & ~0xFFFFL) == (1L << 48)) table((key & 0xFFFF).toInt) = r
+      r -= 1
+    }
+    table
+  }
+
+  /** Per-language sums of the rows at offsets `offs(0 until n)`, each in
+    * that order. Four languages share a pass, in four independent chains
+    * of adds held in locals; a language's sum is the same sequence of adds
+    * whichever pass computes it. */
+  private def sums(offs: Array[Int], n: Int): Array[Double] = {
+    val nl = langs.length
+    val rs = rows
+    val scores = new Array[Double](nl)
+    var b = 0
+    while (b + 4 <= nl) {
+      var s0, s1, s2, s3 = 0.0
+      var g = 0
+      while (g < n) {
+        val o = offs(g) + b
+        s0 += rs(o); s1 += rs(o + 1); s2 += rs(o + 2); s3 += rs(o + 3)
+        g += 1
+      }
+      scores(b) = s0; scores(b + 1) = s1; scores(b + 2) = s2; scores(b + 3) = s3
+      b += 4
+    }
+    while (b < nl) {
+      var s0 = 0.0
+      var g = 0
+      while (g < n) { s0 += rs(offs(g) + b); g += 1 }
+      scores(b) = s0
+      b += 1
+    }
+    scores
   }
 
   /** (bestLang, confidence in [0,1]) — confidence is the softmax weight of
-    * the winning language over the candidate set. Allocation-free per call:
-    * the normalized prefix lives in a per-thread reused buffer and only the
-    * score array (|langs| doubles) is allocated. */
+    * the winning language over the candidate set. Allocation-free per call
+    * but for the score array (|langs| doubles): the normalized prefix and
+    * its gram rows live in per-thread reused buffers.
+    *
+    * Per position the 1-, 2- and 3-gram keys are built by adding the next
+    * char to the shorter key; unigrams are looked up in a per-char row
+    * table, 2- and 3-grams in the open-address index. Each language's score
+    * sums its log-probs in a fixed order (position, then gram length 1, 2,
+    * 3; unseen grams add the default), so the result is bit-for-bit
+    * reproducible. */
   def classify(text: CharSequence): (String, Double) = {
     val nl = langs.length
-    val scores = new Array[Double](nl)
-    val t = LangId.normalize(text)
+    val scratch = LangId.scratch.get()
+    val t = scratch.chars
+    val len = LangId.normalize(text, t)
+    val offs = scratch.offs
+    val uni = uniRow
+    val table = idxTable
+    val mask = idxMask
     var n = 0
     var pos = 0
-    while (pos < t.length) {
-      var len = 1
-      while (len <= 3 && pos + len <= t.length) {
-        var key = len.toLong << 48
-        var j = 0
-        while (j < len) { key |= t.charAt(pos + j).toLong << (j * 16); j += 1 }
-        val idx = lookup(key)
-        if (idx >= 0) {
-          val off = idx * nl
-          var i = 0
-          while (i < nl) { scores(i) += gramLogProbs(off + i); i += 1 }
-        } else {
-          var i = 0
-          while (i < nl) { scores(i) += defaultLogProb(i); i += 1 }
-        }
+    while (pos < len) {
+      val c0 = t(pos)
+      offs(n) = uni(c0) * nl
+      n += 1
+      if (pos + 1 < len) {
+        val k2 = c0.toLong | (t(pos + 1).toLong << 16)
+        offs(n) = lookup(table, mask, (2L << 48) | k2) * nl
         n += 1
-        len += 1
+        if (pos + 2 < len) {
+          offs(n) = lookup(table, mask, (3L << 48) | k2 | (t(pos + 2).toLong << 32)) * nl
+          n += 1
+        }
       }
       pos += 1
     }
     if (n == 0) return ("und", 0.0)
+    val scores = sums(offs, n)
     // softmax over mean log-probs (length-normalized so confidence is
     // comparable across document lengths)
     var best = 0
@@ -108,7 +169,8 @@ object LangId {
     * String-keyed variant used at TRAIN time only; classification walks the
     * packed-Long keys directly. */
   def grams(text: String): Iterator[String] = {
-    val t = normalize(text).toString
+    val buf = scratch.get().chars
+    val t = new String(buf, 0, normalize(text, buf))
     if (t.isEmpty) Iterator.empty
     else (1 to 3).iterator.flatMap(k => t.sliding(k).filter(_.length == k))
   }
@@ -120,27 +182,35 @@ object LangId {
     key
   }
 
-  // per-thread normalize scratch: the buffer is bounded (4096-char prefix
-  // + 2 sentinels), so reuse kills the per-row StringBuilder + String pair
-  private val normScratch = ThreadLocal.withInitial[(Array[Char], CharsView)](
-    () => (new Array[Char](4098), new CharsView))
+  /** Per-thread buffers of [[LangIdModel.classify]], reused per row: the
+    * normalized prefix (4096 chars + 2 sentinels) and the row offsets of
+    * its grams (3 per char). */
+  private[core] final class Scratch {
+    val chars = new Array[Char](4098)
+    val offs = new Array[Int](3 * 4098)
+  }
 
-  private[core] def normalize(text: CharSequence): CharSequence = {
-    val (buf, view) = normScratch.get()
+  private[core] val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
+
+  /** Lowercase (`Character.toLowerCase` per char) and fold whitespace runs
+    * (`Character.isWhitespace`) to one space, with a sentinel space at each
+    * end, over a 4096-char prefix; both tests are [[CharClass]] loads.
+    * Writes the result to `buf` and returns its length. */
+  private[core] def normalize(text: CharSequence, buf: Array[Char]): Int = {
     var n = 0
     buf(n) = ' '; n += 1
     var i = 0
     var lastSpace = true
     val lim = math.min(text.length, 4096) // langid needs a prefix, not the doc
     while (i < lim) {
-      val c = Character.toLowerCase(text.charAt(i))
-      val ws = Character.isWhitespace(c)
+      val c = CharClass.toLower(text.charAt(i))
+      val ws = CharClass.isWhitespace(c)
       if (!ws) { buf(n) = c; n += 1; lastSpace = false }
       else if (!lastSpace) { buf(n) = ' '; n += 1; lastSpace = true }
       i += 1
     }
     buf(n) = ' '; n += 1
-    view.set(buf, n)
+    n
   }
 
   /** Embedded seed corpus (own prose, a few hundred chars per language). */

@@ -24,7 +24,7 @@ final class PerplexityModel private[core] (logProb: Array[Float]) extends Serial
     var n = 0
     var i = 0
     while (i < lim) {
-      val c0 = sym(text.charAt(i))
+      val c0 = CharClass.sym(text.charAt(i))
       sum += logProb((c2 * A + c1) * A + c0)
       n += 1
       c2 = c1; c1 = c0

@@ -67,9 +67,30 @@ object Quality {
 
   /** Single-scan metrics: no token/line Strings are materialized — tokens and
     * lines are identified by rolling 64-bit hashes (collision odds ~1e-13 per
-    * document; only distinct-count stats depend on them). Equivalent to the
-    * naive tokenize-then-count implementation, pinned by QualityScanSpec. */
-  def metrics(text: CharSequence): Metrics = {
+    * document; only distinct-count stats depend on them). The per-char
+    * tests (letter, CJK script, digit, whitespace, the token's lowercase and
+    * its alpha test) are [[CharClass]] table loads, equal to the
+    * `Character` calls [[metricsNaive]] makes. Words are those of the
+    * String-lowercased text, as in [[tokens]]: where that differs from the
+    * per-char lowercase (İ, Σ, supplementary capitals; [[CharClass.CaseCtx]]
+    * marks the candidates), the word stats are taken from a second scan of
+    * the lowercased String. Equivalent to the naive tokenize-then-count
+    * implementation, pinned by QualityScanSpec. */
+  def metrics(text: CharSequence): Metrics = scan(text, checkCase = true)
+
+  // a unit at which Java's String lowercase (what `tokens` and the SQL and
+  // CPython twins tokenize) can differ from the per-char lowercase of the
+  // scan: İ becomes two units, Σ depends on its context (final sigma) and
+  // a surrogate pair maps as one code point
+  private def stringLowerDiffers(text: CharSequence, i: Int): Boolean = {
+    val c = text.charAt(i)
+    !Character.isHighSurrogate(c) || {
+      val cp = Character.codePointAt(text, i)
+      Character.toLowerCase(cp) != cp
+    }
+  }
+
+  private def scan(text: CharSequence, checkCase: Boolean): Metrics = {
     val nC = text.length.toLong
     var symbols = 0L
     var letters = 0L
@@ -83,6 +104,7 @@ object Quality {
     var tokLen = 0
     var tokHash = 0xcbf29ce484222325L
     var tokHasAlpha = false
+    var caseCtx = false
     val tokSet = tokScratch.get(); tokSet.clear()
     // line state
     var nLines = 1L
@@ -91,13 +113,13 @@ object Quality {
     var i = 0
     while (i < text.length) {
       val c = text.charAt(i)
-      // char-class stats (Unicode-aware, matches the old per-char loop)
-      if (Character.isLetter(c)) {
+      // char-class stats: one table load (CharClass) answers letter, CJK
+      // script, digit and whitespace
+      val k = CharClass.of(c)
+      if ((k & CharClass.Letter) != 0) {
         letters += 1
-        val b = Character.UnicodeScript.of(c)
-        if (b == Character.UnicodeScript.HAN || b == Character.UnicodeScript.HIRAGANA ||
-          b == Character.UnicodeScript.KATAKANA || b == Character.UnicodeScript.HANGUL) cjk += 1
-      } else if (!Character.isDigit(c) && !Character.isWhitespace(c)) symbols += 1
+        if ((k & CharClass.Cjk) != 0) cjk += 1
+      } else if ((k & (CharClass.Digit | CharClass.Space)) == 0) symbols += 1
       // lines: split on '\n' exactly, empties count (split("\n", -1) semantics)
       if (c == '\n') {
         lineSet.add(lineHash)
@@ -116,10 +138,12 @@ object Quality {
           tokLen = 0; tokHash = 0xcbf29ce484222325L; tokHasAlpha = false
         }
       } else {
-        val lc = Character.toLowerCase(c)
+        if ((k & CharClass.CaseCtx) != 0 && checkCase && !caseCtx)
+          caseCtx = stringLowerDiffers(text, i)
+        val lc = CharClass.toLower(c)
         tokHash = (tokHash ^ lc) * 0x100000001b3L
         tokLen += 1
-        if (!tokHasAlpha && Character.isLetter(lc)) tokHasAlpha = true
+        if (!tokHasAlpha && CharClass.isLetter(lc)) tokHasAlpha = true
       }
       i += 1
     }
@@ -132,7 +156,7 @@ object Quality {
       if (stopwordHashes.contains(key)) stop += 1
     }
     lineSet.add(lineHash)
-    Metrics(
+    val m = Metrics(
       nChars = nC,
       nWords = nW,
       meanWordLen = if (nW == 0) 0.0 else sumLen.toDouble / nW,
@@ -143,10 +167,20 @@ object Quality {
       alphaWordRatio = if (nW == 0) 0.0 else alphaWords.toDouble / nW,
       maxWordLen = maxLen,
       cjkRatio = if (letters == 0) 0.0 else cjk.toDouble / letters)
+    if (!caseCtx) m
+    else {
+      // word stats over the String-lowercased text; per-char lowercase is
+      // idempotent, so the scan of that text lowercases nothing further
+      val w = scan(text.toString.toLowerCase(java.util.Locale.ROOT), checkCase = false)
+      m.copy(nWords = w.nWords, meanWordLen = w.meanWordLen,
+        stopwordRatio = w.stopwordRatio, dupWordFrac = w.dupWordFrac,
+        alphaWordRatio = w.alphaWordRatio, maxWordLen = w.maxWordLen)
+    }
   }
 
   /** Naive reference implementation (tokenize-then-count) — kept as the test
-    * oracle for the single-scan [[metrics]]. */
+    * oracle for the single-scan [[metrics]]. It calls `Character` per char
+    * on purpose, so it stays independent of the [[CharClass]] tables. */
   def metricsNaive(text: String): Metrics = {
     val toks = tokens(text)
     val nW = toks.length.toLong

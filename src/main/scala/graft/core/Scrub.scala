@@ -96,7 +96,7 @@ object Scrub {
     while (i < n && mask != 7) {
       val c = text.charAt(i)
       if (c == '@') mask |= 1
-      else if (Character.isDigit(c)) mask |= 2
+      else if (CharClass.isDigit(c)) mask |= 2
       else if (isJpTrigger(c)) {
         mask |= 4
         if (Character.isHighSurrogate(c) && Character.isDigit(Character.codePointAt(text, i)))

@@ -117,14 +117,16 @@ object TextDedup {
   }
 
   /** Polynomial rolling-hash fingerprint of the normalized document (lowercase,
-    * whitespace runs folded) — the "document fingerprinting" primitive. */
+    * whitespace runs folded, per char as `Character.toLowerCase` and
+    * `isWhitespace` read it, via [[CharClass]]) — the "document
+    * fingerprinting" primitive. */
   def fingerprint(text: String): Long = {
     var h = 1125899906842597L
     var lastSpace = true
     var i = 0
     while (i < text.length) {
-      val c0 = Character.toLowerCase(text.charAt(i))
-      val ws = Character.isWhitespace(c0)
+      val c0 = CharClass.toLower(text.charAt(i))
+      val ws = CharClass.isWhitespace(c0)
       if (!ws) { h = h * 31 + c0; lastSpace = false }
       else if (!lastSpace) { h = h * 31 + ' '; lastSpace = true }
       i += 1

@@ -30,7 +30,11 @@ class QualityScanSpec extends AnyFunSuite {
       "  leading and trailing  ", "tab\tsep\nlines\n\n", "x\n",
       "山田太郎さんは東京都に住んでいます", "MiXeD CaSe THE The the",
       "¥1,234 !!! @@@ ###", "one-word", "a" * 100,
-      "word " * 50 + "\n" + "word " * 50).foreach(assertSame)
+      "word " * 50 + "\n" + "word " * 50,
+      // String lowercase differs from per-char lowercase: İ → i + U+0307,
+      // final sigma, a supplementary capital (U+10400 → U+10428)
+      "İstanbul İSTANBUL istanbul", "ΟΔΟΣ οδος", "Σ ΑΣ ασ", "\uD801\uDC00 \uD801\uDC28",
+      "\uD835\uDFCF \uD801").foreach(assertSame)
   }
 
   test("scan metrics == naive metrics on generated corpus") {
@@ -40,11 +44,16 @@ class QualityScanSpec extends AnyFunSuite {
   }
 
   test("scan metrics == naive metrics property (random ASCII + unicode)") {
+    // the last branch: units whose case or class is unusual (dotted and
+    // dotless i, a titlecase digraph, sigma, sharp s, a fullwidth digit,
+    // a supplementary digit's surrogates, Hangul, U+00A0, U+3000, U+000B)
     val gen = Gen.listOf(Gen.frequency(
       6 -> Gen.alphaNumChar,
       2 -> Gen.oneOf(' ', '\n', '\t', '.', ',', '!', '¥', '@'),
       1 -> Gen.oneOf('山', '田', 'の', 'ア', '中', '文'),
-      1 -> Gen.const('e')
+      1 -> Gen.const('e'),
+      2 -> Gen.oneOf('İ', 'ı', 'ǅ', 'Σ', 'ß', '１', '\uD835', '\uDFCF', '한', '국',
+        '\u00A0', '\u3000', '\u000B')
     )).map(_.mkString)
     (0 until 500).foreach { i =>
       gen.apply(Gen.Parameters.default.withSize(1 + i % 200), Seed(i.toLong))
