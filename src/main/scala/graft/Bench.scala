@@ -132,7 +132,6 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "300000").toLong
     val levels = sys.env.get("SPARK_GRAFT_BENCH_LEVELS")
       .fold(Seq(1, Runtime.getRuntime.availableProcessors).distinct)(
@@ -144,6 +143,12 @@ object Bench {
       case Some(p) => runLevel(p, pagesPath, nDocs); return
       case None =>
     }
+
+    // the per-query table reads the scale-factor tables; the level JVMs
+    // above do not
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", sys.error(
+      "SPARK_GRAFT_SF_DIR is not set: point it at a scale-factor directory " +
+        "(the tables SparkEntry.queries read)"))
 
     // materialize the deterministic corpus once so every level reads the
     // same parquet (generation excluded from the timed window)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.spark.{Curation, Pipeline}
+import graft.spark.{Curation, LocalFs, Pipeline}
 import org.apache.spark.sql.SparkSession
 
 /** Production curation entry point — the composed training-data run:
@@ -52,7 +52,9 @@ object RunCuration {
     val (curated, report) = Curation.curate(spark,
       spark.read.parquet(in), conf,
       benchPath.map(p => spark.read.parquet(p)), stageDir = stageDir)
-    curated.write.mode("overwrite").parquet(out)
+    curated.write.mode("overwrite")
+      .options(LocalFs.writerOptions(out, spark.sessionState.newHadoopConf()))
+      .parquet(out)
     val sec = (System.nanoTime() - t0) / 1e9
     val stages = report.stageSec
       .map { case (k, v) => s""""$k":${math.round(v * 10) / 10.0}""" }

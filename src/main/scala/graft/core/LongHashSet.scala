@@ -8,6 +8,9 @@ final class LongHashSet(initialCapacity: Int = 64) {
   private var cap = Integer.highestOneBit(math.max(initialCapacity, 16) * 2 - 1)
   private var mask = cap - 1
   private var table = new Array[Long](cap)
+  // table index of every non-zero key, in insertion order, so clear()
+  // zeroes just those: O(entries), not O(capacity)
+  private var slots = slotsFor(cap)
   private var used = 0
   private var hasZero = false
 
@@ -22,7 +25,11 @@ final class LongHashSet(initialCapacity: Int = 64) {
       cap = 8192
       mask = cap - 1
       table = new Array[Long](cap)
-    } else java.util.Arrays.fill(table, 0L)
+      slots = slotsFor(cap)
+    } else {
+      var i = 0
+      while (i < used) { table(slots(i)) = 0L; i += 1 }
+    }
     used = 0
     hasZero = false
   }
@@ -38,7 +45,7 @@ final class LongHashSet(initialCapacity: Int = 64) {
     var i = (mix(key0) & mask).toInt
     while (true) {
       val k = table(i)
-      if (k == 0L) { table(i) = key0; used += 1; return true }
+      if (k == 0L) { table(i) = key0; slots(used) = i; used += 1; return true }
       if (k == key0) return false
       i = (i + 1) & mask
     }
@@ -57,6 +64,9 @@ final class LongHashSet(initialCapacity: Int = 64) {
     false
   }
 
+  /** Room for every entry below the 0.7 load bound add() grows at. */
+  private def slotsFor(c: Int): Array[Int] = new Array[Int](c * 7 / 10 + 1)
+
   private def mix(x0: Long): Long = {
     var x = x0 * 0xbf58476d1ce4e5b9L
     x ^= x >>> 32
@@ -68,6 +78,7 @@ final class LongHashSet(initialCapacity: Int = 64) {
     cap <<= 1
     mask = cap - 1
     table = new Array[Long](cap)
+    slots = slotsFor(cap)
     used = 0
     old.foreach(k => if (k != 0L) add(k))
   }

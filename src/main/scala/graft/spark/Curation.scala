@@ -75,9 +75,10 @@ object Curation {
       case Some(dir) =>
         val path = s"$dir/$name"
         val done = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-        val fs = done.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!(stageResume && fs.exists(done)))
-          df.write.mode("overwrite").parquet(path)
+        val hconf = spark.sessionState.newHadoopConf()
+        if (!(stageResume && done.getFileSystem(hconf).exists(done)))
+          df.write.mode("overwrite").options(LocalFs.writerOptions(path, hconf))
+            .parquet(path)
         spark.read.parquet(path)
       case None => df.localCheckpoint(false)
     }

@@ -111,6 +111,7 @@ object StreamingPipeline {
     Pipeline.withBucket(run(spark, pages, conf), conf)
       .writeStream
       .format("parquet")
+      .options(LocalFs.writerOptions(outPath, spark.sessionState.newHadoopConf()))
       .option("path", outPath)
       .option("checkpointLocation", checkpoint)
       .partitionBy("part_bucket")

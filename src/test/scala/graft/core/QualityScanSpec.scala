@@ -60,4 +60,26 @@ class QualityScanSpec extends AnyFunSuite {
         .foreach(assertSame)
     }
   }
+
+  test("LongHashSet.clear of a grown set: size, contains and add stay correct") {
+    // 5,000 keys stay at 8,192 slots (cleared slot by slot); 20,000 grow
+    // past it (cleared by shrinking to a fresh table)
+    Seq(5000, 20000).foreach { n =>
+      val s = new LongHashSet(64)
+      val old = (0L until n.toLong).map(_ * 7919L) // includes the zero key
+      old.foreach(k => assert(s.add(k)))
+      assert(s.size == n)
+      s.clear()
+      assert(s.size == 0, s"n=$n")
+      assert(!old.exists(s.contains), s"n=$n: an old key survived clear")
+      val again = old.take(n / 2) // the zero key is among them
+      val fresh = (1L to 300L).map(_ * -104729L)
+      again.foreach(k => assert(s.add(k), s"n=$n: old key $k not re-added"))
+      fresh.foreach(k => assert(s.add(k), s"n=$n: new key $k not added"))
+      assert(!s.add(0L) && !s.add(fresh.head))
+      assert(s.size == again.size + fresh.size)
+      assert(again.forall(s.contains) && fresh.forall(s.contains))
+      assert(!old.drop(n / 2).exists(s.contains))
+    }
+  }
 }
