@@ -91,11 +91,9 @@ object Bench {
     val s = session(p)
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    // SPARK_GRAFT_NATIVE=0 A/Bs the broadcast-UDF stage path vs the default
-    // native page_stages expression; SPARK_GRAFT_SECURITY=enhanced measures
-    // the model-assisted level (gazetteer automaton + merged scrub per row)
+    // SPARK_GRAFT_SECURITY=enhanced measures the model-assisted level
+    // (gazetteer automaton + merged scrub per row)
     val conf = Pipeline.Conf(
-      nativeStages = sys.env.get("SPARK_GRAFT_NATIVE").forall(_ != "0"),
       security = Pipeline.SecurityLevel.parse(
         sys.env.getOrElse("SPARK_GRAFT_SECURITY", "maximum")))
     def job(): Unit = materialize(Pipeline.run(s, s.read.parquet(pagesPath), conf))

@@ -416,11 +416,11 @@ object Scrub {
       o.filter(n => set.contains(kindOf(n)))
     })
 
-  /** The per-page scrub-mode dispatch RAW form, shared by the native
-    * `page_stages` expression and the broadcast-UDF path (one implementation
-    * — the two paths are pinned row-for-row equal by tests and must never
-    * drift). `scrubbed == null` means UNCHANGED: the fused hot path then
-    * forwards the input UTF8String instead of re-encoding a copy. */
+  /** The per-page scrub-mode dispatch RAW form, the scrub of the native
+    * `page_stages` expression ([[scrubWithMode]] is its String-total form,
+    * the reference the expression is pinned against row for row).
+    * `scrubbed == null` means UNCHANGED: the fused hot path then forwards
+    * the input UTF8String instead of re-encoding a copy. */
   def scrubWithModeRaw(mode: String, t: CharSequence, keyB64: String, ns: String,
                        policiesCsv: String): DictResult = mode match {
     case "dict" =>

@@ -241,12 +241,13 @@ object Ann {
     * ride along as a one-row sidecar so the index is self-contained. */
   def writeIndex(indexed: DataFrame, centroids: Array[Array[Float]],
                  path: String): Unit = {
-    indexed.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/data")
     val spark = indexed.sparkSession
+    val fsOpts = LocalFs.writerOptions(path, spark.sessionState.newHadoopConf())
+    indexed.write.mode("overwrite").options(fsOpts).partitionBy("cell")
+      .parquet(s"$path/data")
     import spark.implicits._
     Seq(centroids.map(_.toSeq).toSeq).toDF("centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+      .coalesce(1).write.mode("overwrite").options(fsOpts).parquet(s"$path/centroids")
   }
 
   /** (indexed table, centroids) back from [[writeIndex]] output. When a
@@ -312,6 +313,7 @@ object Ann {
         s"not match the index schema ${stored.sorted.toSeq} — appends must " +
         "carry exactly the indexed columns")
     indexed.select(stored.map(col).toSeq: _*).write.mode("append")
+      .options(LocalFs.writerOptions(path, spark.sessionState.newHadoopConf()))
       .partitionBy("cell").parquet(s"$path/data")
   }
 
@@ -336,7 +338,9 @@ object Ann {
     // and could fire needsRebuild early. The semi-join costs one scan of
     // the (pruned-to-one-column) index per maintenance call.
     ids.distinct().join(data, ids.columns.toSeq, "left_semi")
-      .write.mode("append").parquet(s"$path/tombstones")
+      .write.mode("append")
+      .options(LocalFs.writerOptions(path, spark.sessionState.newHadoopConf()))
+      .parquet(s"$path/tombstones")
   }
 
   final case class IndexStats(liveRows: Long, tombstones: Long,

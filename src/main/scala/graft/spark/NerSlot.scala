@@ -20,6 +20,11 @@ import org.apache.spark.sql.functions._
   * same Hit relation as the rule detectors so `merge_with_ner` (op 14) is a
   * plain array concat. An ONNX/fastText model drops in by replacing
   * [[NerModel.infer]].
+  *
+  * The pipeline's fused `page_stages` stage runs [[defaultModel]] per row
+  * at an ENHANCED level, followed by the hits of a trained
+  * [[graft.core.NerTag.NerTagModel]] when `Pipeline.Conf.trainedNer` is
+  * set; [[nerHits]] is the batched form for a frame of texts.
   */
 object NerSlot {
 
@@ -87,54 +92,6 @@ object NerSlot {
         it.grouped(batchSize).flatMap { batch =>
           val hits = m.infer(batch.map(_._2))
           batch.iterator.zip(hits.iterator).map { case ((id, _), h) => (id, h) }
-        }
-      }
-      .toDF(idCol, "model_hits")
-  }
-
-  /** One-text inference through the per-executor decode cache — the row
-    * kernel shared by [[modelHitsUdf]] and the fused page-stages UDF. */
-  def inferOne(model: Broadcast[NerModel], text: String): Vector[Hit] =
-    if (text == null) Vector.empty[Hit]
-    else decoded.computeIfAbsent(model.id, _ => model.value).infer(Seq(text)).head
-
-  /** Row-level inference UDF (the automaton is per-executor state, so
-    * per-row calls amortize; a real batched model uses [[nerHits]]'s
-    * mapPartitions path). */
-  def modelHitsUdf(model: Broadcast[NerModel]) =
-    org.apache.spark.sql.functions.udf { (text: String) =>
-      inferOne(model, text)
-    }
-
-  /** Gazetteer + trained-tagger union inference: automaton hits FIRST,
-    * then [[graft.core.NerTag.NerTagModel]] hits over candidate spans —
-    * downstream [[graft.core.Scrub.dedupSpans]] is a stable (start, -len)
-    * sort, so on an identical span the dictionary hit wins and the tagger
-    * only ADDS entities the dictionary does not know (its reason is
-    * `tagger:<label>`). This is the drop-in ENHANCED+ slot for a model
-    * trained with [[NerTagTrain]]. */
-  def inferOneTagged(gaz: Broadcast[NerModel],
-                     tag: Broadcast[graft.core.NerTag.NerTagModel],
-                     text: String): Vector[Hit] =
-    if (text == null) Vector.empty[Hit]
-    else inferOne(gaz, text) ++ tag.value.hitsOf(text)
-
-  /** texts → gazetteer+tagger hits ([[nerHits]] with the trained model
-    * merged in; same mapPartitions batching shape). */
-  def nerHitsTagged(df: DataFrame, idCol: String, textCol: String,
-                    gaz: Broadcast[NerModel],
-                    tag: Broadcast[graft.core.NerTag.NerTagModel]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .mapPartitions { it =>
-        val m = decoded.computeIfAbsent(gaz.id, _ => gaz.value)
-        val t = tag.value
-        it.map { case (id, text) =>
-          val hits =
-            if (text == null) Vector.empty[Hit]
-            else m.infer(Seq(text)).head ++ t.hitsOf(text)
-          (id, hits)
         }
       }
       .toDF(idCol, "model_hits")

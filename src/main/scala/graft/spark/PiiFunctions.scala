@@ -2,18 +2,21 @@ package graft.spark
 
 import graft.core._
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{filter, lit, lower, split, udf}
 
-/** Column-level surface for the core text operators.
+/** Column-level surface for the core text operators that the relational
+  * queries, dedup and streaming call one at a time. (The pipeline's fused
+  * per-page stage is the native `page_stages` expression,
+  * [[graft.spark.expressions.PageStagesExpr]], not a UDF.)
   *
-  * Everything here is a deterministic Scala UDF over the pure `graft.core`
+  * Each UDF is a deterministic Scala UDF over the pure `graft.core`
   * functions (the reference's per-request Python logic collapsed into
   * per-row JVM calls — SURVEY.md §3). Regex `Pattern`s and models live in
   * JVM-level lazy vals, compiled once per executor — the Spark analog of the
   * reference's module-level precompiled regexes and `lru_cache`d models
-  * (app/detectors.py:15-25,64-74). All UDFs are marked `asNondeterministic`
-  * NEVER — determinism lets Catalyst freely reorder/cache them.
+  * (app/detectors.py:15-25,64-74). None is marked `asNondeterministic`:
+  * determinism lets Catalyst freely reorder and cache them.
   *
   * Where a stage carries real model state (langid, perplexity) the
   * broadcast-taking variants ship the model once per executor instead of
@@ -41,10 +44,6 @@ object PiiFunctions {
   val scrubTagsUdf = udf((text: String) =>
     if (text == null) null else Scrub.scrubTags(text))
 
-  /** North-star dictionary scrub over the full entity set. */
-  val scrubDictUdf = udf((text: String) =>
-    if (text == null) null else Scrub.scrubDict(text))
-
   /** Line-scope fixed-tag scrub (reference line mode, app/main.py:404-414). */
   val scrubTagsLinesUdf = udf((text: String) =>
     if (text == null) null else Scrub.scrubTagsLines(text))
@@ -59,52 +58,6 @@ object PiiFunctions {
     udf((text: String) => if (text == null) null else Scrub.scrubRef(text, keyB64, ns))
 
   final case class LangGuess(lang: String, conf: Double)
-
-  /** One fused per-page result: all text stages in a single UDF call so the
-    * row's text crosses the UTF8String→String boundary ONCE and the boxing /
-    * struct-building overhead is paid once, not per stage. The pipeline's
-    * hot path; the à-la-carte UDFs below remain for individual queries. */
-  final case class PageStages(
-      lang_id: String,
-      lang_conf: Double,
-      ppl: Double,
-      q: Quality.Metrics,
-      scrubbed: String,
-      aliases: Map[String, String],
-      counts: Map[String, Long],
-      model_hits: Seq[Hit])
-
-  def pageStagesUdf(lang: Broadcast[LangIdModel], ppl: Broadcast[PerplexityModel],
-                    scrubMode: String = "dict", keyB64: String = "",
-                    ns: String = "", policiesCsv: String = "",
-                    ner: Option[Broadcast[NerSlot.NerModel]] = None,
-                    taggerNer: Option[Broadcast[graft.core.NerTag.NerTagModel]] = None) =
-    udf { (text: String) =>
-      val t = if (text == null) "" else text
-      val (l, c) = lang.value.classify(t)
-      val p = ppl.value.perplexity(t)
-      val m = Quality.metrics(t)
-      // ENHANCED level: model hits merged into the scrub span set; MAXIMUM:
-      // rule-only. Shared dispatch with the native expression
-      // (Scrub.scrubWithMode/-Ner) — the two paths cannot drift. With a
-      // trained tagger, gazetteer hits come FIRST (stable span dedup keeps
-      // the dictionary hit on identical spans — NerSlot.inferOneTagged).
-      val modelHits: Seq[Hit] = (ner, taggerNer) match {
-        case (Some(g), Some(tg)) => NerSlot.inferOneTagged(g, tg, t)
-        case (Some(g), None)     => NerSlot.inferOne(g, t)
-        case (None, Some(tg))    => tg.value.hitsOf(t) // tagger-only slot
-        case (None, None)        => Nil
-      }
-      val d =
-        if (ner.isEmpty && taggerNer.isEmpty)
-          Scrub.scrubWithMode(scrubMode, t, keyB64, ns, policiesCsv)
-        else Scrub.scrubWithModeNer(scrubMode, t, keyB64, ns, policiesCsv, modelHits)
-      PageStages(l, c, p, m, d.scrubbed, d.aliases, d.counts, modelHits)
-      // nondeterministic = the duplication guard, not semantics (see
-      // PageStagesExpr.deterministic): without it a downstream
-      // .where(col("keep")) clones this whole UDF into the filter
-      // predicate once per struct-field reference (~19 evals/row measured)
-    }.asNondeterministic()
 
   /** Language ID with an explicitly broadcast model. */
   def langIdUdf(model: Broadcast[LangIdModel]) =
@@ -127,9 +80,6 @@ object PiiFunctions {
         bank.value("en")).perplexity(text)
     }
 
-  val qualityUdf = udf((text: String) =>
-    if (text == null) Quality.metrics("") else Quality.metrics(text))
-
   val minHashUdf = udf((text: String, k: Int, numHashes: Int) =>
     TextDedup.minHash(if (text == null) "" else text, k, numHashes))
 
@@ -147,15 +97,4 @@ object PiiFunctions {
 
   val shinglesUdf = udf((text: String, k: Int) =>
     TextDedup.shingles(if (text == null) "" else text, k))
-
-  /** Register the SQL-callable subset (spark.sql usage + diagnostics). */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("pii_detect", detectAllUdf)
-    spark.udf.register("pii_classify", classifyUdf)
-    spark.udf.register("pii_scrub_tags", scrubTagsUdf)
-    spark.udf.register("pii_scrub_dict", scrubDictUdf)
-    spark.udf.register("doc_quality", qualityUdf)
-    spark.udf.register("doc_simhash", simHashUdf)
-    spark.udf.register("doc_fingerprint", fingerprintUdf)
-  }
 }

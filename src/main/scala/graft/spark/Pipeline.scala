@@ -1,19 +1,25 @@
 package graft.spark
 
-import graft.core.{LangId, Perplexity, Quality, Scrub}
+import graft.core.Quality
+import graft.spark.expressions.PageStagesExpr
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.graft.ExprColumn
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The flagship pipeline: pages → langid → perplexity → quality rules →
   * PII scrub → keep/drop — one narrow stage from scan to sink.
   *
-  * Design (SURVEY.md §3.1, §4): all per-row work is deterministic UDFs over
-  * `graft.core`; model state (langid, perplexity) is broadcast once per job;
-  * the keep/drop decision is a NATIVE Catalyst `when` chain over the quality
-  * struct (mirroring [[Quality.decide]] rule-for-rule — parity is tested), so
-  * Catalyst can prune/push it; the only wide operations in a full run are the
-  * salted repartition before the partitioned write and the tiny metrics agg.
+  * Design (SURVEY.md §3.1, §4): the per-row text work over `graft.core` is
+  * ONE native codegen expression, `page_stages`
+  * ([[graft.spark.expressions.PageStagesExpr]]), whose models are per-JVM
+  * defaults built from code (a trained NER tagger, the one model that is
+  * not, is broadcast into it); the keep/drop decision is a NATIVE Catalyst
+  * `when` chain over the quality struct (mirroring [[Quality.decide]]
+  * rule-for-rule — parity is tested), so Catalyst can prune/push it; the
+  * only wide operations in a full run are the salted repartition before
+  * the partitioned write and the tiny metrics agg.
   */
 object Pipeline {
 
@@ -59,23 +65,18 @@ object Pipeline {
       /** Reference per-request `policies` (app/main.py:379): hit kinds to
         * scrub (email/phone/amount/id/name/address). Empty = all. */
       policies: Set[String] = Set.empty,
-      /** true (default): the fused per-page stage runs as the native
-        * [[graft.spark.expressions.PageStagesExpr]] — no ScalaUDF shim, no
-        * encoder round-trip. false: the broadcast-model UDF path (needed
-        * when models are loaded from files rather than built from code). */
-      nativeStages: Boolean = true,
       /** Security level (see [[SecurityLevel]]): MAXIMUM (default) keeps
-        * the plan rule-only; an effective ENHANCED level adds the
-        * broadcast-model NER column at plan-construction time — when off,
-        * the stage isn't in the plan at all. */
+        * the plan rule-only; an effective ENHANCED level adds model NER to
+        * the fused stage and the `model_hits` column at plan-construction
+        * time — when off, neither is in the plan at all. */
       security: SecurityLevel = SecurityLevel.Maximum,
       numBuckets: Int = 64,
       saltBuckets: Int = 8,
       /** Optional TRAINED span tagger ([[NerTagTrain.train]]) merged into
         * the model-NER slot at an effective ENHANCED level — detects
-        * unseen entities the gazetteer cannot. Forces the broadcast-UDF
-        * stage path (the native expression carries only the embedded
-        * gazetteer artifact); ignored at MAXIMUM, like the gazetteer. */
+        * unseen entities the gazetteer cannot. Broadcast once per job into
+        * the fused stage, whose gazetteer hits come first; ignored at
+        * MAXIMUM, like the gazetteer. */
       trainedNer: Option[graft.core.NerTag.NerTagModel] = None,
       /** Optional toxicity blocklist ([[Toxicity]], C4 semantics): when
         * set, docs whose text hits the list more than `toxicityMaxHits`
@@ -114,26 +115,12 @@ object Pipeline {
   def run(spark: SparkSession, pages: DataFrame, conf: Conf = Conf()): DataFrame = {
     val qc = conf.quality
 
-    val policiesCsv = conf.policies.toSeq.sorted.mkString(",")
-    val useTagger = conf.modelNer && conf.trainedNer.nonEmpty
-    val stagesCol: Column =
-      if (conf.nativeStages && !useTagger) {
-        graft.spark.expressions.GraftExtensions.install(spark)
-        call_function("page_stages", col("text"),
-          lit(conf.scrubMode), lit(conf.keyB64), lit(conf.ns), lit(policiesCsv),
-          lit(conf.modelNer.toString))
-      } else {
-        val bLang = spark.sparkContext.broadcast(LangId.default)
-        val bPpl = spark.sparkContext.broadcast(Perplexity.default)
-        val bNer =
-          if (conf.modelNer) Some(spark.sparkContext.broadcast(NerSlot.defaultModel))
-          else None
-        val bTag =
-          if (useTagger) conf.trainedNer.map(spark.sparkContext.broadcast(_))
-          else None
-        PiiFunctions.pageStagesUdf(bLang, bPpl, conf.scrubMode,
-          conf.keyB64, conf.ns, policiesCsv, bNer, bTag)(col("text"))
-      }
+    val tagger =
+      if (conf.modelNer) conf.trainedNer.map(spark.sparkContext.broadcast(_))
+      else None
+    val stagesCol = ExprColumn(PageStagesExpr(
+      UnresolvedAttribute("text"), conf.scrubMode, conf.keyB64,
+      conf.ns, conf.policies.toSeq.sorted.mkString(","), conf.modelNer, tagger))
 
     val withStages = pages
       .withColumn("r", stagesCol)

@@ -1,6 +1,7 @@
 package graft.spark.expressions
 
-import graft.core.{LangId, Perplexity, Quality, RefAlias, Scrub, TextDedup}
+import graft.core.{LangId, NerTag, Perplexity, Quality, Scrub}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,24 +13,19 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the hot text operators.
+/** Row kernel of the fused `page_stages` expression ([[PageStagesExpr]]).
   *
-  * Versus the ScalaUDF route these stay INSIDE whole-stage codegen: no
-  * ScalaUDF shim, no catalyst↔scala converters, no closure dispatch — the
-  * generated code calls a static JVM helper directly on the UTF8String.
-  * The regex semantics are exactly `graft.core` (same compiled Patterns),
-  * so golden-vector parity carries over unchanged.
+  * The expression stays INSIDE whole-stage codegen: the generated code
+  * calls [[pageStages]] directly on the UTF8String, with no ScalaUDF shim,
+  * no catalyst↔scala converters and no closure dispatch. The regex
+  * semantics are exactly `graft.core` (same compiled Patterns), so
+  * golden-vector parity carries over unchanged.
   *
-  * Registered under `scrub_tags` / `fingerprint64` / `simhash64` via
-  * [[GraftExtensions]] (`spark.sql.extensions=graft.spark.expressions.GraftExtensions`)
-  * or [[GraftExtensions.install]] on an existing session.
+  * Registered as `page_stages` via [[GraftExtensions]]
+  * (`spark.sql.extensions=graft.spark.expressions.GraftExtensions`) or
+  * [[GraftExtensions.install]] on an existing session.
   */
 object ExprHelpers {
-  def scrubTags(s: UTF8String): UTF8String =
-    UTF8String.fromString(Scrub.scrubTags(s.toString))
-  def fingerprint64(s: UTF8String): Long = TextDedup.fingerprint(s.toString)
-  def simhash64(s: UTF8String): Long = TextDedup.simHash(s.toString)
-
   // immutable singletons reused across rows (most web rows have zero hits;
   // consumers copy map/string data into their UnsafeRow before the next
   // row, so sharing is safe — the same contract Spark's own expressions use)
@@ -68,17 +64,6 @@ object ExprHelpers {
       UTF8String.fromString(h.kind), UTF8String.fromString(h.text),
       h.start, h.end, h.conf, UTF8String.fromString(h.reason)))).toArray[Any])
 
-  /** The fused per-page hot path as a direct InternalRow producer: same
-    * core stages as [[graft.spark.PiiFunctions.pageStagesUdf]], minus the
-    * ScalaUDF shim and the ExpressionEncoder round-trip (case class →
-    * reflection converters → InternalRow). Models are the deterministic
-    * JVM-lazy defaults — built once per executor from code, which is the
-    * broadcast-equivalent for in-code models (a file-loaded model must use
-    * the broadcast UDF variant instead). */
-  /** `policiesCsv`: comma-separated hit KINDS to scrub (the reference's
-    * per-request `policies` form field, app/main.py:379); empty = all.
-    * Pattern lists are filtered by the kind each pattern aliases as
-    * (postal → address, the three name patterns → name). */
   /** Per-thread UTF-8 decode scratch: decoding the row's UTF8String into a
     * reused char buffer (instead of `toString`) removes the two largest
     * per-row allocations of the hot path — the String + its value array —
@@ -118,11 +103,21 @@ object ExprHelpers {
   private val scratch = ThreadLocal.withInitial[Utf8Scratch](() => new Utf8Scratch)
   private val EmptyView = new graft.core.CharsView
 
+  /** The fused per-page hot path as a direct InternalRow producer: langid,
+    * perplexity, quality metrics and scrub over one decode of the row.
+    * Models are the deterministic JVM-lazy defaults, built once per
+    * executor from code; the one model that is not in code, a trained
+    * span `tagger` (null when absent), arrives as a broadcast.
+    *
+    * `policiesCsv`: comma-separated hit KINDS to scrub (the reference's
+    * per-request `policies` form field, app/main.py:379); empty = all.
+    * Pattern lists are filtered by the kind each pattern aliases as
+    * (postal → address, the three name patterns → name). */
   def pageStages(text: UTF8String, mode: String, keyB64: String,
-                 ns: String, policiesCsv: String, ner: Boolean): InternalRow = {
+                 ns: String, policiesCsv: String, ner: Boolean,
+                 tagger: Broadcast[NerTag.NerTagModel]): InternalRow = {
     // byte-level hot path: score a reused char view of the UTF-8 bytes —
-    // no per-row String materialization (null text scores as empty, same
-    // as the UDF path)
+    // no per-row String materialization (null text scores as empty)
     val t: graft.core.CharsView =
       if (text == null) EmptyView else scratch.get().decode(text)
     val (l, c) = LangId.default.classify(t)
@@ -134,12 +129,16 @@ object ExprHelpers {
     // and also emitted as the model_hits relation. The automaton and the
     // merged scrub both scan the reused char view directly (hit text is
     // the dictionary entry, never a substring of the input), and the RAW
-    // scrub result stays null-scrubbed ⇔ unchanged on both paths, so the
-    // single row assembly below forwards the input when nothing matched.
+    // scrub result stays null-scrubbed ⇔ unchanged, so the single row
+    // assembly below forwards the input when nothing matched. A trained
+    // tagger's hits come AFTER the gazetteer's: Scrub.dedupSpans is a
+    // stable (start, -len) sort, so on an identical span the dictionary
+    // hit wins and the tagger only adds entities the dictionary lacks.
     val (d, modelHits: Seq[graft.core.Hit]) =
       if (!ner) (Scrub.scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv), Nil)
       else {
-        val hits = graft.spark.NerSlot.defaultModel.hitsOf(t)
+        val gaz = graft.spark.NerSlot.defaultModel.hitsOf(t)
+        val hits = if (tagger == null) gaz else gaz ++ tagger.value.hitsOf(t)
         (Scrub.scrubWithModeNerRaw(mode, t, keyB64, ns, policiesCsv, hits), hits)
       }
     // unchanged scrub (scrubbed == null): forward the input UTF8String —
@@ -160,18 +159,24 @@ object ExprHelpers {
   }
 }
 
-/** `page_stages(text, mode, key_b64, ns[, policies_csv])` — the whole fused
-  * pipeline stage (langid + perplexity + quality metrics + scrub) as ONE
-  * native expression emitting the result struct directly as an InternalRow.
+/** `page_stages(text, mode, key_b64, ns[, policies_csv[, ner]])` — the
+  * whole fused pipeline stage (langid + perplexity + quality metrics +
+  * scrub, plus model NER when `ner`) as ONE native expression emitting the
+  * result struct directly as an InternalRow.
+  *
+  * `tagger` is not a SQL argument: `Pipeline.run` sets it to the broadcast
+  * of `Conf.trainedNer` at an effective ENHANCED level, and its hits join
+  * the gazetteer's.
   *
   * NOT null-intolerant: a null text scores as "" (and is then dropped as
-  * too_short by the rule chain), exactly like the broadcast-UDF path — the
-  * default UnaryExpression null-propagation would instead emit a null
-  * struct, whose nulls fall through every `when()` in the keep/drop chain
-  * and KEEP the corrupt row. */
+  * too_short by the rule chain) — the default UnaryExpression
+  * null-propagation would instead emit a null struct, whose nulls fall
+  * through every `when()` in the keep/drop chain and KEEP the corrupt
+  * row. */
 case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
                           ns: String, policiesCsv: String = "",
-                          ner: Boolean = false)
+                          ner: Boolean = false,
+                          tagger: Option[Broadcast[NerTag.NerTagModel]] = None)
     extends UnaryExpression {
   import org.apache.spark.sql.catalyst.expressions.codegen.Block._
   import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
@@ -195,19 +200,22 @@ case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
     else TypeCheckResult.TypeCheckFailure(
       s"page_stages requires a string argument, got ${child.dataType.catalogString}")
   override def eval(input: InternalRow): Any =
-    ExprHelpers.pageStages(
-      child.eval(input).asInstanceOf[UTF8String], mode, keyB64, ns, policiesCsv, ner)
+    ExprHelpers.pageStages(child.eval(input).asInstanceOf[UTF8String],
+      mode, keyB64, ns, policiesCsv, ner, tagger.orNull)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val modeRef = ctx.addReferenceObj("mode", mode, "java.lang.String")
     val keyRef = ctx.addReferenceObj("keyB64", keyB64, "java.lang.String")
     val nsRef = ctx.addReferenceObj("ns", ns, "java.lang.String")
     val polRef = ctx.addReferenceObj("policiesCsv", policiesCsv, "java.lang.String")
+    val taggerRef = ctx.addReferenceObj("tagger", tagger.orNull,
+      "org.apache.spark.broadcast.Broadcast")
     val c = child.genCode(ctx)
     ev.copy(
       code = code"""
         ${c.code}
         InternalRow ${ev.value} = graft.spark.expressions.ExprHelpers.pageStages(
-          ${c.isNull} ? null : ${c.value}, $modeRef, $keyRef, $nsRef, $polRef, $ner);""",
+          ${c.isNull} ? null : ${c.value}, $modeRef, $keyRef, $nsRef, $polRef, $ner,
+          $taggerRef);""",
       isNull = FalseLiteral)
   }
   override protected def withNewChildInternal(newChild: Expression): PageStagesExpr =
@@ -216,8 +224,8 @@ case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
 }
 
 object PageStagesExpr {
-  /** Must mirror PiiFunctions.PageStages / Quality.Metrics field-for-field —
-    * Pipeline.run selects subfields by these names. */
+  /** Must mirror Quality.Metrics field-for-field — Pipeline.run selects
+    * subfields by these names. */
   val qualitySchema: StructType = StructType(Seq(
     StructField("nChars", LongType, nullable = false),
     StructField("nWords", LongType, nullable = false),
@@ -250,55 +258,6 @@ object PageStagesExpr {
     StructField("model_hits", ArrayType(hitSchema, containsNull = false), nullable = false)))
 }
 
-abstract class GraftUnaryStringExpression extends UnaryExpression
-    with Serializable {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
-  /** Fully-qualified static call target, e.g. "...ExprHelpers.scrubTags". */
-  protected def helper: String
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"$helper($c)")
-}
-
-/** `scrub_tags(text)` — single-pass union-regex scrub with fixed tags. */
-case class ScrubTagsExpr(child: Expression) extends GraftUnaryStringExpression {
-  override def dataType: DataType = StringType
-  override protected def helper: String =
-    "graft.spark.expressions.ExprHelpers.scrubTags"
-  override def nullSafeEval(input: Any): Any =
-    ExprHelpers.scrubTags(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): ScrubTagsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "scrub_tags"
-}
-
-/** `fingerprint64(text)` — normalized rolling-hash document fingerprint. */
-case class Fingerprint64Expr(child: Expression) extends GraftUnaryStringExpression {
-  override def dataType: DataType = LongType
-  override protected def helper: String =
-    "graft.spark.expressions.ExprHelpers.fingerprint64"
-  override def nullSafeEval(input: Any): Any =
-    ExprHelpers.fingerprint64(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Fingerprint64Expr =
-    copy(child = newChild)
-  override def prettyName: String = "fingerprint64"
-}
-
-/** `simhash64(text)` — 64-bit SimHash over word unigrams. */
-case class SimHash64Expr(child: Expression) extends GraftUnaryStringExpression {
-  override def dataType: DataType = LongType
-  override protected def helper: String =
-    "graft.spark.expressions.ExprHelpers.simhash64"
-  override def nullSafeEval(input: Any): Any =
-    ExprHelpers.simhash64(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
-  override def prettyName: String = "simhash64"
-}
-
 /** Session-extension hook: `--conf spark.sql.extensions=graft.spark.expressions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -313,12 +272,6 @@ object GraftExtensions {
     new ExpressionInfo("graft.spark.expressions", name, usage)
 
   val registrations: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("scrub_tags", info("scrub_tags", "_FUNC_(text) - single-pass PII scrub with <KIND> tags"),
-      (args: Seq[Expression]) => ScrubTagsExpr(args.head)),
-    ("fingerprint64", info("fingerprint64", "_FUNC_(text) - normalized doc fingerprint"),
-      (args: Seq[Expression]) => Fingerprint64Expr(args.head)),
-    ("simhash64", info("simhash64", "_FUNC_(text) - 64-bit simhash"),
-      (args: Seq[Expression]) => SimHash64Expr(args.head)),
     ("page_stages", info("page_stages",
       "_FUNC_(text, mode, key_b64, ns[, policies_csv[, ner]]) - fused langid+perplexity+quality+scrub struct"),
       (args: Seq[Expression]) => {

@@ -1,13 +1,15 @@
 package graft.spark
 
-import graft.core.{Scrub, TextDedup}
+import graft.core.{LangId, Perplexity, Quality, Scrub, TextDedup}
 import graft.spark.expressions.GraftExtensions
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The native Catalyst expressions must (a) agree with the core functions,
-  * (b) stay inside whole-stage codegen (the point of having them). */
+/** The native `page_stages` expression must (a) agree row for row with the
+  * `graft.core` functions run on the row's String, (b) stay inside
+  * whole-stage codegen (the point of having it). The scalar UDFs the
+  * engine calls must agree with their core functions. */
 class ExpressionsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = SparkTestSession.spark
@@ -15,20 +17,20 @@ class ExpressionsSpec extends AnyFunSuite {
     s
   }
 
-  test("scrub_tags expression == core Scrub.scrubTags on planted PII docs") {
+  test("scrub-tags UDF == core Scrub.scrubTags on planted PII docs, null stays null") {
     import spark.implicits._
     val texts = (0L until 200L).map(i =>
       s"doc $i mail u$i@ex.com tel 03-1234-${1000 + i % 9000} pay ¥${1 + i % 9},123 id ACC-${10000 + i}")
-    val got = texts.toDF("text")
-      .selectExpr("scrub_tags(text) AS s").as[String].collect()
-    assert(got.toSeq == texts.map(Scrub.scrubTags(_)))
+    val got = (texts :+ null).toDF("text")
+      .select(PiiFunctions.scrubTagsUdf(col("text"))).as[String].collect()
+    assert(got.toSeq == texts.map(Scrub.scrubTags(_)) :+ null)
   }
 
-  test("fingerprint64/simhash64 expressions == core functions") {
+  test("fingerprint/simhash UDFs == core functions") {
     import spark.implicits._
     val texts = (0L until 200L).map(DataGen.pageFor(_).text)
     val rows = texts.toDF("text")
-      .selectExpr("fingerprint64(text) AS f", "simhash64(text) AS h")
+      .select(PiiFunctions.fingerprintUdf(col("text")), PiiFunctions.simHashUdf(col("text")))
       .collect()
     rows.zip(texts).foreach { case (r, t) =>
       assert(r.getLong(0) == TextDedup.fingerprint(t))
@@ -36,41 +38,59 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
-  test("expressions run inside whole-stage codegen (no ScalaUDF shim)") {
-    // a parquet scan, not a local relation — local relations are evaluated
-    // eagerly and would hide the codegen question entirely
-    val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val df = base.selectExpr("scrub_tags(text) AS s", "simhash64(text) AS h")
-    val plan = df.queryExecution.executedPlan.toString
-    // "*(n)" is the simpleString marker for a WholeStageCodegen stage
-    assert(plan.contains("*(1) Project [scrub_tags"), plan)
-    assert(df.collect().length == 500) // force execution through codegen
-    assert(!plan.contains("UDF"), plan)
-    val udfPlan = base.select(PiiFunctions.scrubTagsUdf(col("text")))
-      .queryExecution.executedPlan.toString
-    assert(udfPlan.contains("UDF"), udfPlan)
+  /** One row of the fused stage's outputs, doubles by raw bits. */
+  private type Stage = (String, Long, Long, Seq[Any], Boolean, String,
+    String, Map[String, String], Map[String, Long])
+
+  /** `graft.core` on the row's String: the reference for the fused stage. */
+  private def reference(text: String, conf: Pipeline.Conf): Stage = {
+    val t = if (text == null) "" else text
+    val (l, c) = LangId.default.classify(t)
+    val p = Perplexity.default.perplexity(t)
+    val m = Quality.metrics(t)
+    val (keep, reason) = Quality.decide(m, p, conf.quality)
+    val d = Scrub.scrubWithMode(conf.scrubMode, t, conf.keyB64, conf.ns, "")
+    (l, java.lang.Double.doubleToRawLongBits(c), java.lang.Double.doubleToRawLongBits(p),
+      m.productIterator.toSeq, keep, reason, d.scrubbed, d.aliases, d.counts)
   }
 
-  test("page_stages expression == broadcast-UDF pipeline row-for-row") {
-    val pages = DataGen.pages(spark, 400, partitions = 4).toDF()
-    def proj(nat: Boolean) =
-      Pipeline.run(spark, pages, Pipeline.Conf(scrubMode = "ref", nativeStages = nat))
-        .select("url", "lang_id", "lang_conf", "ppl", "keep", "drop_reason",
-          "scrubbed_text")
-        .collect().map(r => r.toSeq).sortBy(_.head.toString)
-    assert(proj(nat = true).toSeq == proj(nat = false).toSeq)
-    // dict mode too (aliases/counts maps)
-    def maps(nat: Boolean) =
-      Pipeline.run(spark, pages, Pipeline.Conf(nativeStages = nat))
-        .select(col("url"), col("alias_dict"), col("n_hits"))
-        .collect().map(r => (r.getString(0),
-          r.getMap[String, String](1).toMap, r.getMap[String, Long](2).toMap))
-        .sortBy(_._1)
-    assert(maps(nat = true).toSeq == maps(nat = false).toSeq)
-  }
+  /** `Pipeline.run`'s stage outputs by url. */
+  private def engine(df: DataFrame, conf: Pipeline.Conf): Map[String, Stage] =
+    Pipeline.run(spark, df, conf)
+      .select("url", "lang_id", "lang_conf", "ppl", "quality", "keep", "drop_reason",
+        "scrubbed_text", "alias_dict", "n_hits")
+      .collect().map(r => r.getString(0) -> ((r.getString(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)),
+        r.getAs[Row](4).toSeq, r.getBoolean(5), r.getString(6), r.getString(7),
+        r.getMap[String, String](8).toMap, r.getMap[String, Long](9).toMap): Stage))
+      .toMap
 
-  test("page_stages byte-path decode matches the UDF String path on tricky unicode") {
+  /** A pages frame over an RDD: over a local Seq the optimizer would fold
+    * the stage into the relation through `eval`, not the generated code. */
+  private def pagesDf(rows: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
+    spark.sparkContext.parallelize(rows.map { case (url, text) =>
+      Page(url, new java.sql.Timestamp(0L), Array.emptyByteArray, text, "en")
+    }, 2).toDF()
+  }
+
+  private def assertMatchesCore(df: DataFrame, texts: Map[String, String]): Unit =
+    for (mode <- Seq("ref", "dict")) {
+      val conf = Pipeline.Conf(scrubMode = mode)
+      val got = engine(df, conf)
+      assert(got.keySet == texts.keySet)
+      texts.foreach { case (url, t) =>
+        assert(got(url) == reference(t, conf), s"mode=$mode url=$url")
+      }
+    }
+
+  test("page_stages in Pipeline.run == core functions on the String, row for row") {
+    val pages = DataGen.pages(spark, 400, partitions = 4)
+    assertMatchesCore(pages.toDF(), pages.collect().map(p => p.url -> p.text).toMap)
+  }
+
+  test("page_stages byte-path decode matches the core String path on tricky unicode") {
     // 1-, 2-, 3- and 4-byte UTF-8 sequences (the 4-byte emoji become
     // surrogate PAIRS in the char view — offsets/metrics must match the
     // String path exactly), plus PII so the scrub rebuilds text, plus a
@@ -82,16 +102,9 @@ class ExpressionsSpec extends AnyFunSuite {
       "emoji soup 😀🌍 pays ¥1,234 to 🤖 id ACC-99999 ok",
       "😀" * 40, // only 4-byte sequences
       "clean short row of plain words that the scrub never touches at all")
-    val df = rows.zipWithIndex
-      .map { case (t, i) => (s"https://u.example/$i", new java.sql.Timestamp(0L),
-        Array.emptyByteArray, t, "en") }
-      .toDF("url", "warc_ts", "html", "text", "lang")
-    def run(nat: Boolean) =
-      Pipeline.run(spark, df, Pipeline.Conf(nativeStages = nat))
-        .select("url", "lang_id", "lang_conf", "ppl", "quality", "keep",
-          "drop_reason", "scrubbed_text", "alias_dict", "n_hits")
-        .collect().map(_.toSeq).sortBy(_.head.toString)
-    assert(run(nat = true).toSeq == run(nat = false).toSeq)
+    val urls = rows.indices.map(i => s"https://u.example/$i")
+    val df = pagesDf(urls.zip(rows))
+    assertMatchesCore(df, urls.zip(rows).toMap)
     // the untouched row comes back byte-identical to its input
     val clean = Pipeline.run(spark, df)
       .where(col("url") === "https://u.example/5")
@@ -109,53 +122,38 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(df.collect().length == 500)
   }
 
-  test("page_stages on null text agrees with the UDF path (drops as too_short)") {
-    import spark.implicits._
-    val df = Seq[(String, java.sql.Timestamp, Array[Byte], String, String)](
-      ("https://a.example/null", new java.sql.Timestamp(0L), Array.emptyByteArray,
-        null, "en"),
-      ("https://a.example/ok", new java.sql.Timestamp(0L), Array.emptyByteArray,
-        "the quick brown fox is on the mat and the dog is in the park today", "en"))
-      .toDF("url", "warc_ts", "html", "text", "lang")
-    for (native <- Seq(true, false)) {
-      val out = Pipeline.run(spark, df, Pipeline.Conf(nativeStages = native))
-        .select("url", "keep", "drop_reason", "scrubbed_text")
-        .collect().map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2)))
-        .toMap
-      assert(out("https://a.example/null") == (false, "too_short"),
-        s"native=$native: ${out("https://a.example/null")}")
-      assert(out("https://a.example/ok")._1, s"native=$native")
-    }
+  test("page_stages on null text scores as the empty string (drops as too_short)") {
+    val ok = "the quick brown fox is on the mat and the dog is in the park today"
+    val df = pagesDf(Seq("https://a.example/null" -> null, "https://a.example/ok" -> ok))
+    assertMatchesCore(df, Map("https://a.example/null" -> null, "https://a.example/ok" -> ok))
+    val out = engine(df, Pipeline.Conf())
+    assert(!out("https://a.example/null")._5 && out("https://a.example/null")._6 == "too_short")
+    assert(out("https://a.example/ok")._5)
   }
 
   test("install registers only the functions a session lacks") {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
-    // a fresh session state: the shared session's registry stays untouched
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+    // fresh session states: the shared session's registry stays untouched
     val s = spark.newSession()
     val registry = s.sessionState.functionRegistry
-    // a function the session already has under a graft name stays as it is
-    val mine = new ExpressionInfo("test", "fingerprint64")
-    registry.registerFunction(FunctionIdentifier("fingerprint64"), mine,
-      (_: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => Literal(7L))
+    // a function the session already has under the graft name stays as it is
+    val mine = new ExpressionInfo("test", "page_stages")
+    registry.registerFunction(FunctionIdentifier("page_stages"), mine,
+      (_: Seq[Expression]) => Literal(7L))
     GraftExtensions.install(s)
     GraftExtensions.install(s)
-    assert(registry.lookupFunction(FunctionIdentifier("fingerprint64")).contains(mine))
-    assert(s.sql("SELECT fingerprint64('x')").head().getLong(0) == 7L)
-    // the rest are registered once and still resolve after the second install
+    assert(registry.lookupFunction(FunctionIdentifier("page_stages")).contains(mine))
+    assert(s.sql("SELECT page_stages('x')").head().getLong(0) == 7L)
+    // a session that lacks them gets each once, still resolving after the
+    // second install
+    val fresh = spark.newSession()
+    GraftExtensions.install(fresh)
+    GraftExtensions.install(fresh)
     GraftExtensions.registrations.foreach { case (name, _, _) =>
-      assert(registry.functionExists(FunctionIdentifier(name)), name)
+      assert(fresh.sessionState.functionRegistry.functionExists(FunctionIdentifier(name)), name)
     }
-    val r = s.sql("SELECT page_stages('mail a@b.cc now', 'tags', '', '').scrubbed")
+    val r = fresh.sql("SELECT page_stages('mail a@b.cc now', 'tags', '', '').scrubbed")
     assert(r.head().getString(0) == "mail <EMAIL> now")
-  }
-
-  test("null handling: expression yields null on null input") {
-    import spark.implicits._
-    val got = Seq[(java.lang.Long, String)]((1L, null), (2L, "a@b.cc x"))
-      .toDF("id", "text")
-      .selectExpr("id", "scrub_tags(text) AS s")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(got.toSet == Set((1L, null), (2L, "<EMAIL> x")))
   }
 }

@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
 
 /** The `file:` shim sets the same permissions as Hadoop's stock local
   * filesystem, is selected only for local paths, and is what the sink's
-  * data write and metadata IO actually go through. */
+  * data write and metadata IO and the IVF index writes actually go
+  * through. */
 class LocalFsSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
@@ -143,6 +144,24 @@ class LocalFsSpec extends AnyFunSuite {
       assert(modes(out).map(_._1) == Set(true, false))
       val (crcs, plain) = files.partition(_.getFileName.toString.endsWith(".crc"))
       assert(plain.forall(f => crcs.contains(f.resolveSibling(s".${f.getFileName}.crc"))))
+
+      // the IVF index's writes (data, centroids, an append, tombstones)
+      // take the same path
+      import spark.implicits._
+      val vecs = (0L until 40L).map(i =>
+        (i, Array.tabulate(4)(d => ((i * 7 + d * 3) % 11).toFloat))).toDF("vec_id", "embedding")
+      val cents = Array(Array(0f, 0f, 0f, 0f), Array(5f, 5f, 5f, 5f), Array(10f, 0f, 10f, 0f))
+      val index = root.resolve("ivf")
+      val (bytes3, ops3) = (stats.getBytesWritten, stats.getWriteOps)
+      Ann.writeIndex(Ann.ivfIndex(vecs.where($"vec_id" < 30), "embedding", cents),
+        cents, index.toString)
+      Ann.appendToIndex(spark, index.toString, vecs.where($"vec_id" >= 30), "embedding")
+      Ann.deleteFromIndex(spark, index.toString, Seq(3L, 31L).toDF("vec_id"))
+      val indexFiles = tree(index).filter(Files.isRegularFile(_))
+      assert(Seq("data", "centroids", "tombstones").forall(d =>
+        indexFiles.exists(_.startsWith(index.resolve(d)))))
+      assert(stats.getBytesWritten - bytes3 >= indexFiles.map(Files.size(_)).sum)
+      assert(stats.getWriteOps - ops3 > 0)
     }
     df.unpersist()
   }

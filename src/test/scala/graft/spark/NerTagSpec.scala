@@ -12,6 +12,11 @@ class NerTagSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   private lazy val model = NerTagTrain.train(
     spark, DataGen.pages(spark, 2000).toDF(), "text")
+  /** A latin org that is neither a gazetteer entry nor rule-matchable. */
+  private val KotobukiText =
+    "Deliveries are handled by Kotobuki Corp every week. The library " +
+      "opens at nine in the morning and closes at eight in the evening. " +
+      "Most readers scan the first page of a report and move on."
 
   test("q_ner_train matches the CPython twin over the pages corpus") {
     val got = SparkEntry.queries("q_ner_train")(spark, "/root/testdata/sf0.01")
@@ -45,11 +50,7 @@ class NerTagSpec extends AnyFunSuite {
     // that is neither a gazetteer entry nor rule-matchable
     import spark.implicits._
     val page = ("https://t.example/1",
-      new java.sql.Timestamp(0L), Array.empty[Byte],
-      "Deliveries are handled by Kotobuki Corp every week. The library " +
-        "opens at nine in the morning and closes at eight in the evening. " +
-        "Most readers scan the first page of a report and move on.",
-      "en")
+      new java.sql.Timestamp(0L), Array.empty[Byte], KotobukiText, "en")
     val pages = Seq(page).toDF("url", "warc_ts", "html", "text", "lang")
     val enhanced = Pipeline.run(spark, pages, Pipeline.Conf(
       security = Pipeline.SecurityLevel.Enhanced, trainedNer = Some(model)))
@@ -71,6 +72,41 @@ class NerTagSpec extends AnyFunSuite {
       security = Pipeline.SecurityLevel.Enhanced))
     assert(gazOnly.select("scrubbed_text").head().getString(0)
       .contains("Kotobuki Corp"))
+  }
+
+  test("Pipeline at ENHANCED + trained tagger == core scrub over gazetteer " +
+      "then tagger hits, row for row, with no UDF in the plan") {
+    import spark.implicits._
+    val kotobuki = Page("https://t.example/kotobuki", new java.sql.Timestamp(0L),
+      Array.empty[Byte], KotobukiText, "en")
+    val pages = DataGen.pages(spark, 300, partitions = 4).collect().toSeq :+ kotobuki
+    val texts = pages.map(p => p.url -> p.text).toMap
+    var taggerHits = 0
+    for (mode <- Seq("dict", "ref")) {
+      val conf = Pipeline.Conf(scrubMode = mode,
+        security = Pipeline.SecurityLevel.Enhanced, trainedNer = Some(model))
+      // an RDD source: the optimizer would fold the stage into a local one
+      val out = Pipeline.run(spark, spark.sparkContext.parallelize(pages, 4).toDF(), conf)
+      val plan = out.queryExecution.executedPlan.toString
+      assert(plan.contains("page_stages") && !plan.contains("UDF"), plan)
+      val rows = out.select("url", "scrubbed_text", "alias_dict", "n_hits", "model_hits")
+        .collect()
+      assert(rows.length == pages.length)
+      rows.foreach { r =>
+        val t = texts(r.getString(0))
+        val hits = NerSlot.defaultModel.hitsOf(t) ++ model.hitsOf(t)
+        val want = graft.core.Scrub.scrubWithModeNer(mode, t, conf.keyB64, conf.ns, "", hits)
+        val got = r.getSeq[org.apache.spark.sql.Row](4).map(h => graft.core.Hit(
+          h.getString(0), h.getString(1), h.getInt(2), h.getInt(3), h.getDouble(4),
+          h.getString(5)))
+        assert(r.getString(1) == want.scrubbed, s"mode=$mode url=${r.getString(0)}")
+        assert(r.getMap[String, String](2).toMap == want.aliases, s"mode=$mode")
+        assert(r.getMap[String, Long](3).toMap == want.counts, s"mode=$mode")
+        assert(got == hits, s"mode=$mode url=${r.getString(0)}")
+        taggerHits += hits.count(_.reason.startsWith("tagger:"))
+      }
+    }
+    assert(taggerHits > 0, "no tagger hits — vacuous pin")
   }
 
   test("unseen org-pattern span classifies as org") {

@@ -113,23 +113,21 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("policy set restricts which kinds are scrubbed (both stage paths)") {
+  test("policy set restricts which kinds are scrubbed") {
     import spark.implicits._
     val df = Seq(
       ("https://a.example/1", new java.sql.Timestamp(0L), Array.emptyByteArray,
         "mail a@b.cc tel 03-1234-5678 id ACC-12345 pay ¥1,234", "en"))
       .toDF("url", "warc_ts", "html", "text", "lang")
-    for (native <- Seq(true, false)) {
-      val out = Pipeline.run(spark, df, Pipeline.Conf(
-        scrubMode = "tags", policies = Set("email", "id"), nativeStages = native))
-        .select("scrubbed_text", "n_hits").head()
-      val scrubbed = out.getString(0)
-      assert(scrubbed.contains("<EMAIL>") && scrubbed.contains("<ID>"))
-      assert(scrubbed.contains("03-1234-5678") && scrubbed.contains("¥1,234"),
-        s"non-policy kinds must survive: $scrubbed")
-      val counts = out.getMap[String, Long](1).toMap
-      assert(counts.keySet == Set("email", "id"))
-    }
+    val out = Pipeline.run(spark, df, Pipeline.Conf(
+      scrubMode = "tags", policies = Set("email", "id")))
+      .select("scrubbed_text", "n_hits").head()
+    val scrubbed = out.getString(0)
+    assert(scrubbed.contains("<EMAIL>") && scrubbed.contains("<ID>"))
+    assert(scrubbed.contains("03-1234-5678") && scrubbed.contains("¥1,234"),
+      s"non-policy kinds must survive: $scrubbed")
+    val counts = out.getMap[String, Long](1).toMap
+    assert(counts.keySet == Set("email", "id"))
   }
 
   test("security level gates the NER stage at plan-construction time") {
@@ -166,33 +164,30 @@ class PipelineSpec extends AnyFunSuite {
       ("https://a.example/1", new java.sql.Timestamp(0L), Array.emptyByteArray,
         ("the quick brown fox and 山田太郎 of Example Corp sat by the river " * 3), "en"))
       .toDF("url", "warc_ts", "html", "text", "lang")
-    for (native <- Seq(true, false)) {
-      def run(l: Pipeline.SecurityLevel) =
-        Pipeline.run(spark, df,
-          Pipeline.Conf(security = l, nativeStages = native))
-          .select("scrubbed_text", "n_hits").head()
-      val mx = run(Maximum)
-      val enh = run(Enhanced)
-      val mxText = mx.getString(0)
-      val enhText = enh.getString(0)
-      // MAXIMUM: rule-only — the gazetteer ORG survives (the kanji name is
-      // also caught by the rule name pattern, so pin the ORG difference)
-      assert(mxText.contains("Example Corp"), s"native=$native: $mxText")
-      // ENHANCED: gazetteer entities are REDACTED in the output text
-      assert(!enhText.contains("Example Corp"), s"native=$native: $enhText")
-      assert(enhText.contains("<ORG_"), s"native=$native: $enhText")
-      // ...and counted in n_hits
-      val mxCounts = mx.getMap[String, Long](1).toMap
-      val enhCounts = enh.getMap[String, Long](1).toMap
-      assert(!mxCounts.contains("org"))
-      assert(enhCounts.getOrElse("org", 0L) >= 3L, s"native=$native: $enhCounts")
-      // the two levels differ ONLY on gazetteer-entity spans: restoring the
-      // aliases' spans aside, the non-entity text is untouched
-      assert(enhText.replaceAll("<ORG_\\d+>", "Example Corp")
-        .replaceAll("<PERSON_\\d+>", "山田太郎") ==
-        mxText.replaceAll("<PERSON_\\d+>", "山田太郎"),
-        s"native=$native:\n  max=$mxText\n  enh=$enhText")
-    }
+    def run(l: Pipeline.SecurityLevel) =
+      Pipeline.run(spark, df, Pipeline.Conf(security = l))
+        .select("scrubbed_text", "n_hits").head()
+    val mx = run(Maximum)
+    val enh = run(Enhanced)
+    val mxText = mx.getString(0)
+    val enhText = enh.getString(0)
+    // MAXIMUM: rule-only — the gazetteer ORG survives (the kanji name is
+    // also caught by the rule name pattern, so pin the ORG difference)
+    assert(mxText.contains("Example Corp"), mxText)
+    // ENHANCED: gazetteer entities are REDACTED in the output text
+    assert(!enhText.contains("Example Corp"), enhText)
+    assert(enhText.contains("<ORG_"), enhText)
+    // ...and counted in n_hits
+    val mxCounts = mx.getMap[String, Long](1).toMap
+    val enhCounts = enh.getMap[String, Long](1).toMap
+    assert(!mxCounts.contains("org"))
+    assert(enhCounts.getOrElse("org", 0L) >= 3L, enhCounts.toString)
+    // the two levels differ ONLY on gazetteer-entity spans: restoring the
+    // aliases' spans aside, the non-entity text is untouched
+    assert(enhText.replaceAll("<ORG_\\d+>", "Example Corp")
+      .replaceAll("<PERSON_\\d+>", "山田太郎") ==
+      mxText.replaceAll("<PERSON_\\d+>", "山田太郎"),
+      s"\n  max=$mxText\n  enh=$enhText")
   }
 
   test("input_hint invariant: text extracted from html is byte-identical per url") {

@@ -119,40 +119,6 @@ class PlanSpec extends AnyFunSuite {
       direct.collect().map(_.getLong(0)).toSeq)
   }
 
-  test("bucketed tables join with ZERO exchanges (co-located big-big join)") {
-    // both sides written bucketed by the join key → the scan satisfies the
-    // join's ClusteredDistribution at plan time; a non-bucketed pair would
-    // shuffle BOTH corpus-sized sides on every downstream join
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      Bucketing.writeBucketed(docs.select(col("doc_id"), col("text")),
-        "bspec_corpus", "doc_id", 4)
-      Bucketing.writeBucketed(docs.select(col("doc_id"), col("lang")),
-        "bspec_labels", "doc_id", 4)
-      val joined = Bucketing.coLocatedJoin(spark, "bspec_corpus",
-        "bspec_labels", "doc_id")
-      val plan = joined.queryExecution.executedPlan
-      val exchanges = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }
-      assert(exchanges.isEmpty,
-        s"bucketed join still shuffles:\n$plan")
-      assert(joined.count() == docs.count())
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bspec_corpus")
-      spark.sql("DROP TABLE IF EXISTS bspec_labels")
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      prevBc match {
-        case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-        case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      }
-    }
-  }
-
   test("customer dimension join is a broadcast hash join") {
     val plan = graft.SparkEntry.queries("q_join_agg")(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString

@@ -37,26 +37,32 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     // toxicity (filler words that occur in real pages) + ENHANCED model
-    // NER + trained quality model, all through the one shared Conf — pins
-    // that every optional stage is streaming-safe, not just the default
-    // plan (the trained tagger rides the same broadcast-UDF path the
-    // ENHANCED level exercises; CurationSpec pins its batch composition)
+    // NER with a trained tagger + trained quality model, all through the
+    // one shared Conf — pins that every optional stage is streaming-safe,
+    // not just the default plan, including the tagger broadcast the fused
+    // expression holds across micro-batches (CurationSpec pins its batch
+    // composition)
     val pages = (0L until 300L).map(DataGen.pageFor(_))
     val w = QualityTrain.train(pages.toDF().select(col("text")), "text")
+    val tagger = NerTagTrain.train(spark, pages.toDF(), "text")
     val conf = Pipeline.Conf(
       security = Pipeline.SecurityLevel.Enhanced,
+      trainedNer = Some(tagger),
       // the per-language bank (with fallback) rather than the single
       // list, so the LangBank dispatch is in the streaming pin too
       toxicityByLang = Some(Map(
         "en" -> Seq("kappa", "rho"), "*" -> Seq("kappa"))),
       qualityModel = Some(w))
     val stream = MemoryStream[Page]
-    stream.addData(pages)
+    stream.addData(pages.take(150))
     val cols = Seq("url", "keep", "drop_reason", "scrubbed_text",
       "n_toxic", "model_keep")
     val q = StreamingPipeline.run(spark, stream.toDF(), conf)
       .writeStream.format("memory").queryName("scored_stream_ext")
       .outputMode("append").start()
+    q.processAllAvailable()
+    // a second micro-batch re-plans the same expression and its broadcast
+    stream.addData(pages.drop(150))
     q.processAllAvailable()
     q.stop()
     def snap(df: org.apache.spark.sql.DataFrame) =
@@ -68,6 +74,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch)
     assert(streamed.exists(_._5 > 0L), "no toxicity hits — vacuous pin")
     assert(streamed.exists(!_._6), "no model drops — vacuous pin")
+    assert(pages.drop(150).exists(p => tagger.hitsOf(p.text).nonEmpty),
+      "no tagger hits in the second micro-batch — vacuous pin")
   }
 
   test("stateful host sessionization closes sessions on event-time gaps") {
