@@ -28,7 +28,7 @@ object Diag {
     } + "\""
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder().appName("graft-diag")
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.spark.{Curation, LocalFs, Pipeline}
+import graft.spark.{Curation, LocalFs, Pipeline, Toxicity}
 import org.apache.spark.sql.SparkSession
 
 /** Production curation entry point — the composed training-data run:
@@ -43,12 +43,8 @@ object RunCuration {
     // same toxicity surface as RunPipeline: "default", "file:<path>"
     // (UT1 one-term-per-line via Hadoop FS), or an inline CSV list
     val conf = Pipeline.Conf(scrubMode = scrubMode,
-      toxicity = sys.env.get("SPARK_GRAFT_TOXICITY").map {
-        case "default" => graft.spark.Toxicity.DefaultList
-        case f if f.startsWith("file:") =>
-          graft.spark.Toxicity.loadList(spark, f.stripPrefix("file:"))
-        case csv => csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      })
+      toxicityByLang = sys.env.get("SPARK_GRAFT_TOXICITY")
+        .map(spec => Map("*" -> Toxicity.listFromSpec(spark, spec))))
     val (curated, report) = Curation.curate(spark,
       spark.read.parquet(in), conf,
       benchPath.map(p => spark.read.parquet(p)), stageDir = stageDir)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.spark.{IcebergishSink, Pipeline}
+import graft.spark.{IcebergishSink, Pipeline, Toxicity}
 import org.apache.spark.sql.SparkSession
 
 /** Production-style entry point — what a user submits to a cluster:
@@ -32,7 +32,7 @@ object RunPipeline {
       // serializing parquet encode — keep one task per (bucket,salt) wave
       .config("spark.sql.adaptive.coalescePartitions.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "false"))
-      // codec stays an explicit knob; measured by cpuSec (SinkAb) snappy
+      // codec stays an explicit knob; measured by cpuSec (BENCH.md) snappy
       // and lz4_raw are within noise on this output, so snappy (the
       // ecosystem default) is pinned
       .config("spark.sql.parquet.compression.codec",
@@ -52,21 +52,17 @@ object RunPipeline {
     // SPARK_GRAFT_SECURITY selects the reference's 4-level surface
     // (maximum default — model NER at enhanced/standard), and
     // SPARK_GRAFT_TOXICITY enables the C4 blocklist stage (drop + output
-    // masking): "default" = the placeholder list, "file:<path>" = a
-    // one-term-per-line UT1/LDNOOBW-format list loaded via the Hadoop FS
-    // API (hdfs/s3a ready; lists past 64 terms take the automaton tier
-    // automatically), anything else = an inline comma-separated list
+    // masking) with one list for every language: "default" = the
+    // placeholder list, "file:<path>" = a one-term-per-line
+    // UT1/LDNOOBW-format list loaded via the Hadoop FS API (hdfs/s3a
+    // ready), anything else = an inline comma-separated list
     val conf = Pipeline.Conf(scrubMode = scrubMode,
       saltBuckets = sys.env.get("SPARK_GRAFT_SALT").map(_.toInt)
         .getOrElse(Pipeline.Conf().saltBuckets),
       security = Pipeline.SecurityLevel.parse(
         sys.env.getOrElse("SPARK_GRAFT_SECURITY", "maximum")),
-      toxicity = sys.env.get("SPARK_GRAFT_TOXICITY").map {
-        case "default" => graft.spark.Toxicity.DefaultList
-        case f if f.startsWith("file:") =>
-          graft.spark.Toxicity.loadList(spark, f.stripPrefix("file:"))
-        case csv => csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      })
+      toxicityByLang = sys.env.get("SPARK_GRAFT_TOXICITY")
+        .map(spec => Map("*" -> Toxicity.listFromSpec(spark, spec))))
 
     // SPARK_GRAFT_WARMUP=1: one untimed score-only pass first, so the timed
     // write measures JIT steady state (a single cold pass under-reports the

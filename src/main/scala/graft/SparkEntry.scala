@@ -890,7 +890,7 @@ object SparkEntry {
       // from the compared output, so the row values are unchanged.
       val q = graft.spark.StreamingPipeline
         .fileStream(s, in, s"$tmp/out", s"$tmp/ck",
-          Pipeline.Conf(toxicity = Some(StreamToxList), numBuckets = 8))
+          Pipeline.Conf(toxicityByLang = Some(Map("*" -> StreamToxList)), numBuckets = 8))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()

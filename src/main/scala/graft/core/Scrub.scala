@@ -371,30 +371,63 @@ object Scrub {
     * the same alias within a document; numbering follows first occurrence in
     * the single scan, per tag. Deterministic given (text, names). */
   def scrubDict(text: String, names: Seq[String] = FullOrder): DictResult = {
-    // lazy init: most web rows have zero hits — don't pay three map
-    // allocations per row for the common no-match case
-    var dict: mutable.LinkedHashMap[String, String] = null
-    var perTagCounter: mutable.Map[String, Int] = null
-    var counts: mutable.Map[String, Long] = null
-    val scrubbed = scrub(text, names, { (kind, orig) =>
-      if (dict == null) {
-        dict = mutable.LinkedHashMap.empty
-        perTagCounter = mutable.Map.empty
-        counts = mutable.Map.empty
-      }
-      counts.update(kind, counts.getOrElse(kind, 0L) + 1L)
-      val tag = dictTag.getOrElse(kind, "PII")
-      dict.getOrElseUpdate(tag + "\u0000" + orig, {
-        val n = perTagCounter.getOrElse(tag, 0) + 1
-        perTagCounter.update(tag, n)
-        s"<${tag}_$n>"
-      })
-    })
-    if (dict == null) DictResult(scrubbed, Map.empty, Map.empty)
-    else {
-      val aliases = dict.map { case (k, v) => k.substring(k.indexOf('\u0000') + 1) -> v }
-      DictResult(scrubbed, aliases.toMap, counts.toMap)
+    val aliases = new Aliases("dict", "", "")
+    aliases.result(scrub(text, names, aliases))
+  }
+
+  /** One document's alias state for a scrub mode — the ONE place each
+    * mode's alias rule lives:
+    *  - `dict`: `<TAG_n>` numbered per tag by first occurrence, keyed
+    *    `tag\0orig` in a `LinkedHashMap` (aliases in first-occurrence order);
+    *  - `tags`: fixed `<KIND>` tokens, no aliases;
+    *  - `ref`:  [[RefAlias]] aliases with the JPY rule, keyed `orig`.
+    * `apply(kind, orig)` counts the hit and returns its replacement;
+    * `result(scrubbed)` builds the [[DictResult]]. Maps are allocated on the
+    * first hit — most web rows have none. An unknown mode fails at
+    * construction, hit or no hit. */
+  private final class Aliases(mode: String, keyB64: String, ns: String)
+      extends ((String, String) => String) {
+    private val rule = mode match {
+      case "dict" => 0
+      case "tags" => 1
+      case "ref" => 2
+      case other => sys.error(s"unknown scrub mode: $other")
     }
+    /** The pattern order the mode scrubs (before the policy filter). */
+    def order: Seq[String] = if (rule == 2) ReferenceOrder else FullOrder
+    private var counts: mutable.Map[String, Long] = null
+    private var dict: mutable.LinkedHashMap[String, String] = null
+    private var perTagCounter: mutable.Map[String, Int] = null
+    private var ref: mutable.Map[String, String] = null
+
+    def apply(k: String, orig: String): String = {
+      if (counts == null) counts = mutable.Map.empty
+      counts.update(k, counts.getOrElse(k, 0L) + 1L)
+      rule match {
+        case 0 =>
+          if (dict == null) { dict = mutable.LinkedHashMap.empty; perTagCounter = mutable.Map.empty }
+          val tag = dictTag.getOrElse(k, "PII")
+          dict.getOrElseUpdate(tag + "\u0000" + orig, {
+            val n = perTagCounter.getOrElse(tag, 0) + 1
+            perTagCounter.update(tag, n)
+            s"<${tag}_$n>"
+          })
+        case 1 => "<" + k.toUpperCase + ">"
+        case _ =>
+          if (ref == null) ref = mutable.Map.empty
+          ref.getOrElseUpdate(orig, RefAlias.aliasWithJpyRule(k, orig, keyB64, ns))
+      }
+    }
+
+    def result(scrubbed: String): DictResult =
+      if (counts == null) DictResult(scrubbed, Map.empty, Map.empty)
+      else {
+        val aliases =
+          if (dict != null) dict.map { case (k, v) => k.substring(k.indexOf('\u0000') + 1) -> v }.toMap
+          else if (ref != null) ref.toMap
+          else Map.empty[String, String]
+        DictResult(scrubbed, aliases, counts.toMap)
+      }
   }
 
   /** Reference-alias mode over the reference's 4-pattern union, including the
@@ -415,63 +448,6 @@ object Scrub {
       val set = csv.split(',').map(_.trim).filter(_.nonEmpty).toSet
       o.filter(n => set.contains(kindOf(n)))
     })
-
-  /** The per-page scrub-mode dispatch RAW form, the scrub of the native
-    * `page_stages` expression ([[scrubWithMode]] is its String-total form,
-    * the reference the expression is pinned against row for row).
-    * `scrubbed == null` means UNCHANGED: the fused hot path then forwards
-    * the input UTF8String instead of re-encoding a copy. */
-  def scrubWithModeRaw(mode: String, t: CharSequence, keyB64: String, ns: String,
-                       policiesCsv: String): DictResult = mode match {
-    case "dict" =>
-      // lazy init: most web rows have zero hits — don't pay three map
-      // allocations per row for the common no-match case
-      var dict: mutable.LinkedHashMap[String, String] = null
-      var perTagCounter: mutable.Map[String, Int] = null
-      var counts: mutable.Map[String, Long] = null
-      val scrubbed = scrubRaw(t, filteredOrder(FullOrder, policiesCsv), { (kind, orig) =>
-        if (dict == null) {
-          dict = mutable.LinkedHashMap.empty
-          perTagCounter = mutable.Map.empty
-          counts = mutable.Map.empty
-        }
-        counts.update(kind, counts.getOrElse(kind, 0L) + 1L)
-        val tag = dictTag.getOrElse(kind, "PII")
-        dict.getOrElseUpdate(tag + "\u0000" + orig, {
-          val n = perTagCounter.getOrElse(tag, 0) + 1
-          perTagCounter.update(tag, n)
-          s"<${tag}_$n>"
-        })
-      })
-      if (dict == null) DictResult(scrubbed, Map.empty, Map.empty)
-      else {
-        val aliases = dict.map { case (k, v) => k.substring(k.indexOf('\u0000') + 1) -> v }
-        DictResult(scrubbed, aliases.toMap, counts.toMap)
-      }
-    case "tags" =>
-      val counts = mutable.Map.empty[String, Long]
-      val s = scrubRaw(t, filteredOrder(FullOrder, policiesCsv), { (k, _) =>
-        counts.update(k, counts.getOrElse(k, 0L) + 1L)
-        "<" + k.toUpperCase + ">"
-      })
-      DictResult(s, Map.empty, counts.toMap)
-    case "ref" =>
-      val counts = mutable.Map.empty[String, Long]
-      val dict = mutable.Map.empty[String, String]
-      val s = scrubRaw(t, filteredOrder(ReferenceOrder, policiesCsv), { (k, orig) =>
-        counts.update(k, counts.getOrElse(k, 0L) + 1L)
-        dict.getOrElseUpdate(orig, RefAlias.aliasWithJpyRule(k, orig, keyB64, ns))
-      })
-      DictResult(s, dict.toMap, counts.toMap)
-    case other => sys.error(s"unknown scrub mode: $other")
-  }
-
-  /** String-total [[scrubWithModeRaw]]: unchanged ⇒ scrubbed = the input. */
-  def scrubWithMode(mode: String, t: String, keyB64: String, ns: String,
-                    policiesCsv: String): DictResult = {
-    val d = scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv)
-    if (d.scrubbed == null) d.copy(scrubbed = t) else d
-  }
 
   /** The union pass of [[scrub]] as a SPAN view: same matcher, same order
     * resolution, but hits are collected instead of replaced — the input to
@@ -516,63 +492,36 @@ object Scrub {
     policyKindsCache.computeIfAbsent(policiesCsv,
       csv => csv.split(',').map(_.trim).filter(_.nonEmpty).toSet)
 
-  /** [[scrubWithModeRaw]] with model-NER hits merged in — the ENHANCED
-    * security level's scrub (merge_with_ner, app/detectors.py:100-117).
-    * RAW contract: `scrubbed == null` ⇔ unchanged (only possible when no
-    * model hit survives the policy filter AND the rule union never fires),
-    * so the fused hot path can forward the input at ENHANCED too.
-    * Model hits pass the same per-request policy filter as the rule
-    * patterns (`hit.get("type") in policies`, app/main.py:250). Kinds the
-    * reference aliases via Faker (name/address) use [[RefAlias]]'s branches;
-    * org/misc take its fallback draw — total for every model kind. */
-  def scrubWithModeNerRaw(mode: String, t: CharSequence, keyB64: String, ns: String,
-                          policiesCsv: String, modelHits0: Seq[Hit]): DictResult = {
-    val modelHits =
-      if (policiesCsv.isEmpty) modelHits0
-      else { val ks = policyKinds(policiesCsv); modelHits0.filter(h => ks(h.kind)) }
-    // no model hits ⇒ the merged pass degenerates to the plain union scan
-    // (find() spans are already non-overlapping) — take the rule-only path
-    if (modelHits.isEmpty) return scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv)
-    val counts = mutable.Map.empty[String, Long]
-    mode match {
-      case "dict" =>
-        val dict = mutable.LinkedHashMap.empty[String, String]
-        val perTagCounter = mutable.Map.empty[String, Int]
-        val s = scrubMerged(t, filteredOrder(FullOrder, policiesCsv), modelHits,
-          { (kind, orig) =>
-            counts.update(kind, counts.getOrElse(kind, 0L) + 1L)
-            val tag = dictTag.getOrElse(kind, "PII")
-            dict.getOrElseUpdate(tag + "\u0000" + orig, {
-              val n = perTagCounter.getOrElse(tag, 0) + 1
-              perTagCounter.update(tag, n)
-              s"<${tag}_$n>"
-            })
-          })
-        val aliases = dict.map { case (k, v) => k.substring(k.indexOf('\u0000') + 1) -> v }
-        DictResult(s, aliases.toMap, counts.toMap)
-      case "tags" =>
-        val s = scrubMerged(t, filteredOrder(FullOrder, policiesCsv), modelHits,
-          { (k, _) =>
-            counts.update(k, counts.getOrElse(k, 0L) + 1L)
-            "<" + k.toUpperCase + ">"
-          })
-        DictResult(s, Map.empty, counts.toMap)
-      case "ref" =>
-        val dict = mutable.Map.empty[String, String]
-        val s = scrubMerged(t, filteredOrder(ReferenceOrder, policiesCsv), modelHits,
-          { (k, orig) =>
-            counts.update(k, counts.getOrElse(k, 0L) + 1L)
-            dict.getOrElseUpdate(orig, RefAlias.aliasWithJpyRule(k, orig, keyB64, ns))
-          })
-        DictResult(s, dict.toMap, counts.toMap)
-      case other => sys.error(s"unknown scrub mode: $other")
-    }
+  /** The per-page moded scrub, RAW form — the scrub of the native
+    * `page_stages` expression ([[scrubWithMode]] is its String-total form,
+    * the reference the expression is pinned against row for row).
+    * `scrubbed == null` means UNCHANGED: the fused hot path then forwards
+    * the input UTF8String instead of re-encoding a copy.
+    *
+    * `modelHits` are the model-NER spans of the ENHANCED security level
+    * (merge_with_ner, app/detectors.py:100-117), with exact offsets into
+    * `t`. They pass the same per-request policy filter as the rule
+    * patterns (`hit.get("type") in policies`, app/main.py:250). With none
+    * left the scrub is the plain union splice ([[scrubRaw]]: `find()` spans
+    * are already non-overlapping); otherwise rule and model spans are
+    * merged and spliced by [[scrubMerged]]. Kinds the reference aliases via
+    * Faker (name/address) use [[RefAlias]]'s branches; org/misc take its
+    * fallback draw — total for every model kind. */
+  def scrubWithModeRaw(mode: String, t: CharSequence, keyB64: String, ns: String,
+                       policiesCsv: String, modelHits: Seq[Hit] = Nil): DictResult = {
+    val aliases = new Aliases(mode, keyB64, ns)
+    val names = filteredOrder(aliases.order, policiesCsv)
+    val hits =
+      if (policiesCsv.isEmpty || modelHits.isEmpty) modelHits
+      else { val ks = policyKinds(policiesCsv); modelHits.filter(h => ks(h.kind)) }
+    aliases.result(
+      if (hits.isEmpty) scrubRaw(t, names, aliases) else scrubMerged(t, names, hits, aliases))
   }
 
-  /** String-total [[scrubWithModeNerRaw]]: unchanged ⇒ scrubbed = input. */
-  def scrubWithModeNer(mode: String, t: String, keyB64: String, ns: String,
-                       policiesCsv: String, modelHits0: Seq[Hit]): DictResult = {
-    val d = scrubWithModeNerRaw(mode, t, keyB64, ns, policiesCsv, modelHits0)
+  /** String-total [[scrubWithModeRaw]]: unchanged ⇒ scrubbed = the input. */
+  def scrubWithMode(mode: String, t: String, keyB64: String, ns: String,
+                    policiesCsv: String, modelHits: Seq[Hit] = Nil): DictResult = {
+    val d = scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv, modelHits)
     if (d.scrubbed == null) d.copy(scrubbed = t) else d
   }
 

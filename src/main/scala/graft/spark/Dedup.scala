@@ -23,16 +23,12 @@ object Dedup {
 
   /** How the collapsed (exact-dedup) relation is materialized for its
     * multiple consumers (star arcs + both sides of the LSH self-join).
-    * Every choice is a real tradeoff — pick per deployment:
+    * Two choices, picked per deployment:
     *  - [[Materialize.LocalCheckpoint]] (default): computed once, blocks
     *    reclaimed by the ContextCleaner when the caller drops the result.
     *    Lineage is truncated, so a lost executor (or dynamic-allocation
     *    scale-down) FAILS the job instead of recomputing — right for local
     *    mode and static-allocation batch jobs.
-    *  - [[Materialize.Persist]]: MEMORY_AND_DISK cache — recomputable on
-    *    executor loss, but the CacheManager entry outlives the call; a
-    *    long-lived session accumulates one cached copy per invocation
-    *    unless the caller uncaches. Right under dynamic allocation.
     *  - [[Materialize.Recompute]]: no materialization; every consumer
     *    re-runs the collapse (~3 input scans). Right when the caller
     *    stages the collapsed relation to a table itself (the 100-TB
@@ -40,14 +36,11 @@ object Dedup {
   sealed trait Materialize
   object Materialize {
     case object LocalCheckpoint extends Materialize
-    case object Persist extends Materialize
     case object Recompute extends Materialize
   }
 
   private def materialized(df: DataFrame, m: Materialize): DataFrame = m match {
     case Materialize.LocalCheckpoint => df.localCheckpoint(false)
-    case Materialize.Persist =>
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     case Materialize.Recompute => df
   }
 
@@ -361,7 +354,6 @@ object Dedup {
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIters) {
-      val dbgT0 = System.nanoTime()
       val acc = sc.longAccumulator(s"cc-changed-$it")
       // neighbor labels: co-partitioned edge⋈label join (narrow), propose
       // the neighbor's label to the other endpoint, min per node with
@@ -394,8 +386,6 @@ object Dedup {
       if (prev != null) prev.unpersist(false)
       prev = labels
       labels = next
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"CCROUND $it changed=$changed ${(System.nanoTime() - dbgT0) / 1e9}%.1f s")
       it += 1
     }
     if (changed > 0) {

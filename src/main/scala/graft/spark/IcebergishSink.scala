@@ -304,7 +304,7 @@ object IcebergishSink {
       // the hits total is summed INSIDE the tap UDF: a separate
       // `aggregate(map_values(...))` column is an interpreted higher-order
       // expression in the write projection — measured 1 s wall / 18 cpu-s
-      // per 1M docs slower than one map-argument UDF (SinkAb tap2 A/B)
+      // per 1M docs slower than one map-argument UDF (A/B in BENCH.md)
       val tap = udf { (bucket: Int, keep: Boolean, hits: Map[String, Long]) =>
         acc.add((bucket, keep, if (hits == null) 0L else hits.valuesIterator.sum))
         bucket
@@ -318,7 +318,7 @@ object IcebergishSink {
         // cpu-s per 1M docs) — the categorical columns repay it — EXCEPT
         // the high-cardinality string columns, where the dictionary
         // attempt always falls back per page and only burns cpu
-        // (55.6 → 51 cpu-s per 1M docs in the SinkAb encode A/B)
+        // (55.6 → 51 cpu-s per 1M docs in an encode A/B, BENCH.md)
         .option("parquet.enable.dictionary", "true")
         .option("parquet.enable.dictionary#scrubbed_text", "false")
         .option("parquet.enable.dictionary#url", "false")

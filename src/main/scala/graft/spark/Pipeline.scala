@@ -78,20 +78,20 @@ object Pipeline {
         * the fused stage, whose gazetteer hits come first; ignored at
         * MAXIMUM, like the gazetteer. */
       trainedNer: Option[graft.core.NerTag.NerTagModel] = None,
-      /** Optional toxicity blocklist ([[Toxicity]], C4 semantics): when
-        * set, docs whose text hits the list more than `toxicityMaxHits`
-        * times drop with reason "toxicity" (evaluated AFTER every
-        * reference-derived rule, so their drop_reason attribution is
-        * unchanged) and an `n_toxic` column is surfaced. Default off —
-        * the reference pipeline is PII-only. */
-      toxicity: Option[Seq[String]] = None,
+      /** Docs whose text hits their toxicity list more than this many
+        * times drop with reason "toxicity" (0 = C4's drop on any hit). */
       toxicityMaxHits: Long = 0L,
-      /** PER-LANGUAGE blocklists (the C4/UT1 production shape): each doc
-        * is screened against the list of its OWN identified language
-        * (`lang_id` from this pipeline's langid stage), via one broadcast
+      /** Optional toxicity blocklists ([[Toxicity]], C4 semantics), PER
+        * LANGUAGE (the C4/UT1 production shape): each doc is screened
+        * against the list of its OWN identified language (`lang_id` from
+        * this pipeline's langid stage), via one broadcast
         * [[Toxicity.LangBank]]. Key "*" is the fallback for languages
-        * without a list (omit it to skip them). Mutually exclusive with
-        * `toxicity` (which screens every doc against one list). */
+        * without a list (omit it to skip them); one list for every doc is
+        * `Map("*" -> list)`. When set, docs over `toxicityMaxHits` drop
+        * with reason "toxicity" (evaluated AFTER every reference-derived
+        * rule, so their drop_reason attribution is unchanged), the output
+        * text is masked and an `n_toxic` column is surfaced. Default off —
+        * the reference pipeline is PII-only. */
       toxicityByLang: Option[Map[String, Seq[String]]] = None,
       /** Optional TRAINED quality classifier ([[QualityTrain.train]] /
         * [[QualityTrain.trainNg]] weights): when set, every doc gets a
@@ -152,34 +152,20 @@ object Pipeline {
 
     // toxicity (our extension — the reference is PII-only): lowest
     // priority, so every reference-derived drop_reason is attributed
-    // exactly as before; the count column exists only when enabled
-    // The COUNT always takes the broadcast automaton, whatever the list
-    // size: its nondeterministic guard keeps the scan at ONE evaluation
-    // per row when downstream keep-filters would otherwise clone the
-    // expression into FilterExec (the page_stages lesson — a deterministic
-    // regex count fed the drop chain and was re-evaluated per reference;
-    // measured in CurAb kept_ext). The SCRUB tier-dispatches: the codegen
-    // regex replace for curated lists ≤ RegexTierMax (output-only column,
-    // never cloned into predicates), the automaton past it (list-size
-    // independent — the UT1/LDNOOBW shape). All tiers implement the ONE
-    // pinned boundary/fold semantic, so routing never changes results —
-    // ToxicitySpec pins the equivalence.
-    require(conf.toxicity.isEmpty || conf.toxicityByLang.isEmpty,
-      "toxicity and toxicityByLang are mutually exclusive — put the " +
-        "global list under key \"*\" of toxicityByLang to combine")
-    val toxMatcher: Option[Broadcast[Toxicity.Matcher]] = conf.toxicity.map {
-      ws => pages.sparkSession.sparkContext.broadcast(Toxicity.Matcher(ws))
-    }
+    // exactly as before; the count column exists only when enabled.
+    // Count and mask both take the broadcast per-language automaton
+    // (O(|text|) whatever the list size; one list is the "*" entry). The
+    // count's nondeterministic guard keeps the scan at ONE evaluation per
+    // row when downstream keep-filters would otherwise clone the
+    // expression into FilterExec (the page_stages lesson of BENCH.md's 3M
+    // rehearsal; a deterministic regex count in the drop chain was likewise
+    // re-evaluated per reference, +582 cpu-s in the A/B SURVEY.md records).
     val toxBank: Option[Broadcast[Toxicity.LangBank]] = conf.toxicityByLang
       .map(m => pages.sparkSession.sparkContext
         .broadcast(Toxicity.LangBank(m)))
-    val toxCount: Option[Column] = (toxMatcher, toxBank) match {
-      case (Some(b), _) => Some(Toxicity.countUdf(b)(col("text")))
-      case (_, Some(b)) =>
-        // dispatch on the pipeline's OWN language id, not the claimed lang
-        Some(Toxicity.countByLangUdf(b)(col("lang_guess.lang"), col("text")))
-      case _ => None
-    }
+    // dispatch on the pipeline's OWN language id, not the claimed lang
+    val toxCount: Option[Column] =
+      toxBank.map(b => Toxicity.countByLangUdf(b)(col("lang_guess.lang"), col("text")))
     val (dropReasonFinal, toxCols) = toxCount match {
       case Some(n) =>
         (when(dropReason =!= lit(""), dropReason)
@@ -199,14 +185,10 @@ object Pipeline {
     // aliases from the fused stage, then the blocklist mask on top (the
     // north-rule's "PII/toxicity-scrub"); survivors under a lenient
     // toxicityMaxHits therefore never ship a listed term
-    val scrubbedOut = (conf.toxicity, toxMatcher, toxBank) match {
-      case (Some(ws), Some(b), _) =>
-        if (ws.size > Toxicity.RegexTierMax)
-          Toxicity.scrubUdf(b)(col("scrub.scrubbed"))
-        else Toxicity.scrub(col("scrub.scrubbed"), ws)
-      case (_, _, Some(b)) =>
+    val scrubbedOut = toxBank match {
+      case Some(b) =>
         Toxicity.scrubByLangUdf(b)(col("lang_guess.lang"), col("scrub.scrubbed"))
-      case _ => col("scrub.scrubbed")
+      case None => col("scrub.scrubbed")
     }
     // trained quality model (CCNet-style learned filter; see Conf docs):
     // materialized as a column FIRST so the drop_reason chain and the

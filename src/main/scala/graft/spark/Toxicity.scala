@@ -18,11 +18,13 @@ import org.apache.spark.sql.functions._
   *    pattern — native `regexp_count`/`regexp_replace` expressions that
   *    stay in whole-stage codegen AND have exact DuckDB equivalents, so
   *    the driver oracle reproduces counts and scrubbed text verbatim.
-  *    Right for curated lists up to a few hundred terms.
+  *    The oracle queries and the property reference use it.
   *  - the AUTOMATON tier compiles the list into an Aho-Corasick matcher
   *    with explicit word-boundary + lowercase checks — O(|text|) per doc
   *    regardless of list size, the shape that survives UT1/LDNOOBW-scale
   *    lists (hundreds of thousands of terms, where a regex union dies).
+  *    [[Pipeline.run]] counts and masks through it, one [[LangBank]]
+  *    whatever the list size (a single list is the "*" entry).
   *
   * The DEFAULT list is a deliberately small English placeholder — a
   * production run swaps in per-language curated lists (broadcast, like
@@ -179,17 +181,6 @@ object Toxicity {
   def countUdf(m: Broadcast[Matcher]) =
     udf { (t: String) => m.value.countIn(t) }.asNondeterministic()
 
-  /** Automaton-tier scrub UDF (null in, null out — mirrors [[scrub]]). */
-  def scrubUdf(m: Broadcast[Matcher], mask: String = "<TOXIC>") =
-    udf { (t: String) => m.value.scrubIn(t, mask) }.asNondeterministic()
-
-  /** Above this list size the pipeline routes through the automaton tier:
-    * a regex union's cost grows with the pattern while the automaton scan
-    * is O(|text|) regardless. A few hundred terms is where a Java
-    * alternation measurably falls behind; curated per-language lists
-    * (UT1/LDNOOBW) are 10k-400k terms and MUST take the automaton. */
-  val RegexTierMax = 64
-
   /** Per-language matcher bank: the C4/UT1 production shape — curated
     * blocklists are PER LANGUAGE, and a doc is screened against the list
     * of the language it was identified as (screening every doc against
@@ -242,6 +233,21 @@ object Toxicity {
         .map(_.trim).filter(w => w.nonEmpty && !w.startsWith("#"))
         .map(asciiLower).distinct.toVector
     } finally in.close()
+  }
+
+  /** The blocklist a `SPARK_GRAFT_TOXICITY` value names: "default" = the
+    * placeholder [[DefaultList]], "file:<path>" = a one-term-per-line
+    * list read with [[loadList]], anything else = an inline comma-separated
+    * list. An empty list fails naming the variable: [[LangBank]] would
+    * otherwise skip it silently and screen nothing. */
+  def listFromSpec(spark: org.apache.spark.sql.SparkSession, spec: String): Seq[String] = {
+    val ws = spec match {
+      case "default" => DefaultList
+      case f if f.startsWith("file:") => loadList(spark, f.stripPrefix("file:"))
+      case csv => csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    }
+    require(ws.nonEmpty, s"SPARK_GRAFT_TOXICITY names an empty blocklist: '$spec'")
+    ws
   }
 
   /** Deterministic UT1/LDNOOBW-scale placeholder list: `n` distinct

@@ -134,13 +134,13 @@ object ExprHelpers {
     // tagger's hits come AFTER the gazetteer's: Scrub.dedupSpans is a
     // stable (start, -len) sort, so on an identical span the dictionary
     // hit wins and the tagger only adds entities the dictionary lacks.
-    val (d, modelHits: Seq[graft.core.Hit]) =
-      if (!ner) (Scrub.scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv), Nil)
+    val modelHits: Seq[graft.core.Hit] =
+      if (!ner) Nil
       else {
         val gaz = graft.spark.NerSlot.defaultModel.hitsOf(t)
-        val hits = if (tagger == null) gaz else gaz ++ tagger.value.hitsOf(t)
-        (Scrub.scrubWithModeNerRaw(mode, t, keyB64, ns, policiesCsv, hits), hits)
+        if (tagger == null) gaz else gaz ++ tagger.value.hitsOf(t)
       }
+    val d = Scrub.scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv, modelHits)
     // unchanged scrub (scrubbed == null): forward the input UTF8String —
     // safe because the consuming projection copies the struct into its
     // UnsafeRow before the source advances to the next row (the same

@@ -82,6 +82,73 @@ object CorePropsSpec extends Properties("core") {
         (kind != "amount" || !orig.startsWith("JPY") || a1.startsWith("JPY"))
     }
 
+  // ---- moded scrub == a span-level reference --------------------------------
+
+  /** Model-NER-style hits inside `t`: a few random spans (they may overlap
+    * rule hits and each other), with kinds the rule patterns share or lack. */
+  private def modelHitsIn(t: String): Gen[List[Hit]] =
+    if (t.isEmpty) Gen.const(Nil)
+    else Gen.choose(0, 3).flatMap(Gen.listOfN(_, for {
+      a <- Gen.choose(0, t.length - 1)
+      b <- Gen.choose(a + 1, math.min(t.length, a + 12))
+      k <- Gen.oneOf("name", "org", "address", "misc", "email")
+    } yield Hit(k, t.substring(a, b), a, b, 0.9, "model:X")))
+
+  private val dictTags = Map("email" -> "EMAIL", "phone" -> "PHONE",
+    "amount" -> "AMOUNT", "id" -> "ID", "address" -> "ADDRESS",
+    "name" -> "PERSON", "org" -> "ORG", "misc" -> "MISC")
+
+  /** The moded scrub spelled out over spans: rule spans of the mode's
+    * policy-filtered order plus policy-filtered model hits, deduped, then
+    * spliced with the mode's alias rule. */
+  private def referenceScrub(mode: String, t: String, key: String,
+                             pol: String, model: Seq[Hit]): Scrub.DictResult = {
+    val names = Scrub.filteredOrder(
+      if (mode == "ref") Scrub.ReferenceOrder else Scrub.FullOrder, pol)
+    val kinds = pol.split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val spans = Scrub.dedupSpans(
+      Scrub.unionHits(t, names) ++ model.filter(h => pol.isEmpty || kinds(h.kind)))
+    // ref: an original keeps its first alias; dict: aliases are numbered
+    // per (tag, original) and, in first-occurrence order, name the original
+    val refAliases = scala.collection.mutable.Map.empty[String, String]
+    val byTagOrig = scala.collection.mutable.Map.empty[(String, String), String]
+    val perTag = scala.collection.mutable.Map.empty[String, Int]
+    val dictFirst = Vector.newBuilder[(String, String)]
+    val out = new java.lang.StringBuilder
+    var last = 0
+    spans.foreach { h =>
+      val alias = mode match {
+        case "tags" => "<" + h.kind.toUpperCase + ">"
+        case "ref" =>
+          refAliases.getOrElseUpdate(h.text, RefAlias.aliasWithJpyRule(h.kind, h.text, key, "ns"))
+        case "dict" =>
+          val tag = dictTags.getOrElse(h.kind, "PII")
+          byTagOrig.getOrElseUpdate((tag, h.text), {
+            perTag(tag) = perTag.getOrElse(tag, 0) + 1
+            val a = s"<${tag}_${perTag(tag)}>"
+            dictFirst += h.text -> a
+            a
+          })
+      }
+      out.append(t, last, h.start).append(alias)
+      last = h.end
+    }
+    out.append(t, last, t.length)
+    val aliases = if (mode == "ref") refAliases.toMap else dictFirst.result().toMap
+    Scrub.DictResult(out.toString, aliases,
+      spans.groupBy(_.kind).map { case (k, hs) => k -> hs.size.toLong })
+  }
+
+  property("scrubWithMode == span-level reference in every mode, policy and hit set") =
+    forAll(text.flatMap(t => modelHitsIn(t).map(t -> _)),
+      Gen.oneOf("dict", "tags", "ref"),
+      Gen.oneOf("", "email", "name,address", "phone,org,id")) {
+      case ((t, model), mode, pol) =>
+        val key = "Z3JhZnQtc3BhcmstcGlpLWRlZmF1bHQta2V5IQ=="
+        Scrub.scrubWithMode(mode, t, key, "ns", pol, model) ==
+          referenceScrub(mode, t, key, pol, model)
+    }
+
   // ---- linear union scan == the unguarded reference union -----------------
 
   /** Glued tokens skewed to email, digit and JP alphabets, so local-part runs

@@ -34,7 +34,7 @@ class ScrubSpec extends AnyFunSuite {
       mh("org", "ex.com", 7),       // inside the email span → dropped
       mh("org", "Example Corp", 18) // clean region → replaced
     )
-    val d = Scrub.scrubWithModeNer("dict", text, key, "ns", "", hits)
+    val d = Scrub.scrubWithMode("dict", text, key, "ns", "", hits)
     assert(d.scrubbed == "mail <EMAIL_1> and <ORG_1>", d.scrubbed)
     assert(d.counts == Map("email" -> 1L, "org" -> 1L), d.counts)
     assert(d.aliases == Map("a@ex.com" -> "<EMAIL_1>", "Example Corp" -> "<ORG_1>"))
@@ -45,7 +45,7 @@ class ScrubSpec extends AnyFunSuite {
     val text = "ref ACC-12345-EXT done"
     // rule id matches ACC-12345 at [4,13); a model hit covers [4,17)
     val hits = Seq(Hit("org", "ACC-12345-EXT", 4, 17, 0.9, "model:ORG"))
-    val d = Scrub.scrubWithModeNer("dict", text, key, "ns", "", hits)
+    val d = Scrub.scrubWithMode("dict", text, key, "ns", "", hits)
     assert(d.scrubbed == "ref <ORG_1> done", d.scrubbed)
     assert(d.counts == Map("org" -> 1L))
   }
@@ -54,13 +54,9 @@ class ScrubSpec extends AnyFunSuite {
     val key = "Z3JhZnQtc3BhcmstcGlpLWRlZmF1bHQta2V5IQ=="
     val text = "mail a@ex.com and Example Corp"
     val hits = Seq(Hit("org", "Example Corp", 18, 30, 0.9, "model:ORG"))
-    val d = Scrub.scrubWithModeNer("dict", text, key, "ns", "email", hits)
+    val d = Scrub.scrubWithMode("dict", text, key, "ns", "email", hits)
     assert(d.scrubbed == "mail <EMAIL_1> and Example Corp", d.scrubbed)
     assert(d.counts == Map("email" -> 1L))
-    // and the degenerate no-model-hits case equals the rule-only dispatch
-    val a = Scrub.scrubWithModeNer("dict", text, key, "ns", "", Nil)
-    val b = Scrub.scrubWithMode("dict", text, key, "ns", "")
-    assert(a == b)
   }
 
   test("merged NER scrub in ref mode aliases model kinds via RefAlias branches") {
@@ -69,14 +65,24 @@ class ScrubSpec extends AnyFunSuite {
     val hits = Seq(
       Hit("name", "山田太郎", 3, 7, 0.9, "model:PER"),
       Hit("org", "Example Corp", 11, 23, 0.9, "model:ORG"))
-    val d = Scrub.scrubWithModeNer("ref", text, key, "ns", "", hits)
+    val d = Scrub.scrubWithMode("ref", text, key, "ns", "", hits)
     // name branch: "family given" from the embedded word lists; org falls
     // back to the misc draw — both deterministic for a fixed (key, ns)
     assert(!d.scrubbed.contains("山田太郎") && !d.scrubbed.contains("Example Corp"),
       d.scrubbed)
     assert(d.counts == Map("name" -> 1L, "org" -> 1L))
-    val again = Scrub.scrubWithModeNer("ref", text, key, "ns", "", hits)
+    val again = Scrub.scrubWithMode("ref", text, key, "ns", "", hits)
     assert(d == again)
+  }
+
+  test("an unknown scrub mode fails at once, hit or no hit") {
+    val key = "Z3JhZnQtc3BhcmstcGlpLWRlZmF1bHQta2V5IQ=="
+    val hit = Seq(Hit("org", "Example Corp", 0, 12, 0.9, "model:ORG"))
+    for ((t, hits) <- Seq("" -> Nil, "Example Corp here" -> Nil,
+        "Example Corp here" -> hit, "Example Corp, mail a@ex.com" -> Nil)) {
+      val e = intercept[RuntimeException](Scrub.scrubWithMode("dcit", t, key, "ns", "", hits))
+      assert(e.getMessage == "unknown scrub mode: dcit")
+    }
   }
 
   test("trigger prefilter never changes scrub output") {

@@ -89,7 +89,7 @@ class CurationSpec extends AnyFunSuite {
         "and then move on to other work without any delay at all.", "en"))
       .toDF("url", "warc_ts", "html", "text", "lang")
     val conf = Pipeline.Conf(security = Pipeline.SecurityLevel.Enhanced,
-      trainedNer = Some(tagger), toxicity = Some(Toxicity.DefaultList))
+      trainedNer = Some(tagger), toxicityByLang = Some(Map("*" -> Toxicity.DefaultList)))
     val (curated, r) = Curation.curate(spark, base.unionByName(toxic), conf,
       inputRows = Some(301L))
     assert(r.kept <= r.input && r.afterNearDup <= r.kept)

@@ -37,7 +37,7 @@ class NerTagSpec extends AnyFunSuite {
       s"tagger missed the unseen name; hits=$hits")
     // merged into the ENHANCED scrub: the name must be aliased away
     val c = Pipeline.Conf()
-    val r = graft.core.Scrub.scrubWithModeNer("dict", text, c.keyB64, c.ns,
+    val r = graft.core.Scrub.scrubWithMode("dict", text, c.keyB64, c.ns,
       "", NerSlot.defaultModel.hitsOf(text) ++ hits)
     assert(!r.scrubbed.contains("森本太郎"), s"leaked: ${r.scrubbed}")
     assert(r.scrubbed.contains("<PERSON_"), s"no person alias: ${r.scrubbed}")
@@ -95,7 +95,7 @@ class NerTagSpec extends AnyFunSuite {
       rows.foreach { r =>
         val t = texts(r.getString(0))
         val hits = NerSlot.defaultModel.hitsOf(t) ++ model.hitsOf(t)
-        val want = graft.core.Scrub.scrubWithModeNer(mode, t, conf.keyB64, conf.ns, "", hits)
+        val want = graft.core.Scrub.scrubWithMode(mode, t, conf.keyB64, conf.ns, "", hits)
         val got = r.getSeq[org.apache.spark.sql.Row](4).map(h => graft.core.Hit(
           h.getString(0), h.getString(1), h.getInt(2), h.getInt(3), h.getDouble(4),
           h.getString(5)))

@@ -72,7 +72,8 @@ object ToxicityPropsSpec extends Properties("toxicity") {
     forAll(wordList.flatMap(ws => textFor(ws).map(ws -> _)),
       Gen.oneOf("en", "ja", "xx", null: String)) {
       case ((ws, t), lang) =>
-        Toxicity.LangBank(Map("*" -> ws)).countIn(lang, t) ==
-          Toxicity.Matcher(ws).countIn(t)
+        val bank = Toxicity.LangBank(Map("*" -> ws))
+        val m = Toxicity.Matcher(ws)
+        bank.countIn(lang, t) == m.countIn(t) && bank.scrubIn(lang, t) == m.scrubIn(t)
     }
 }

@@ -63,7 +63,7 @@ class ToxicitySpec extends AnyFunSuite {
           "then move on to other work without any delay at all.", "en"))
       .toDF("url", "warc_ts", "html", "text", "lang")
     val out = Pipeline.run(spark, pages,
-      Pipeline.Conf(toxicity = Some(Toxicity.DefaultList)))
+      Pipeline.Conf(toxicityByLang = Some(Map("*" -> Toxicity.DefaultList))))
       .select("url", "keep", "drop_reason", "n_toxic")
       .collect().map(r => r.getString(0) ->
         (r.getBoolean(1), r.getString(2), r.getLong(3))).toMap
@@ -76,7 +76,7 @@ class ToxicitySpec extends AnyFunSuite {
     // lenient threshold: the survivor's OUTPUT text carries the mask —
     // PII/toxicity-scrub means a kept doc never ships a listed term
     val lenient = Pipeline.run(spark, pages, Pipeline.Conf(
-      toxicity = Some(Toxicity.DefaultList), toxicityMaxHits = 5L))
+      toxicityByLang = Some(Map("*" -> Toxicity.DefaultList)), toxicityMaxHits = 5L))
       .where(col("url") === "https://t.example/1")
       .select("keep", "scrubbed_text").head()
     assert(lenient.getBoolean(0))
@@ -84,14 +84,13 @@ class ToxicitySpec extends AnyFunSuite {
       !lenient.getString(1).contains("damn"), lenient.getString(1))
   }
 
-  test("pipeline routes large lists through the automaton tier, " +
-      "results identical to the regex tier") {
+  test("a 100-term list gives the same pipeline output as its two hot terms") {
     import spark.implicits._
-    // 100 terms (> RegexTierMax = 64) forces the automaton path; the same
-    // conf minus padding stays on the regex path — outputs must agree
+    // the 98 padding terms occur in neither page, so the output must equal
+    // the run over the two terms that do
     val hot = Seq("damn", "hell")
     val bigList = hot ++ Toxicity.syntheticList(98)
-    assert(bigList.size > Toxicity.RegexTierMax)
+    assert(bigList.distinct.size == 100)
     val pages = Seq(
       ("https://t.example/1", new java.sql.Timestamp(0L), Array.empty[Byte],
         "The library opens at nine in the morning and closes at eight in " +
@@ -102,19 +101,17 @@ class ToxicitySpec extends AnyFunSuite {
           "the evening. Most readers scan the first page of a report and " +
           "then move on to other work without any delay at all.", "en"))
       .toDF("url", "warc_ts", "html", "text", "lang")
-    val viaAutomaton = Pipeline.run(spark, pages,
-      Pipeline.Conf(toxicity = Some(bigList), toxicityMaxHits = 5L))
+    def run(ws: Seq[String]) = Pipeline.run(spark, pages,
+      Pipeline.Conf(toxicityByLang = Some(Map("*" -> ws)), toxicityMaxHits = 5L))
       .select("url", "keep", "n_toxic", "scrubbed_text")
       .collect().map(r => r.getString(0) ->
         (r.getBoolean(1), r.getLong(2), r.getString(3))).toMap
-    val viaRegex = Pipeline.run(spark, pages,
-      Pipeline.Conf(toxicity = Some(hot), toxicityMaxHits = 5L))
-      .select("url", "keep", "n_toxic", "scrubbed_text")
-      .collect().map(r => r.getString(0) ->
-        (r.getBoolean(1), r.getLong(2), r.getString(3))).toMap
-    assert(viaAutomaton == viaRegex,
-      "automaton-tier pipeline diverged from the regex-tier pipeline")
-    assert(viaAutomaton("https://t.example/1")._3.contains("<TOXIC>"))
+    val big = run(bigList)
+    assert(big == run(hot), "the 100-term list diverged from its hot terms")
+    assert(big("https://t.example/1") ==
+      ((true, 1L, "The library opens at nine in the morning and closes at eight in " +
+        "the evening. Most readers scan the first <TOXIC> page of a report " +
+        "and then move on to other work without any delay at all.")))
   }
 
   test("automaton scrub masks boundary-valid occurrences only") {
@@ -167,11 +164,6 @@ class ToxicitySpec extends AnyFunSuite {
       .where(col("url") === "https://t.example/es")
       .select("n_toxic", "scrubbed_text").head()
     assert(withStar.getLong(0) == 1L && withStar.getString(1).contains("<TOXIC>"))
-    // the two toxicity confs are mutually exclusive
-    intercept[IllegalArgumentException] {
-      Pipeline.run(spark, pages, Pipeline.Conf(
-        toxicity = Some(Seq("damn")), toxicityByLang = Some(bank)))
-    }
   }
 
   test("loadList reads the UT1 one-term-per-line format, folds and dedupes") {
@@ -182,6 +174,18 @@ class ToxicitySpec extends AnyFunSuite {
     assert(ws == Vector("damn", "hell", "crap", "zot"))
     // loaded list drives both tiers like any other
     assert(Toxicity.Matcher(ws).countIn("damn that Hell, zot!") == 3L)
+  }
+
+  test("listFromSpec parses SPARK_GRAFT_TOXICITY: default, file:, CSV, empty fails") {
+    assert(Toxicity.listFromSpec(spark, "default") == Toxicity.DefaultList)
+    val f = java.nio.file.Files.createTempFile("graft-toxspec", ".txt")
+    java.nio.file.Files.writeString(f, "# list\nDamn\nzot\n")
+    assert(Toxicity.listFromSpec(spark, s"file:$f") == Vector("damn", "zot"))
+    assert(Toxicity.listFromSpec(spark, " damn, ,hell ") == Seq("damn", "hell"))
+    val empty = intercept[IllegalArgumentException](Toxicity.listFromSpec(spark, " , "))
+    assert(empty.getMessage.contains("SPARK_GRAFT_TOXICITY"), empty.getMessage)
+    java.nio.file.Files.writeString(f, "# only a comment\n")
+    intercept[IllegalArgumentException](Toxicity.listFromSpec(spark, s"file:$f"))
   }
 
   test("duplicate blocklist entries count once in BOTH tiers") {

@@ -181,7 +181,7 @@ print(f"wrote {OUT}/ner_model.parquet ({ner_rows})")
 
 # ---------------------------------------------------------------------------
 # q_scrub_enhanced expected: the ENHANCED-level merged scrub (Scrub.
-# scrubWithModeNer, mode=dict, no policies) — regex-union spans over the
+# scrubWithMode with model hits, mode=dict, no policies) — regex-union spans over the
 # FullOrder pattern list merged with gazetteer model hits via the stable
 # (start, -len) sort + greedy span dedup, then dict-aliased in one splice.
 FULL_ORDER = [("email", RE_EMAIL), ("phone", RE_PHONE), ("amount", RE_AMOUNT),

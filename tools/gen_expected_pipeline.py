@@ -219,7 +219,7 @@ def write(path, rs):
 
 write(f"{OUT}/pipeline.parquet", rows)
 
-# ---- ENHANCED variant: merged model-NER scrub (Scrub.scrubWithModeNer twin)
+# ---- ENHANCED variant: merged model-NER scrub (Scrub.scrubWithMode-with-model-hits twin)
 import gzip
 HF2PII = {"PER": "name", "ORG": "org", "LOC": "address", "MISC": "misc"}
 DICT_TAG = {"email": "EMAIL", "phone": "PHONE", "amount": "AMOUNT", "id": "ID",
