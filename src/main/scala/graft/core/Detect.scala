@@ -14,10 +14,11 @@ import scala.collection.immutable.VectorBuilder
   */
 object Detect {
 
-  /** One detector: a pattern name, run alone as a one-pattern scan, with the
-    * reference's fixed confidence and reason. */
+  /** One detector: a pattern, scanned alone, with the reference's fixed
+    * confidence and reason. */
   private final class Detector(name: String, val conf: Double, val reason: String) {
-    val names: Seq[String] = Vector(name)
+    val bit: Int = 1 << Patterns.indexOf(name)
+    val kind: String = Scrub.kindOf(name)
   }
 
   private val regexDetectors = Vector(
@@ -38,12 +39,13 @@ object Detect {
   /** All hits of each detector in turn, through [[Scrub]]'s scan loop. One
     * trigger scan of the text prunes the detectors that could not match. */
   private def detect(detectors: Vector[Detector], text: String): Vector[Hit] = {
-    val mask = Scrub.triggerMask(text)
+    val a = Scrub.chars(text)
+    val n = text.length
+    val enabled = Scrub.triggeredBits(a, n)
     val out = new VectorBuilder[Hit]
     detectors.foreach { d =>
-      val prep = Scrub.prepared(d.names, mask)
-      Scrub.forEachHit(prep, text, { (i, start, end) =>
-        out += Hit(prep.kinds(i), text.substring(start, end), start, end, d.conf, d.reason)
+      Scrub.scan(a, n, d.bit & enabled, { (_, start, end) =>
+        out += Hit(d.kind, text.substring(start, end), start, end, d.conf, d.reason)
       })
     }
     out.result()

@@ -25,21 +25,29 @@ final case class LangIdModel(
     defaultLogProb: Array[Double]
 ) extends Serializable {
 
-  // open-address index over gramKeys, rebuilt lazily per JVM after broadcast
-  // deserialization (1 probe vs ~15 binary-search steps per gram lookup)
-  @transient private lazy val (idxTable, idxMask) = {
-    var cap = Integer.highestOneBit(gramKeys.length * 4 - 1) << 1
+  // open-address table of the gram keys, rebuilt lazily per JVM after
+  // broadcast deserialization: slot i holds a key at 2i and its row offset
+  // (row × |langs|) at 2i+1, so a probe reads one cache line; an empty slot
+  // holds key 0 (no gram packs to 0) and the offset of the default row. At
+  // most 1/8 of the slots are full, so the probe for an unseen gram (most
+  // 3-grams) mostly ends at its first slot.
+  @transient private lazy val (gramSlots, gramMask) = {
+    var cap = Integer.highestOneBit(gramKeys.length * 8 - 1) << 1
     if (cap < 16) cap = 16
-    val table = Array.fill(cap)(-1)
     val mask = cap - 1
+    val slots = new Array[Long](2 * cap)
+    val nl = langs.length.toLong
+    var i = 0
+    while (i < cap) { slots(2 * i + 1) = defaultRow * nl; i += 1 }
     var r = 0
     while (r < gramKeys.length) {
-      var i = (mixHash(gramKeys(r)) & mask).toInt
-      while (table(i) >= 0) i = (i + 1) & mask
-      table(i) = r
+      i = (mixHash(gramKeys(r)) & mask).toInt
+      while (slots(2 * i) != 0L) i = (i + 1) & mask
+      slots(2 * i) = gramKeys(r)
+      slots(2 * i + 1) = r * nl
       r += 1
     }
-    (table, mask)
+    (slots, mask.toLong)
   }
 
   private def mixHash(x0: Long): Long = {
@@ -56,20 +64,20 @@ final case class LangIdModel(
   // pattern it cannot predict (costs one copy of the log-probs per JVM)
   @transient private lazy val rows: Array[Double] = gramLogProbs ++ defaultLogProb
 
-  /** Row of `key` in `table` (the index), or [[defaultRow]]. */
-  private def lookup(table: Array[Int], mask: Long, key: Long): Int = {
+  /** Row offset of `key` in `slots`, or of [[defaultRow]]. The first slot
+    * of a key's probe sequence wins, so among equal keys the lowest row. */
+  private def offsetOf(slots: Array[Long], mask: Long, key: Long): Int = {
     var i = (mixHash(key) & mask).toInt
     while (true) {
-      val r = table(i)
-      if (r < 0) return defaultRow
-      if (gramKeys(r) == key) return r
+      val k = slots(2 * i)
+      if (k == key || k == 0L) return slots(2 * i + 1).toInt
       i = ((i + 1) & mask).toInt
     }
-    defaultRow
+    0
   }
 
   // unigram rows by char: one load instead of a hash probe. The lowest row
-  // of a key wins, as in the probe order of idxTable.
+  // of a key wins, as in the probe order of gramSlots.
   @transient private lazy val uniRow: Array[Int] = {
     val table = Array.fill(65536)(defaultRow)
     var r = gramKeys.length - 1
@@ -118,7 +126,7 @@ final case class LangIdModel(
     *
     * Per position the 1-, 2- and 3-gram keys are built by adding the next
     * char to the shorter key; unigrams are looked up in a per-char row
-    * table, 2- and 3-grams in the open-address index. Each language's score
+    * table, 2- and 3-grams in the open-address key table. Each language's score
     * sums its log-probs in a fixed order (position, then gram length 1, 2,
     * 3; unseen grams add the default), so the result is bit-for-bit
     * reproducible. */
@@ -129,8 +137,8 @@ final case class LangIdModel(
     val len = LangId.normalize(text, t)
     val offs = scratch.offs
     val uni = uniRow
-    val table = idxTable
-    val mask = idxMask
+    val slots = gramSlots
+    val mask = gramMask
     var n = 0
     var pos = 0
     while (pos < len) {
@@ -139,10 +147,10 @@ final case class LangIdModel(
       n += 1
       if (pos + 1 < len) {
         val k2 = c0.toLong | (t(pos + 1).toLong << 16)
-        offs(n) = lookup(table, mask, (2L << 48) | k2) * nl
+        offs(n) = offsetOf(slots, mask, (2L << 48) | k2)
         n += 1
         if (pos + 2 < len) {
-          offs(n) = lookup(table, mask, (3L << 48) | k2 | (t(pos + 2).toLong << 32)) * nl
+          offs(n) = offsetOf(slots, mask, (3L << 48) | k2 | (t(pos + 2).toLong << 32))
           n += 1
         }
       }

@@ -1,55 +1,56 @@
 package graft.core
 
-import java.util.regex.Pattern
 import scala.collection.mutable
 
-/** Single-pass union-regex replacement — the core scrub operator.
+/** Single-pass union replacement — the core scrub operator.
   *
   * Port of `_inline_replace_line` (reference: app/main.py:100-131): the
   * policy-enabled patterns are joined as `(p1)|(p2)|...` in a FIXED order and
-  * applied in ONE left-to-right pass; the replacement kind is dispatched by
-  * the first non-null capture group. Single-pass means replaced spans are
-  * never re-scanned — essential because reference phone/id aliases are
-  * themselves pattern-shaped (app/alias.py:14,16). At equal start offsets the
-  * earlier-listed pattern wins; overlaps resolve leftmost-first. All inner
-  * groups of the ported patterns are non-capturing, so group i ↔ pattern i.
+  * applied in ONE left-to-right pass; the replacement kind is the kind of the
+  * alternative that matched. Single-pass means replaced spans are never
+  * re-scanned — essential because reference phone/id aliases are themselves
+  * pattern-shaped (app/alias.py:14,16). At equal start offsets the
+  * earlier-listed pattern wins; overlaps resolve leftmost-first.
   *
-  * Every regex PII scan — this scrub, its span view [[unionHits]] and the
-  * per-pattern scans of [[Detect]] — runs through one loop, [[forEachHit]],
-  * which keeps each scan linear in the document length. Email is guarded to
-  * run starts (see [[Patterns]]): the union tries it only where the previous
-  * char is not a local-part char. An unguarded scan also tries email where
-  * it RESUMES inside a local-part run, i.e. right after a match that ended
-  * between two local-part chars; the loop makes up for exactly that case by
-  * trying the unguarded [[Patterns.EmailBody]] anchored there. Email is the
-  * first alternative, so a success is the match CPython returns at that
-  * offset. A failure holds for the whole run (every offset of a run reaches
-  * the same `@` and domain), so the loop records the run's end and later
-  * resumes inside it skip the check. Elsewhere the guard only removes
-  * email attempts the unguarded union already knew to fail, so the
-  * leftmost-first result is unchanged. A guard-only alternative,
-  * `(?:(?<![A-Za-z0-9._%+-])|\G)`, stays quadratic: `\G` re-reads the rest of
-  * the run after every digit-pattern match inside it.
+  * No regex engine runs the union. Every PII scan — this scrub, its span view
+  * [[unionHits]] and the per-pattern scans of [[Detect]] — goes through one
+  * loop, [[scan]], over the text's chars:
+  *  - Pattern i of [[Patterns.byName]] is bit i of a scan mask. Every scan
+  *    order ([[FullOrder]], [[ReferenceOrder]], their policy filters and
+  *    Detect's single patterns) keeps [[FullOrder]]'s relative order, so an
+  *    order is just the set of its bits, and the lowest set bit is the
+  *    alternative the union tries first.
+  *  - The enabled mask is the order's bits AND the patterns whose trigger
+  *    units all occur in the text ([[triggeredBits]], one table load per
+  *    unit): a pattern without them cannot match, so this only prunes work.
+  *  - At each offset the loop ANDs the enabled mask with the start table
+  *    [[Patterns.starts]] of the unit there and tries the set bits, lowest
+  *    first, with the hand-written matcher of each ([[Patterns.matchAt]]).
+  *    The first that returns an end is the union's match at that offset;
+  *    the scan resumes at its end, or at the next unit if none matched.
+  *  - Email depends only on where the local-part run through the offset
+  *    ends (see [[Patterns]]), so the loop evaluates it once per run and
+  *    reuses the result at every later offset of the run, including where a
+  *    scan resumes inside the run after another pattern's match.
+  *  - Inside a local-part run whose email failed, the loop skips to the
+  *    next unit where another pattern can start.
+  * Each offset costs a table load and, where a bit is set, matchers whose
+  * work is bounded by the repetition windows of their pattern, and each
+  * local-part and email-domain run is read once; so a scan is linear in the
+  * text.
   *
-  * The loop does not call `find()` on the whole union: Java's `find` has no
-  * first-char filter for an alternation and would try every alternative at
-  * every offset. Instead each [[Prepared]] scan holds a start table, one
-  * bitmask per UTF-16 unit of the patterns whose start class
-  * ([[Patterns.byName]]) contains that unit, and the loop runs a regex only
-  * at offsets with a non-zero mask: the sub-union of just the masked
-  * patterns, anchored there (`region` + `lookingAt`) with transparent
-  * bounds, so lookbehinds and `\b` still see the text before the offset.
-  * Surrogate units dispatch to every pattern (`\d`/`\s` match
-  * supplementary code points). The result is the union's: a pattern
-  * outside the mask cannot match at that offset, which holds only while
-  * every start class is a superset of its pattern's first chars.
+  * The moded scrub ([[scrubWithModeRaw]]) splices the aliases of one
+  * [[Aliases]] state into a char array copied in bulk from the input's
+  * chars (the backing array of a [[CharsView]]), and looks up a repeated
+  * original by hashing its chars in place, so a hit allocates only what the
+  * output keeps: a new original's String and the result maps.
   *
   * Three alias modes:
-  *  - [[Scrub.scrubTags]]   — fixed `<KIND>` tokens (oracle-friendly);
-  *  - [[Scrub.scrubDict]]   — north-star `<PERSON_1>`-style numbered aliases
-  *                            with a per-document alias dictionary;
-  *  - [[Scrub.scrubRef]]    — reference HMAC-seeded aliases ([[RefAlias]]),
-  *                            including the JPY reformat branch.
+  *  - `tags` — fixed `<KIND>` tokens (oracle-friendly; [[scrubTags]]);
+  *  - `dict` — north-star `<PERSON_1>`-style numbered aliases with a
+  *    per-document alias dictionary ([[scrubDict]]);
+  *  - `ref`  — reference HMAC-seeded aliases ([[RefAlias]]), including the
+  *    JPY reformat branch ([[scrubRef]]).
   */
 object Scrub {
 
@@ -58,305 +59,223 @@ object Scrub {
 
   /** Extended order for the full pipeline: reference regexes first, then the
     * rule-NER patterns in their evaluation order (our canonical extension for
-    * the north-star entity classes: names, postal addresses, ...). */
+    * the north-star entity classes: names, postal addresses, ...). It is the
+    * order of [[Patterns.byName]]: bit i of a scan mask is `FullOrder(i)`. */
   val FullOrder: Vector[String] =
     ReferenceOrder ++ Vector("postal", "address", "name_kanji", "name_hiragana", "name_katakana")
+  require(FullOrder == Patterns.byName.map(_._1))
 
   /** Map pattern name → alias kind (postal hits alias as address; the three
     * name patterns alias as name — matching the NER hit types). */
-  def kindOf(patternName: String): String =
-    Patterns.byName.collectFirst { case (`patternName`, _, k, _) => k }.get
+  def kindOf(patternName: String): String = Patterns.byName(Patterns.indexOf(patternName))._2
 
-  /** Per-thread matcher reuse for [[Patterns.EmailBody]]: `Pattern.matcher`
-    * allocates per call (matcher + group arrays), and `reset(text)` reuses the
-    * internal arrays. Matchers are NOT thread-safe — hence per-thread. */
-  private val emailBody =
-    ThreadLocal.withInitial[java.util.regex.Matcher](() => Patterns.EmailBody.matcher(""))
+  private val patternKind: Array[String] = Patterns.byName.map(_._2).toArray
 
-  /** Trigger classes per pattern: a pattern cannot match unless the text
-    * contains at least one of its trigger characters, so one cheap char scan
-    * prunes the expensive union-regex pass (the standard prefilter trick;
-    * semantics unchanged — pruned patterns could not have matched). Triggers:
-    * email needs '@'; phone/amount/id/postal need a digit; address/name need
-    * a CJK/kana codepoint. */
-  private val needsAt = Set("email")
-  private val needsDigit = Set("phone", "amount", "id", "postal")
-  // name/address classes: kana from U+3040, CJK from U+4E00; U+3000-block
-  // punctuation (〒 U+3012) also lives here — postal's 〒 prefix is optional
-  // so postal stays digit-triggered
-  private def isJpTrigger(c: Char): Boolean = c >= '　'
+  private val FullBits = (1 << FullOrder.size) - 1
+  private val RefBits = (1 << ReferenceOrder.size) - 1
 
-  /** Trigger bitmask of a text: bit0 '@', bit1 digit, bit2 CJK/kana.
-    * `\d` also matches supplementary digits (e.g. U+1D7CF), so a high
-    * surrogate sets the digit bit when its code point is a digit. */
-  private[core] def triggerMask(text: CharSequence): Int = {
+  private val orderBitsCache = new java.util.concurrent.ConcurrentHashMap[Seq[String], Integer]()
+
+  /** The scan mask of a pattern order, which must keep [[FullOrder]]'s
+    * relative order (the union tries the patterns in that order). */
+  private def orderBits(names: Seq[String]): Int =
+    if (names eq FullOrder) FullBits
+    else if (names eq ReferenceOrder) RefBits
+    else orderBitsCache.computeIfAbsent(names, { ns =>
+      val idx = ns.map(Patterns.indexOf)
+      require(idx.sliding(2).forall(p => p.size < 2 || p(0) < p(1)),
+        s"a scan order must follow FullOrder: $ns")
+      Integer.valueOf(idx.foldLeft(0)((m, i) => m | (1 << i)))
+    }).intValue
+
+  /** The chars of `text`: a [[CharsView]]'s backing array as is, else a copy. */
+  private[core] def chars(text: CharSequence): Array[Char] = text match {
+    case v: CharsView => v.array
+    case s: String => s.toCharArray
+    case t =>
+      val a = new Array[Char](t.length)
+      var i = 0
+      while (i < a.length) { a(i) = t.charAt(i); i += 1 }
+      a
+  }
+
+  /** Trigger class of each UTF-16 unit: 1 '@'; 2 a digit; 4 a CJK/kana
+    * unit (any unit from U+3000: kana from U+3040, CJK from U+4E00, and the
+    * U+3000-block punctuation — 〒 U+3012 is here, but postal's 〒 prefix
+    * is optional, so postal stays digit-triggered); 8 one of `都道府県`;
+    * 16 ','; 32 a high surrogate. */
+  private val triggerClass: Array[Byte] = Array.tabulate(65536) { u =>
+    val c = u.toChar
+    ((if (c == '@') 1 else 0) | (if (CharClass.isDigit(c)) 2 else 0) |
+      (if (c >= '　') 4 else 0) | (if ("都道府県".indexOf(c) >= 0) 8 else 0) |
+      (if (c == ',') 16 else 0) | (if (Character.isHighSurrogate(c)) 32 else 0)).toByte
+  }
+  private final val AllTriggers = 31
+
+  /** Trigger bitmask of a text: the OR of its units' [[triggerClass]]
+    * bits 1-16. `\d` also matches supplementary digits (e.g. U+1D7CF), so a
+    * high surrogate sets the digit bit when its code point is a digit. One
+    * table load per unit, until every bit is set. */
+  private def triggerMaskOf(a: Array[Char], n: Int): Int = {
+    val cls = triggerClass
     var mask = 0
     var i = 0
-    val n = text.length
-    while (i < n && mask != 7) {
-      val c = text.charAt(i)
-      if (c == '@') mask |= 1
-      else if (CharClass.isDigit(c)) mask |= 2
-      else if (isJpTrigger(c)) {
-        mask |= 4
-        if (Character.isHighSurrogate(c) && Character.isDigit(Character.codePointAt(text, i)))
-          mask |= 2
-      }
+    while (i < n && mask != AllTriggers) {
+      val t = cls(a(i))
+      mask |= t & AllTriggers
+      if (t > AllTriggers && i + 1 < n && Character.isLowSurrogate(a(i + 1)) &&
+          Character.isDigit(Character.toCodePoint(a(i), a(i + 1))))
+        mask |= 2
       i += 1
     }
     mask
   }
 
-  private def filterByMask(names: Seq[String], mask: Int): Seq[String] =
-    names.filter { n =>
-      if (needsAt(n)) (mask & 1) != 0
-      else if (needsDigit(n)) (mask & 2) != 0
-      else (mask & 4) != 0
+  private[core] def triggerMask(text: CharSequence): Int =
+    triggerMaskOf(chars(text), text.length)
+
+  /** The patterns whose trigger units all occur in `a(0 until n)`: a
+    * pattern cannot match without them. email needs '@'; phone, id and
+    * postal a digit; amount a digit and ','; the names a CJK/kana unit;
+    * address a CJK unit and one of `都道府県`. */
+  private[core] def triggeredBits(a: Array[Char], n: Int): Int = {
+    val m = triggerMaskOf(a, n)
+    var bits = 0
+    if ((m & 1) != 0) bits |= 1 << Patterns.Email
+    if ((m & 2) != 0) {
+      bits |= (1 << Patterns.Phone) | (1 << Patterns.Id) | (1 << Patterns.Postal)
+      if ((m & 16) != 0) bits |= 1 << Patterns.Amount
     }
-
-  /** The prepared scan of one pattern list: its hit kinds, its start table
-    * and the compiled sub-unions [[forEachHit]] dispatches to. Built once
-    * per distinct list and immutable after — the per-ROW work is one cache
-    * lookup + array index, no collection allocation. */
-  private[core] final class Prepared(val names: Seq[String]) {
-    /** Hit kind of pattern i. */
-    val kinds: Array[String] = names.map(kindOf).toArray
-    /** Email is the first alternative: [[forEachHit]]'s resume rule applies. */
-    val emailFirst: Boolean = names.headOption.contains("email")
-    private val all = (1 << names.size) - 1
-
-    /** Start table: bit i of `starts(c)` is set iff pattern i can start at
-      * UTF-16 unit c (its start class, [[Patterns.byName]]). Surrogates get
-      * every bit: `\d`/`\s` read the code point at a high surrogate, and the
-      * union's `find()` tries low-surrogate offsets too. */
-    private[core] val starts: Array[Short] = {
-      val classes = names.map(Patterns.startClass).toArray
-      Array.tabulate(65536) { u =>
-        val c = u.toChar
-        if (Character.isSurrogate(c)) all.toShort
-        else {
-          var m = 0
-          var i = 0
-          while (i < classes.length) { if (classes(i)(c)) m |= 1 << i; i += 1 }
-          m.toShort
-        }
-      }
+    if ((m & 4) != 0) {
+      bits |= (1 << Patterns.NameKanji) | (1 << Patterns.NameHiragana) |
+        (1 << Patterns.NameKatakana)
+      if ((m & 8) != 0) bits |= 1 << Patterns.Address
     }
-
-    /** Sub-union per reachable mask — every value of [[starts]] and, with
-      * email, its email-less variant: the masked patterns joined as
-      * `(p1)|(p2)|...` in list order, so leftmost-first order is kept. */
-    private val subs = new Array[Pattern](all + 1)
-    /** Group g + 1 of `subs(mask)` ↔ pattern index `subIndex(mask)(g)`. */
-    private val subIndex = new Array[Array[Int]](all + 1)
-    locally {
-      val masks = starts.iterator.map(_.toInt)
-        .flatMap(m => if (emailFirst) Iterator(m, m & ~1) else Iterator(m)).toSet - 0
-      masks.foreach { m =>
-        val idx = names.indices.filter(i => (m & (1 << i)) != 0).toArray
-        subIndex(m) = idx
-        subs(m) = Pattern.compile(
-          idx.map(i => "(" + Patterns.pattern(names(i)).pattern + ")").mkString("|"),
-          Pattern.UNICODE_CHARACTER_CLASS)
-      }
-    }
-
-    /** This thread's matchers of the sub-unions. */
-    private val scans = ThreadLocal.withInitial[Scan](() => new Scan(subs))
-
-    private[Scrub] def scan(text: CharSequence): Scan = scans.get().begin(text)
-    private[Scrub] def patternIndex(mask: Int, group: Int): Int = subIndex(mask)(group - 1)
+    bits
   }
 
-  /** One thread's matchers of a [[Prepared]]'s sub-unions (`subs`, by
-    * mask), reused across documents. `matcher(mask)` binds a matcher to the current text on its
-    * first use in a scan; `release` unbinds them again, so a cached matcher
-    * does not pin the last-scanned (possibly MB-sized) text. `begin`
-    * releases too, so a scan cut short by an exception leaves no matcher
-    * bound to a stale text. */
-  private final class Scan(subs: Array[Pattern]) {
-    private val ms = new Array[java.util.regex.Matcher](subs.length)
-    private val bound = new Array[Boolean](subs.length)
-    private val used = new Array[Int](subs.length)
-    private var nUsed = 0
-    private var text: CharSequence = ""
+  private val namesByBits: Array[Vector[String]] = Array.tabulate(FullBits + 1)(b =>
+    FullOrder.indices.filter(i => (b >> i & 1) != 0).map(FullOrder).toVector)
 
-    def begin(t: CharSequence): Scan = { release(); text = t; this }
-
-    /** The sub-union matcher for `mask`, on the text with transparent
-      * bounds: lookbehinds and `\b` see the text before a region start. */
-    def matcher(mask: Int): java.util.regex.Matcher = {
-      var m = ms(mask)
-      if (m == null) {
-        m = subs(mask).matcher("")
-        m.useTransparentBounds(true).useAnchoringBounds(false)
-        ms(mask) = m
-      }
-      if (!bound(mask)) {
-        m.reset(text)
-        bound(mask) = true
-        used(nUsed) = mask
-        nUsed += 1
-      }
-      m
-    }
-
-    def release(): Unit = {
-      while (nUsed > 0) {
-        nUsed -= 1
-        ms(used(nUsed)).reset("")
-        bound(used(nUsed)) = false
-      }
-      text = ""
-    }
+  /** Drop patterns whose trigger units do not all occur. */
+  def triggered(text: CharSequence, names: Seq[String]): Seq[String] = {
+    val bits = orderBits(names)
+    if (bits == 0 || text.length == 0) Vector.empty
+    else namesByBits(bits & triggeredBits(chars(text), text.length))
   }
 
-  private val preparedByNames =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], Prepared]()
-  private val preparedCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], Array[Prepared]]()
-  /** The prepared scan of `names0` minus the patterns `mask` (a
-    * [[triggerMask]]) prunes; lists with equal filtered names share one. */
-  private[core] def prepared(names0: Seq[String], mask: Int): Prepared =
-    preparedCache.computeIfAbsent(names0, { ns =>
-      // the resume rule emits email where the unguarded union would try it
-      // FIRST; that holds only while email leads the order (it does in
-      // ReferenceOrder, FullOrder and every policy filter of them)
-      require(!ns.contains("email") || ns.head == "email",
-        s"email must be the first pattern of a scan order: $ns")
-      Array.tabulate(8)(m =>
-        preparedByNames.computeIfAbsent(filterByMask(ns, m), f => new Prepared(f)))
-    })(mask)
+  /** Receives the matches of [[scan]] in text order; `p` is the pattern's
+    * index in [[Patterns.byName]] (= its bit). */
+  private[core] trait HitSink { def hit(p: Int, start: Int, end: Int): Unit }
 
-  /** Drop patterns whose trigger char never occurs. */
-  def triggered(text: CharSequence, names: Seq[String]): Seq[String] =
-    prepared(names, triggerMask(text)).names
-
-  /** Receives the matches of [[forEachHit]] in text order; `i` indexes the
-    * matching pattern in `prep.names` (and its hit kind in `prep.kinds`). */
-  private[core] trait HitSink { def hit(i: Int, start: Int, end: Int): Unit }
-
-  /** The union scan loop: `sink` gets every match of the unguarded union of
-    * `prep.names`, as (pattern index, start, end), leftmost-first.
-    *
-    * First-char dispatch: from the scan position the loop walks the text
-    * and looks each unit up in `prep.starts`; offsets whose mask is 0 are
-    * skipped without running a regex. At a candidate offset it runs the
-    * sub-union of only the masked patterns, anchored there (`region` +
-    * `lookingAt`, transparent bounds). This is the union's own result:
-    * leftmost-first returns the first alternative that matches at the
-    * leftmost offset where any does, and a pattern outside the mask cannot
-    * match at that offset. The email bit is dropped where the previous char
-    * is a local-part char, where the run-start guard fails anyway, and at a
-    * run start whose run is not followed by `@` ([[runEndsAtSign]]), where
-    * the local part cannot end at an `@`.
-    *
-    * Linear in the text: [[runEndsAtSign]] reads each local-part run once,
-    * the guarded email is tried at most once per run, and a resume inside a
-    * run tries [[Patterns.EmailBody]] at most once per run (see the object
-    * scaladoc). */
-  private[core] def forEachHit(prep: Prepared, text: CharSequence, sink: HitSink): Unit = {
-    if (prep.names.isEmpty) return
-    val n = text.length
-    val scan = prep.scan(text)
-    val starts = prep.starts
-    val emailBit = if (prep.emailFirst) 1 else 0
-    var email: java.util.regex.Matcher = null
-    var failedRunEnd = 0 // resumes before this offset sit in a run email fails
-    var pos = 0
-    while (pos < n) {
-      val resumeMidRun = emailBit != 0 && pos > 0 && pos >= failedRunEnd &&
-        Patterns.isEmailLocal(text.charAt(pos - 1)) && Patterns.isEmailLocal(text.charAt(pos))
-      var emailEnd = -1
-      if (resumeMidRun) {
-        if (email == null) { email = emailBody.get(); email.reset(text) }
-        email.region(pos, n)
-        if (email.lookingAt()) emailEnd = email.end()
-        else {
-          var i = pos + 1
-          while (i < n && Patterns.isEmailLocal(text.charAt(i))) i += 1
-          failedRunEnd = i
-        }
-      }
-      if (emailEnd >= 0) {
-        sink.hit(0, pos, emailEnd)
-        pos = emailEnd
-      } else {
-        var i = pos
-        var prev = if (pos > 0) text.charAt(pos - 1) else ' '
-        var found = false
-        while (!found && i < n) {
-          val c = text.charAt(i)
-          var mask = starts(c).toInt
-          if ((mask & emailBit) != 0 &&
-              (Patterns.isEmailLocal(prev) || !runEndsAtSign(text, i, n))) mask &= ~1
-          if (mask != 0) {
-            val m = scan.matcher(mask)
-            m.region(i, n)
-            if (m.lookingAt()) {
-              var g = 1
-              while (m.start(g) < 0) g += 1
-              sink.hit(prep.patternIndex(mask, g), i, m.end())
-              pos = m.end()
-              found = true
+  /** The union scan loop (see the object scaladoc): `sink` gets every match
+    * of the union of the patterns in `enabled`, leftmost-first, as
+    * (pattern, start, end). */
+  private[core] def scan(a: Array[Char], n: Int, enabled: Int, sink: HitSink): Unit = {
+    if (enabled == 0) return
+    val starts = Patterns.starts
+    val others = enabled & ~(1 << Patterns.Email)
+    var runEnd = 0 // the email of the local-part run that ends here is runEmail
+    var runEmail = -1
+    var i = 0
+    while (i < n) {
+      // inside a run whose email failed only the other patterns can start
+      if (i < runEnd && runEmail < 0)
+        while (i < runEnd && (starts(a(i)) & others) == 0) i += 1
+      else
+        while (i < n && (starts(a(i)) & enabled) == 0) i += 1
+      if (i < n) {
+        var bits = starts(a(i)) & enabled
+        var p = 0
+        var end = -1
+        while (end < 0 && bits != 0) {
+          p = Integer.numberOfTrailingZeros(bits)
+          if (p == Patterns.Email) {
+            if (i >= runEnd) {
+              runEnd = Patterns.localRunEnd(a, i, n)
+              runEmail = Patterns.emailAfter(a, runEnd, n)
             }
-          }
-          prev = c
-          i += 1
+            end = runEmail
+          } else end = Patterns.matchAt(p, a, i, n)
+          bits &= bits - 1
         }
-        if (!found) pos = n
+        if (end >= 0) { sink.hit(p, i, end); i = end }
+        else i += 1
       }
     }
-    scan.release()
-    if (email != null) email.reset("")
   }
 
-  /** Whether the local-part run starting at `i` is non-empty and followed
-    * by an `@`: the guarded email can match at a run start only then, since
-    * `@` is not a local-part char. */
-  private def runEndsAtSign(text: CharSequence, i: Int, n: Int): Boolean = {
-    var j = i
-    while (j < n && Patterns.isEmailLocal(text.charAt(j))) j += 1
-    j > i && j < n && text.charAt(j) == '@'
+  /** [[scan]] of `text` over the pattern order `names`. */
+  private[core] def forEachHit(text: CharSequence, names: Seq[String], sink: HitSink): Unit = {
+    val bits = orderBits(names)
+    val n = text.length
+    if (bits != 0 && n != 0) {
+      val a = chars(text)
+      scan(a, n, bits & triggeredBits(a, n), sink)
+    }
+  }
+
+  /** Builds a spliced copy of `src(0 until srcLen)`: `put` replaces a span, in text
+    * order; `spliced` is the result, or NULL when nothing was put. Text
+    * between spans is copied in bulk. */
+  private abstract class Splice(protected val src: Array[Char], protected val srcLen: Int)
+      extends HitSink {
+    private var out: Array[Char] = null
+    private var len = 0
+    private var last = 0
+
+    private def reserve(k: Int): Unit =
+      if (out == null) out = new Array[Char](math.max(srcLen + 16, k))
+      else if (len + k > out.length)
+        out = java.util.Arrays.copyOf(out, math.max(out.length * 2, len + k))
+
+    final def put(start: Int, end: Int, alias: String): Unit = {
+      val gap = start - last
+      reserve(gap + alias.length)
+      System.arraycopy(src, last, out, len, gap)
+      len += gap
+      alias.getChars(0, alias.length, out, len)
+      len += alias.length
+      last = end
+    }
+
+    final def spliced: String =
+      if (out == null) null
+      else {
+        reserve(srcLen - last)
+        System.arraycopy(src, last, out, len, srcLen - last)
+        new String(out, 0, len + srcLen - last)
+      }
   }
 
   /** One left-to-right pass; `aliasFor(kind, matchedText)` supplies the
     * replacement. Returns the scrubbed text, or NULL when nothing matched —
     * the raw form lets the fused hot path skip re-encoding an unchanged
     * document (most web rows) instead of copying it through a String. */
-  def scrubRaw(text: CharSequence, names0: Seq[String],
+  def scrubRaw(text: CharSequence, names: Seq[String],
                aliasFor: (String, String) => String): String = {
-    if (names0.isEmpty || text.length == 0) return null
-    val prep = prepared(names0, triggerMask(text))
-    if (prep.names.isEmpty) return null
-    var sb: java.lang.StringBuilder = null
-    var last = 0
-    forEachHit(prep, text, { (i, start, end) =>
-      if (sb == null) sb = new java.lang.StringBuilder(text.length + 16)
-      sb.append(text, last, start)
-      sb.append(aliasFor(prep.kinds(i), text.subSequence(start, end).toString))
-      last = end
-    })
-    if (sb == null) null
-    else { sb.append(text, last, text.length); sb.toString }
+    val bits = orderBits(names)
+    val n = text.length
+    if (bits == 0 || n == 0) return null
+    val a = chars(text)
+    val splice = new Splice(a, n) {
+      def hit(p: Int, start: Int, end: Int): Unit =
+        put(start, end, aliasFor(patternKind(p), new String(a, start, end - start)))
+    }
+    scan(a, n, bits & triggeredBits(a, n), splice)
+    splice.spliced
   }
 
   /** String-total [[scrubRaw]]: unchanged input returns the input itself. */
-  def scrub(text: String, names0: Seq[String],
+  def scrub(text: String, names: Seq[String],
             aliasFor: (String, String) => String): String = {
-    val r = scrubRaw(text, names0, aliasFor)
+    val r = scrubRaw(text, names, aliasFor)
     if (r == null) text else r
   }
 
   /** Fixed-token mode: every match of kind k becomes `<K>`. */
   def scrubTags(text: String, names: Seq[String] = ReferenceOrder): String =
     scrub(text, names, (k, _) => "<" + k.toUpperCase + ">")
-
-  private val dictTag = Map(
-    "email" -> "EMAIL", "phone" -> "PHONE", "amount" -> "AMOUNT",
-    "id" -> "ID", "address" -> "ADDRESS", "name" -> "PERSON",
-    // model-NER-only kinds (Hf2Pii: ORG→org, MISC→misc)
-    "org" -> "ORG", "misc" -> "MISC")
 
   /** Result of a dictionary scrub: the scrubbed text, the per-document alias
     * dictionary (original → alias, insertion-ordered by first occurrence) and
@@ -366,68 +285,15 @@ object Scrub {
       aliases: Map[String, String],
       counts: Map[String, Long])
 
+  private val NoHits = DictResult(null, Map.empty, Map.empty)
+
   /** North-star mode: deterministic per-document numbered aliases
     * (`<PERSON_1>`, `<EMAIL_2>`, ...). The same original string always maps to
     * the same alias within a document; numbering follows first occurrence in
     * the single scan, per tag. Deterministic given (text, names). */
   def scrubDict(text: String, names: Seq[String] = FullOrder): DictResult = {
-    val aliases = new Aliases("dict", "", "")
-    aliases.result(scrub(text, names, aliases))
-  }
-
-  /** One document's alias state for a scrub mode — the ONE place each
-    * mode's alias rule lives:
-    *  - `dict`: `<TAG_n>` numbered per tag by first occurrence, keyed
-    *    `tag\0orig` in a `LinkedHashMap` (aliases in first-occurrence order);
-    *  - `tags`: fixed `<KIND>` tokens, no aliases;
-    *  - `ref`:  [[RefAlias]] aliases with the JPY rule, keyed `orig`.
-    * `apply(kind, orig)` counts the hit and returns its replacement;
-    * `result(scrubbed)` builds the [[DictResult]]. Maps are allocated on the
-    * first hit — most web rows have none. An unknown mode fails at
-    * construction, hit or no hit. */
-  private final class Aliases(mode: String, keyB64: String, ns: String)
-      extends ((String, String) => String) {
-    private val rule = mode match {
-      case "dict" => 0
-      case "tags" => 1
-      case "ref" => 2
-      case other => sys.error(s"unknown scrub mode: $other")
-    }
-    /** The pattern order the mode scrubs (before the policy filter). */
-    def order: Seq[String] = if (rule == 2) ReferenceOrder else FullOrder
-    private var counts: mutable.Map[String, Long] = null
-    private var dict: mutable.LinkedHashMap[String, String] = null
-    private var perTagCounter: mutable.Map[String, Int] = null
-    private var ref: mutable.Map[String, String] = null
-
-    def apply(k: String, orig: String): String = {
-      if (counts == null) counts = mutable.Map.empty
-      counts.update(k, counts.getOrElse(k, 0L) + 1L)
-      rule match {
-        case 0 =>
-          if (dict == null) { dict = mutable.LinkedHashMap.empty; perTagCounter = mutable.Map.empty }
-          val tag = dictTag.getOrElse(k, "PII")
-          dict.getOrElseUpdate(tag + "\u0000" + orig, {
-            val n = perTagCounter.getOrElse(tag, 0) + 1
-            perTagCounter.update(tag, n)
-            s"<${tag}_$n>"
-          })
-        case 1 => "<" + k.toUpperCase + ">"
-        case _ =>
-          if (ref == null) ref = mutable.Map.empty
-          ref.getOrElseUpdate(orig, RefAlias.aliasWithJpyRule(k, orig, keyB64, ns))
-      }
-    }
-
-    def result(scrubbed: String): DictResult =
-      if (counts == null) DictResult(scrubbed, Map.empty, Map.empty)
-      else {
-        val aliases =
-          if (dict != null) dict.map { case (k, v) => k.substring(k.indexOf('\u0000') + 1) -> v }.toMap
-          else if (ref != null) ref.toMap
-          else Map.empty[String, String]
-        DictResult(scrubbed, aliases, counts.toMap)
-      }
+    val d = aliasScrub(Aliases.Dict, text, "", "", orderBits(names), Nil)
+    if (d.scrubbed == null) d.copy(scrubbed = text) else d
   }
 
   /** Reference-alias mode over the reference's 4-pattern union, including the
@@ -445,45 +311,9 @@ object Scrub {
   def filteredOrder(order: Seq[String], policiesCsv: String): Seq[String] =
     if (policiesCsv.isEmpty) order
     else policyCache.computeIfAbsent((order, policiesCsv), { case (o, csv) =>
-      val set = csv.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val set = policyKinds(csv)
       o.filter(n => set.contains(kindOf(n)))
     })
-
-  /** The union pass of [[scrub]] as a SPAN view: same matcher, same order
-    * resolution, but hits are collected instead of replaced — the input to
-    * the ENHANCED merge path. conf/reason carry the rule-detector values
-    * only where the merge needs them (kind + offsets + text decide). */
-  def unionHits(text: CharSequence, names0: Seq[String]): Vector[Hit] = {
-    if (names0.isEmpty || text.length == 0) return Vector.empty
-    val prep = prepared(names0, triggerMask(text))
-    if (prep.names.isEmpty) return Vector.empty
-    val out = Vector.newBuilder[Hit]
-    forEachHit(prep, text, { (i, start, end) =>
-      out += Hit(prep.kinds(i), text.subSequence(start, end).toString, start, end, 1.0, "regex")
-    })
-    out.result()
-  }
-
-  /** ENHANCED-mode scrub core — the reference's `regex_hits.extend(ai_ner)`
-    * before redaction (app/main.py:241-245) applied to text: regex-union
-    * spans and model-NER spans are merged with [[dedupSpans]] (regex hits
-    * listed FIRST: both sorts are stable, so at an identical (start, length)
-    * the rule hit wins) and replaced in one splice. `modelHits` must carry
-    * exact offsets into `text`. */
-  def scrubMerged(text: CharSequence, names: Seq[String], modelHits: Seq[Hit],
-                  aliasFor: (String, String) => String): String = {
-    val merged = dedupSpans(unionHits(text, names) ++ modelHits)
-    if (merged.isEmpty) return null // RAW contract: null ⇔ unchanged
-    val sb = new java.lang.StringBuilder(text.length + 16)
-    var last = 0
-    merged.foreach { h =>
-      sb.append(text, last, h.start)
-      sb.append(aliasFor(h.kind, h.text))
-      last = h.end
-    }
-    sb.append(text, last, text.length)
-    sb.toString
-  }
 
   /** Hit KINDS enabled by a policies csv, cached like [[filteredOrder]]. */
   private val policyKindsCache =
@@ -491,6 +321,34 @@ object Scrub {
   def policyKinds(policiesCsv: String): Set[String] =
     policyKindsCache.computeIfAbsent(policiesCsv,
       csv => csv.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** Scan mask of the patterns whose kind a policies csv enables. */
+  private val policyBitsCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private def policyBits(policiesCsv: String): Int =
+    if (policiesCsv.isEmpty) FullBits
+    else policyBitsCache.computeIfAbsent(policiesCsv, { csv =>
+      val ks = policyKinds(csv)
+      Integer.valueOf(patternKind.indices.foldLeft(0)((m, i) =>
+        if (ks(patternKind(i))) m | (1 << i) else m))
+    }).intValue
+
+  /** The union pass of [[scrub]] as a SPAN view: same scan, same order
+    * resolution, but hits are collected instead of replaced — the input to
+    * the ENHANCED merge path. conf/reason carry the rule-detector values
+    * only where the merge needs them (kind + offsets + text decide). */
+  def unionHits(text: CharSequence, names: Seq[String]): Vector[Hit] = {
+    val bits = orderBits(names)
+    val n = text.length
+    if (bits == 0 || n == 0) Vector.empty
+    else { val a = chars(text); hitsOf(a, n, bits & triggeredBits(a, n)) }
+  }
+
+  private def hitsOf(a: Array[Char], n: Int, enabled: Int): Vector[Hit] = {
+    val out = Vector.newBuilder[Hit]
+    scan(a, n, enabled, (p, start, end) =>
+      out += Hit(patternKind(p), new String(a, start, end - start), start, end, 1.0, "regex"))
+    out.result()
+  }
 
   /** The per-page moded scrub, RAW form — the scrub of the native
     * `page_stages` expression ([[scrubWithMode]] is its String-total form,
@@ -502,20 +360,36 @@ object Scrub {
     * (merge_with_ner, app/detectors.py:100-117), with exact offsets into
     * `t`. They pass the same per-request policy filter as the rule
     * patterns (`hit.get("type") in policies`, app/main.py:250). With none
-    * left the scrub is the plain union splice ([[scrubRaw]]: `find()` spans
-    * are already non-overlapping); otherwise rule and model spans are
-    * merged and spliced by [[scrubMerged]]. Kinds the reference aliases via
-    * Faker (name/address) use [[RefAlias]]'s branches; org/misc take its
-    * fallback draw — total for every model kind. */
+    * left the scrub is the plain union splice (the scan's spans are already
+    * non-overlapping); otherwise — the reference's
+    * `regex_hits.extend(ai_ner)` before redaction (app/main.py:241-245) —
+    * rule and model spans are merged with [[dedupSpans]] (rule hits listed
+    * FIRST: both sorts are stable, so at an identical (start, length) the
+    * rule hit wins) and spliced in one pass. Kinds the reference aliases
+    * via Faker (name/address) use [[RefAlias]]'s branches; org/misc take
+    * its fallback draw — total for every model kind. */
   def scrubWithModeRaw(mode: String, t: CharSequence, keyB64: String, ns: String,
                        policiesCsv: String, modelHits: Seq[Hit] = Nil): DictResult = {
-    val aliases = new Aliases(mode, keyB64, ns)
-    val names = filteredOrder(aliases.order, policiesCsv)
+    val rule = Aliases.rule(mode)
+    val bits = (if (rule == Aliases.Ref) RefBits else FullBits) & policyBits(policiesCsv)
     val hits =
       if (policiesCsv.isEmpty || modelHits.isEmpty) modelHits
       else { val ks = policyKinds(policiesCsv); modelHits.filter(h => ks(h.kind)) }
-    aliases.result(
-      if (hits.isEmpty) scrubRaw(t, names, aliases) else scrubMerged(t, names, hits, aliases))
+    aliasScrub(rule, t, keyB64, ns, bits, hits)
+  }
+
+  /** The scrub of `t` in alias `rule` over the patterns in `bits`, merged
+    * with `modelHits` when there are any. */
+  private def aliasScrub(rule: Int, t: CharSequence, keyB64: String, ns: String,
+                         bits: Int, modelHits: Seq[Hit]): DictResult = {
+    val n = t.length
+    if (n == 0) return NoHits
+    val a = chars(t)
+    val aliases = new Aliases(rule, keyB64, ns, a, n)
+    val enabled = if (bits == 0) 0 else bits & triggeredBits(a, n)
+    if (modelHits.isEmpty) scan(a, n, enabled, aliases)
+    else dedupSpans(hitsOf(a, n, enabled) ++ modelHits).foreach(aliases.putHit)
+    aliases.result
   }
 
   /** String-total [[scrubWithModeRaw]]: unchanged ⇒ scrubbed = the input. */
@@ -523,6 +397,254 @@ object Scrub {
                     policiesCsv: String, modelHits: Seq[Hit] = Nil): DictResult = {
     val d = scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv, modelHits)
     if (d.scrubbed == null) d.copy(scrubbed = t) else d
+  }
+
+  /** The hit kinds with a fixed index in [[Aliases]]' counts: every kind of
+    * [[Patterns.byName]], then the model-NER-only kinds (Hf2Pii: ORG→org,
+    * MISC→misc). */
+  private val Kinds: Array[String] =
+    Array("email", "phone", "amount", "id", "address", "name", "org", "misc")
+  private val kindIndex: Map[String, Int] = Kinds.zipWithIndex.toMap
+  private val patternKindIndex: Array[Int] = patternKind.map(kindIndex)
+
+  /** `dict` tag of each kind of [[Kinds]], then of every other kind. */
+  private val DictTags: Array[String] =
+    Array("EMAIL", "PHONE", "AMOUNT", "ID", "ADDRESS", "PERSON", "ORG", "MISC", "PII")
+  private val OtherTag = DictTags.length - 1
+  private val CachedAliases = 32
+  /** `<TAG_n>` for n ≤ [[CachedAliases]], shared by every document. */
+  private val dictAliases: Array[Array[String]] =
+    DictTags.map(t => Array.tabulate(CachedAliases)(i => s"<${t}_${i + 1}>"))
+  private def dictAlias(tag: Int, n: Int): String =
+    if (n <= CachedAliases) dictAliases(tag)(n - 1)
+    else "<" + DictTags(tag) + "_" + n + ">"
+
+  /** Position of each kind of [[Kinds]] in the iteration order of a
+    * `mutable.HashMap` holding all of them. Below 11 keys such a map keeps
+    * its 16 buckets, so any subset iterates in this relative order. */
+  private val kindRank: Array[Int] = {
+    val m = mutable.HashMap.empty[String, Long]
+    Kinds.foreach(m.update(_, 0L))
+    val order = m.keys.toVector
+    Kinds.map(order.indexOf)
+  }
+
+  /** One document's alias state for a scrub mode — the ONE place each
+    * mode's alias rule lives — and the splice it feeds:
+    *  - `dict`: `<TAG_n>` numbered per tag by first occurrence of each
+    *    (tag, original); the aliases map lists originals in that order;
+    *  - `tags`: fixed `<KIND>` tokens, no aliases;
+    *  - `ref`:  [[RefAlias]] aliases with the JPY rule, keyed by original.
+    * A hit counts its kind and splices its replacement. Originals are
+    * looked up in an open-address table by hashing their chars where they
+    * lie, so a repeated original allocates nothing; the state is allocated
+    * on the first hit — most web rows have none. [[result]] builds maps
+    * with the contents and iteration order of the Scala maps the rule was
+    * first written with: a `LinkedHashMap` of aliases, a `mutable.HashMap`
+    * of `ref` aliases and of counts, each then `toMap`. */
+  private final class Aliases(rule: Int, keyB64: String, ns: String, text: Array[Char], len: Int)
+      extends Splice(text, len) {
+    // counts by kind index; kinds past Kinds are in `otherKinds`
+    private var counts: Array[Long] = null
+    private var firstSeen: Array[Int] = null // kind indices by first hit
+    private var nSeen = 0
+    private var nHits = 0
+    private var hitsAtLastNewKind = 0
+    private var otherKinds: mutable.ArrayBuffer[String] = null
+    // alias entries in first-occurrence order, and their hash slots
+    private var origs: Array[String] = null
+    private var tags: Array[Int] = null
+    private var hashes: Array[Int] = null
+    private var vals: Array[String] = null
+    private var nEntries = 0
+    private var slots: Array[Int] = null // entry index + 1, 0 = empty
+    private var perTag: Array[Int] = null
+
+    def hit(p: Int, start: Int, end: Int): Unit =
+      put(start, end, alias(patternKindIndex(p), src, start, end, null))
+
+    /** Splices a (rule or model) hit, aliasing its `text`. */
+    def putHit(h: Hit): Unit =
+      put(h.start, h.end, alias(kindIndexOf(h.kind), h.text.toCharArray, 0, h.text.length, h.text))
+
+    private def kindIndexOf(kind: String): Int = {
+      val k = kindIndex.getOrElse(kind, -1)
+      if (k >= 0) k
+      else {
+        if (otherKinds == null) otherKinds = mutable.ArrayBuffer.empty
+        val j = otherKinds.indexOf(kind)
+        if (j >= 0) Kinds.length + j
+        else { otherKinds += kind; Kinds.length + otherKinds.size - 1 }
+      }
+    }
+
+    private def kindName(k: Int): String =
+      if (k < Kinds.length) Kinds(k) else otherKinds(k - Kinds.length)
+
+    private def count(k: Int): Unit = {
+      if (counts == null) { counts = new Array[Long](Kinds.length); firstSeen = new Array[Int](4) }
+      if (k >= counts.length) counts = java.util.Arrays.copyOf(counts, k + 1)
+      if (counts(k) == 0L) {
+        if (nSeen == firstSeen.length) firstSeen = java.util.Arrays.copyOf(firstSeen, nSeen * 2)
+        firstSeen(nSeen) = k
+        nSeen += 1
+        hitsAtLastNewKind = nHits + 1
+      }
+      counts(k) += 1L
+      nHits += 1
+    }
+
+    /** Replacement of `src(s until e)` (the original, `orig` when already a
+      * String) as a hit of kind `k`. */
+    private def alias(k: Int, src: Array[Char], s: Int, e: Int, orig: String): String = {
+      count(k)
+      rule match {
+        case Aliases.Tags =>
+          if (k < Kinds.length) Aliases.TagTokens(k) else "<" + kindName(k).toUpperCase + ">"
+        case Aliases.Dict =>
+          val tag = if (k < Kinds.length) k else OtherTag
+          val h = hashOf(tag, src, s, e)
+          val i = find(tag, h, src, s, e)
+          if (i >= 0) vals(i)
+          else {
+            if (perTag == null) perTag = new Array[Int](DictTags.length)
+            perTag(tag) += 1
+            add(tag, h, if (orig != null) orig else new String(src, s, e - s), dictAlias(tag, perTag(tag)))
+          }
+        case _ =>
+          val h = hashOf(0, src, s, e)
+          val i = find(0, h, src, s, e)
+          if (i >= 0) vals(i)
+          else {
+            val o = if (orig != null) orig else new String(src, s, e - s)
+            add(0, h, o, RefAlias.aliasWithJpyRule(kindName(k), o, keyB64, ns))
+          }
+      }
+    }
+
+    private def hashOf(tag: Int, src: Array[Char], s: Int, e: Int): Int = {
+      var h = tag
+      var i = s
+      while (i < e) { h = 31 * h + src(i); i += 1 }
+      h ^ (h >>> 16)
+    }
+
+    /** Entry of (tag, `src(s until e)`), or -1. */
+    private def find(tag: Int, h: Int, src: Array[Char], s: Int, e: Int): Int = {
+      if (slots == null) return -1
+      val mask = slots.length - 1
+      var j = h & mask
+      while (true) {
+        val x = slots(j) - 1
+        if (x < 0) return -1
+        if (hashes(x) == h && tags(x) == tag && sameChars(origs(x), src, s, e)) return x
+        j = (j + 1) & mask
+      }
+      -1
+    }
+
+    private def sameChars(o: String, src: Array[Char], s: Int, e: Int): Boolean = {
+      if (o.length != e - s) return false
+      var i = 0
+      while (i < o.length) { if (o.charAt(i) != src(s + i)) return false; i += 1 }
+      true
+    }
+
+    /** Adds an entry (known absent) and returns its alias. */
+    private def add(tag: Int, h: Int, orig: String, alias: String): String = {
+      if (slots == null) {
+        slots = new Array[Int](16)
+        origs = new Array[String](8); tags = new Array[Int](8)
+        hashes = new Array[Int](8); vals = new Array[String](8)
+      } else if (nEntries == origs.length) {
+        val c = nEntries * 2
+        origs = java.util.Arrays.copyOf(origs, c); tags = java.util.Arrays.copyOf(tags, c)
+        hashes = java.util.Arrays.copyOf(hashes, c); vals = java.util.Arrays.copyOf(vals, c)
+        slots = new Array[Int](c * 2)
+        var x = 0
+        while (x < nEntries) { place(x); x += 1 }
+      }
+      origs(nEntries) = orig; tags(nEntries) = tag; hashes(nEntries) = h; vals(nEntries) = alias
+      place(nEntries)
+      nEntries += 1
+      alias
+    }
+
+    private def place(x: Int): Unit = {
+      val mask = slots.length - 1
+      var j = hashes(x) & mask
+      while (slots(j) != 0) j = (j + 1) & mask
+      slots(j) = x + 1
+    }
+
+    def result: DictResult = {
+      val scrubbed = spliced
+      if (nHits == 0) NoHits
+      else DictResult(scrubbed, aliasMap, countMap)
+    }
+
+    private def aliasMap: Map[String, String] =
+      if (nEntries == 0) Map.empty
+      else if (rule == Aliases.Dict) {
+        // a LinkedHashMap keyed (tag, original), then mapped to original
+        // and toMap: originals in first-occurrence order, a later tag's
+        // alias replacing an earlier one's value in place
+        val b = Map.newBuilder[String, String]
+        var x = 0
+        while (x < nEntries) { b += origs(x) -> vals(x); x += 1 }
+        b.result()
+      } else {
+        val m = mutable.HashMap.empty[String, String]
+        var x = 0
+        while (x < nEntries) { m.update(origs(x), vals(x)); x += 1 }
+        m.toMap
+      }
+
+    private def countMap: Map[String, Long] =
+      if (otherKinds == null) {
+        // the kinds in mutable.HashMap order (kindRank), then toMap
+        val ks = java.util.Arrays.copyOf(firstSeen, nSeen)
+        var i = 1
+        while (i < nSeen) {
+          val k = ks(i)
+          var j = i - 1
+          while (j >= 0 && kindRank(ks(j)) > kindRank(k)) { ks(j + 1) = ks(j); j -= 1 }
+          ks(j + 1) = k
+          i += 1
+        }
+        val b = Map.newBuilder[String, Long]
+        i = 0
+        while (i < nSeen) { b += Kinds(ks(i)) -> counts(ks(i)); i += 1 }
+        b.result()
+      } else {
+        // rebuild the mutable.HashMap the counts were updated in: its
+        // table grows on any update at the threshold, so a hit after the
+        // last new kind is one more update
+        val m = mutable.HashMap.empty[String, Long]
+        var i = 0
+        while (i < nSeen) { m.update(kindName(firstSeen(i)), counts(firstSeen(i))); i += 1 }
+        if (nHits > hitsAtLastNewKind) {
+          val k = firstSeen(nSeen - 1)
+          m.update(kindName(k), counts(k))
+        }
+        m.toMap
+      }
+  }
+
+  private object Aliases {
+    final val Dict = 0
+    final val Tags = 1
+    final val Ref = 2
+
+    /** An unknown mode fails at once, hit or no hit. */
+    def rule(mode: String): Int = mode match {
+      case "dict" => Dict
+      case "tags" => Tags
+      case "ref" => Ref
+      case other => sys.error(s"unknown scrub mode: $other")
+    }
+
+    val TagTokens: Array[String] = Kinds.map(k => "<" + k.toUpperCase + ">")
   }
 
   /** Line-scope tag scrub: the reference applies `_inline_replace_line` per

@@ -122,17 +122,15 @@ object Pipeline {
       UnresolvedAttribute("text"), conf.scrubMode, conf.keyB64,
       conf.ns, conf.policies.toSeq.sorted.mkString(","), conf.modelNer, tagger))
 
-    val withStages = pages
-      .withColumn("r", stagesCol)
-      .withColumn("lang_guess", struct(col("r.lang_id").as("lang"), col("r.lang_conf").as("conf")))
-      .withColumn("ppl", col("r.ppl"))
-      .withColumn("q", col("r.q"))
-      .withColumn("scrub", struct(col("r.scrubbed").as("scrubbed"),
-        col("r.aliases").as("aliases"), col("r.counts").as("counts")))
+    // one projection computes the fused stage; everything after reads its
+    // struct fields (the expression is nondeterministic, so Catalyst never
+    // inlines it into the projections above)
+    val staged = pages.select(col("url"), col("warc_ts"), col("lang"), col("text"),
+      stagesCol.as("r"))
 
     // Native when-chain mirror of Quality.decide (first failing rule wins;
     // word-shape + perplexity rules gated off for CJK text — see core docs).
-    val q = col("q")
+    val q = col("r.q")
     val latin = q("cjkRatio") <= 0.3
     val dropReason: Column =
       when(q("nChars") < qc.minChars, "too_short")
@@ -147,33 +145,63 @@ object Pipeline {
         .when(latin && q("alphaWordRatio") < qc.minAlphaWordRatio, "alpha_word_ratio")
         .when(q("dupLineFrac") > qc.maxDupLineFrac, "dup_lines")
         .when(q("dupWordFrac") > qc.maxDupWordFrac, "dup_words")
-        .when(latin && col("ppl") > qc.maxPpl, "perplexity")
+        .when(latin && col("r.ppl") > qc.maxPpl, "perplexity")
         .otherwise("")
 
     // toxicity (our extension — the reference is PII-only): lowest
     // priority, so every reference-derived drop_reason is attributed
     // exactly as before; the count column exists only when enabled.
     // Count and mask both take the broadcast per-language automaton
-    // (O(|text|) whatever the list size; one list is the "*" entry). The
-    // count's nondeterministic guard keeps the scan at ONE evaluation per
-    // row when downstream keep-filters would otherwise clone the
-    // expression into FilterExec (the page_stages lesson of BENCH.md's 3M
-    // rehearsal; a deterministic regex count in the drop chain was likewise
-    // re-evaluated per reference, +582 cpu-s in the A/B SURVEY.md records).
+    // (O(|text|) whatever the list size; one list is the "*" entry),
+    // dispatched on the pipeline's OWN language id, not the claimed lang.
+    // The count is materialized as the `n_toxic` column of a projection of
+    // its own, and the drop chain reads that column: ONE evaluation per
+    // row. (A nondeterministic UDF is never inlined, so an expression
+    // referenced by both the chain and the output would be evaluated
+    // twice; a deterministic regex count in the drop chain was likewise
+    // re-evaluated per reference, +582 cpu-s in the A/B SURVEY.md records.)
     val toxBank: Option[Broadcast[Toxicity.LangBank]] = conf.toxicityByLang
       .map(m => pages.sparkSession.sparkContext
         .broadcast(Toxicity.LangBank(m)))
-    // dispatch on the pipeline's OWN language id, not the claimed lang
     val toxCount: Option[Column] =
-      toxBank.map(b => Toxicity.countByLangUdf(b)(col("lang_guess.lang"), col("text")))
-    val (dropReasonFinal, toxCols) = toxCount match {
-      case Some(n) =>
-        (when(dropReason =!= lit(""), dropReason)
-          .when(Toxicity.dropFlag(n, conf.toxicityMaxHits), "toxicity")
-          .otherwise(""),
-          Seq(n.as("n_toxic")))
-      case None => (dropReason, Seq.empty[Column])
+      toxBank.map(b => Toxicity.countByLangUdf(b)(col("r.lang_id"), col("text")).as("n_toxic"))
+    val dropReasonTox =
+      if (toxCount.isEmpty) dropReason
+      else when(dropReason =!= lit(""), dropReason)
+        .when(Toxicity.dropFlag(col("n_toxic"), conf.toxicityMaxHits), "toxicity")
+        .otherwise("")
+
+    // trained quality model (CCNet-style learned filter; see Conf docs):
+    // materialized as the `model_keep` column next to `n_toxic`, so the
+    // drop chain and the output share one computation; lowest-priority
+    // drop, after toxicity
+    val modelKeep: Option[Column] = conf.qualityModel.map { w =>
+      val mk =
+        if (w.length == QualityTrain.NF)
+          QualityTrain.modelKeepColumn(w, col("r.q"), col("r.ppl"))
+        else {
+          require(w.length == QualityTrain.NFNg,
+            s"qualityModel must have ${QualityTrain.NF} or " +
+              s"${QualityTrain.NFNg} weights, got ${w.length}")
+          val bw = pages.sparkSession.sparkContext.broadcast(w)
+          // nondeterministic = duplication guard (the page_stages
+          // lesson): this re-tokenizes, and the drop chain references it
+          val mkUdf = udf { (t: String, ppl: Double) =>
+            val text = if (t == null) "" else t
+            QualityTrain.predictKeep(bw.value,
+              QualityTrain.featurizeNg(text, ppl)._1)
+          }.asNondeterministic()
+          mkUdf(col("text"), col("r.ppl"))
+        }
+      mk.as("model_keep")
     }
+    val dropReasonAll =
+      if (modelKeep.isEmpty) dropReasonTox
+      else when(dropReasonTox =!= lit(""), dropReasonTox)
+        .when(!col("model_keep"), "quality_model")
+        .otherwise("")
+    val perRow = toxCount.toSeq ++ modelKeep
+    val scored = if (perRow.isEmpty) staged else staged.select(col("*") +: perRow: _*)
 
     // model-assisted NER (ENHANCED level, main.py:241-245): the hits are
     // computed INSIDE the fused stage (one automaton pass per row), merged
@@ -186,50 +214,18 @@ object Pipeline {
     // north-rule's "PII/toxicity-scrub"); survivors under a lenient
     // toxicityMaxHits therefore never ship a listed term
     val scrubbedOut = toxBank match {
-      case Some(b) =>
-        Toxicity.scrubByLangUdf(b)(col("lang_guess.lang"), col("scrub.scrubbed"))
-      case None => col("scrub.scrubbed")
+      case Some(b) => Toxicity.scrubByLangUdf(b)(col("r.lang_id"), col("r.scrubbed"))
+      case None => col("r.scrubbed")
     }
-    // trained quality model (CCNet-style learned filter; see Conf docs):
-    // materialized as a column FIRST so the drop_reason chain and the
-    // output share one computation; lowest-priority drop, after toxicity
-    val (withQm, dropReasonAll, qmCols) = conf.qualityModel match {
-      case Some(w) =>
-        val mk =
-          if (w.length == QualityTrain.NF)
-            QualityTrain.modelKeepColumn(w, col("q"), col("ppl"))
-          else {
-            require(w.length == QualityTrain.NFNg,
-              s"qualityModel must have ${QualityTrain.NF} or " +
-                s"${QualityTrain.NFNg} weights, got ${w.length}")
-            val bw = pages.sparkSession.sparkContext.broadcast(w)
-            // nondeterministic = duplication guard (the page_stages
-            // lesson): this re-tokenizes, and the drop chain references it
-            val mkUdf = udf { (t: String, ppl: Double) =>
-              val text = if (t == null) "" else t
-              QualityTrain.predictKeep(bw.value,
-                QualityTrain.featurizeNg(text, ppl)._1)
-            }.asNondeterministic()
-            mkUdf(col("text"), col("ppl"))
-          }
-        (withStages.withColumn("model_keep", mk),
-          when(dropReasonFinal =!= lit(""), dropReasonFinal)
-            .when(!col("model_keep"), "quality_model")
-            .otherwise(""),
-          Seq(col("model_keep")))
-      case None => (withStages, dropReasonFinal, Seq.empty[Column])
-    }
-    withQm
-      .withColumn("drop_reason", dropReasonAll)
-      .withColumn("keep", col("drop_reason") === lit(""))
-      .select(Seq(
-        col("url"), col("warc_ts"), col("lang").as("lang_claimed"),
-        col("lang_guess.lang").as("lang_id"), col("lang_guess.conf").as("lang_conf"),
-        col("ppl"), col("q").as("quality"),
-        col("keep"), col("drop_reason"),
-        scrubbedOut.as("scrubbed_text"),
-        col("scrub.aliases").as("alias_dict"),
-        col("scrub.counts").as("n_hits")) ++ nerCols ++ toxCols ++ qmCols: _*)
+    scored.select(Seq(
+      col("url"), col("warc_ts"), col("lang").as("lang_claimed"),
+      col("r.lang_id").as("lang_id"), col("r.lang_conf").as("lang_conf"),
+      col("r.ppl").as("ppl"), col("r.q").as("quality"),
+      (dropReasonAll === lit("")).as("keep"), dropReasonAll.as("drop_reason"),
+      scrubbedOut.as("scrubbed_text"),
+      col("r.aliases").as("alias_dict"),
+      col("r.counts").as("n_hits")) ++ nerCols ++ toxCount.map(_ => col("n_toxic")) ++
+      modelKeep.map(_ => col("model_keep")): _*)
   }
 
   /** Training-pipeline order: exact-dedup the crawl BEFORE paying for

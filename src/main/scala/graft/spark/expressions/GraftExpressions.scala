@@ -17,9 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The expression stays INSIDE whole-stage codegen: the generated code
   * calls [[pageStages]] directly on the UTF8String, with no ScalaUDF shim,
-  * no catalyst↔scala converters and no closure dispatch. The regex
-  * semantics are exactly `graft.core` (same compiled Patterns), so
-  * golden-vector parity carries over unchanged.
+  * no catalyst↔scala converters and no closure dispatch. Every kernel is
+  * the `graft.core` call itself (the PII scrub is [[Scrub.scrubWithModeRaw]]
+  * over the decoded chars), so golden-vector parity carries over unchanged.
   *
   * Registered as `page_stages` via [[GraftExtensions]]
   * (`spark.sql.extensions=graft.spark.expressions.GraftExtensions`) or

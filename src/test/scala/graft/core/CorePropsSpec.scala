@@ -109,14 +109,17 @@ object CorePropsSpec extends Properties("core") {
     val spans = Scrub.dedupSpans(
       Scrub.unionHits(t, names) ++ model.filter(h => pol.isEmpty || kinds(h.kind)))
     // ref: an original keeps its first alias; dict: aliases are numbered
-    // per (tag, original) and, in first-occurrence order, name the original
+    // per (tag, original) and, in first-occurrence order, name the original.
+    // The maps are built as Scala maps of this shape, so their iteration
+    // order (which alias_dict and n_hits expose) is pinned too.
     val refAliases = scala.collection.mutable.Map.empty[String, String]
-    val byTagOrig = scala.collection.mutable.Map.empty[(String, String), String]
+    val byTagOrig = scala.collection.mutable.LinkedHashMap.empty[(String, String), String]
     val perTag = scala.collection.mutable.Map.empty[String, Int]
-    val dictFirst = Vector.newBuilder[(String, String)]
+    val counts = scala.collection.mutable.Map.empty[String, Long]
     val out = new java.lang.StringBuilder
     var last = 0
     spans.foreach { h =>
+      counts.update(h.kind, counts.getOrElse(h.kind, 0L) + 1L)
       val alias = mode match {
         case "tags" => "<" + h.kind.toUpperCase + ">"
         case "ref" =>
@@ -125,18 +128,17 @@ object CorePropsSpec extends Properties("core") {
           val tag = dictTags.getOrElse(h.kind, "PII")
           byTagOrig.getOrElseUpdate((tag, h.text), {
             perTag(tag) = perTag.getOrElse(tag, 0) + 1
-            val a = s"<${tag}_${perTag(tag)}>"
-            dictFirst += h.text -> a
-            a
+            s"<${tag}_${perTag(tag)}>"
           })
       }
       out.append(t, last, h.start).append(alias)
       last = h.end
     }
     out.append(t, last, t.length)
-    val aliases = if (mode == "ref") refAliases.toMap else dictFirst.result().toMap
-    Scrub.DictResult(out.toString, aliases,
-      spans.groupBy(_.kind).map { case (k, hs) => k -> hs.size.toLong })
+    val aliases =
+      if (mode == "ref") refAliases.toMap
+      else byTagOrig.map { case ((_, o), a) => o -> a }.toMap
+    Scrub.DictResult(out.toString, aliases, counts.toMap)
   }
 
   property("scrubWithMode == span-level reference in every mode, policy and hit set") =
@@ -145,8 +147,10 @@ object CorePropsSpec extends Properties("core") {
       Gen.oneOf("", "email", "name,address", "phone,org,id")) {
       case ((t, model), mode, pol) =>
         val key = "Z3JhZnQtc3BhcmstcGlpLWRlZmF1bHQta2V5IQ=="
-        Scrub.scrubWithMode(mode, t, key, "ns", pol, model) ==
-          referenceScrub(mode, t, key, pol, model)
+        val got = Scrub.scrubWithMode(mode, t, key, "ns", pol, model)
+        val want = referenceScrub(mode, t, key, pol, model)
+        got == want && got.aliases.toSeq == want.aliases.toSeq &&
+          got.counts.toSeq == want.counts.toSeq
     }
 
   // ---- linear union scan == the unguarded reference union -----------------
@@ -166,10 +170,19 @@ object CorePropsSpec extends Properties("core") {
       3 -> Gen.choose(1, 5).flatMap(Gen.stringOfN(_, Gen.oneOf(
         Gen.choose('一', '龠'), Gen.choose('ぁ', 'ゔ'), Gen.choose('ァ', 'ヶ')))),
       1 -> Gen.oneOf("東京都", "新宿区", "さん", "様", "　"),
+      // the names' and address's classes, their suffixes and windows
+      2 -> Gen.oneOf("都", "道", "府", "県", "市", "区", "町", "村", "さん", "様", "氏",
+        "先生", "君", "ちゃん", "山田", "山田太郎花子", "東京都新宿区西 ", "大阪府大阪市北 1]]"),
       // a boundary char of each start class, a supplementary digit
       // (U+1D7CF) and an emoji: the scan's table lookup and surrogate path
       3 -> Gen.oneOf("\u00A0", "\u3000", "１２", "¥", "J", "〒", "+",
         "\uD835\uDFCF", "\uD83D\uDE00"),
+      // the first unit outside and the edges of every class: 龠/龡, ぁ/ゔ/ゕ,
+      // ァ/ヶ/ヷ, postal's separators (the U+2010 range end and U+2011
+      // past it, U+2212, U+FF0D), address's U+FF0E/U+FF0F class end, the
+      // brackets and full-width digits
+      3 -> Gen.oneOf("龠", "龡", "ぁ", "ゔ", "ゕ", "ァ", "ヶ", "ヷ", "\u2010", "\u2011",
+        "\u2212", "\uFF0D", "\uFF0E", "\uFF0F", "[", "]", "]]", "０", "１２３", "４５６７"),
       1 -> Gen.choose(1, 8).map("\uD835\uDFCF" * _)
     )).map(_.mkString))
 
@@ -178,9 +191,9 @@ object CorePropsSpec extends Properties("core") {
       texts.forall { t =>
         UnguardedUnion.orders.forall(o =>
           UnguardedUnion.engineSpans(t, o) == UnguardedUnion.spans(t, o)) &&
-          Detect.classifyByRegex(t).filter(_.kind == "email")
-            .map(h => ("email", h.start, h.end)) ==
-            UnguardedUnion.spans(t, Vector("email"))
+          Detect.detectAll(t).map(h => (h.kind, h.start, h.end)) ==
+            Scrub.FullOrder.flatMap(name => UnguardedUnion.spans(t, Vector(name))
+              .map { case (_, s, e) => (Scrub.kindOf(name), s, e) })
       }
     }
 

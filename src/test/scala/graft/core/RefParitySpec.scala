@@ -29,7 +29,7 @@ class RefParitySpec extends AnyFunSuite {
     Scrub.unionHits(s, Vector(name)).map(h => (h.start, h.end, h.text))
 
   test("all nine patterns reproduce CPython finditer spans on the battery") {
-    Patterns.byName.foreach { case (name, _, _, _) =>
+    Patterns.byName.foreach { case (name, _, _) =>
       val expected = root.get("spans").get(name)
       battery.zipWithIndex.foreach { case (s, i) =>
         val exp = expected.get(i).elements.asScala.map { n =>

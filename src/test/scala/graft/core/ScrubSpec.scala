@@ -143,12 +143,17 @@ class ScrubSpec extends AnyFunSuite {
       "id" -> "[AUO]", "postal" -> "[〒\\d]", "address" -> "[一-龠]",
       "name_kanji" -> "[一-龠]", "name_hiragana" -> "[ぁ-ゔ]", "name_katakana" -> "[ァ-ヶ]")
     assert(documented.keySet == Patterns.byName.map(_._1).toSet)
+    // a high surrogate can begin a supplementary \d; a low one begins nothing
+    val digitLed = Set("amount", "postal")
     documented.foreach { case (name, cls) =>
+      val bit = 1 << Patterns.indexOf(name)
       val m = java.util.regex.Pattern.compile(cls, java.util.regex.Pattern.UNICODE_CHARACTER_CLASS)
         .matcher("")
-      val start = Patterns.startClass(name)
-      val wrong = (0 to 0xFFFF).map(_.toChar)
-        .filter(c => start(c) != m.reset(c.toString).matches)
+      val wrong = (0 to 0xFFFF).map(_.toChar).filter { c =>
+        val expected =
+          if (Character.isHighSurrogate(c)) digitLed(name) else m.reset(c.toString).matches
+        ((Patterns.starts(c) & bit) != 0) != expected
+      }
       assert(wrong.isEmpty, s"$name: ${wrong.take(5).map(c => f"U+${c.toInt}%04X")}")
     }
   }
@@ -158,26 +163,73 @@ class ScrubSpec extends AnyFunSuite {
     // where its bit is set in the start table, so it must not match anywhere
     // else. Each unit is tried after a neutral char (lookbehinds and \b see
     // it through transparent bounds) and before continuations that complete
-    // every pattern from its second char on.
+    // every pattern from its second char on, a low surrogate included.
     val continuations = Seq("81-3-1234-5678", "3-1234-5678", "PY 1,234", "PY1,234",
       "CC-12345", "SR-12345", "RD-12345", ",234", "1,234", "23-4567", "234567",
       "@ab.cd", "b@ab.cd", "京都新宿区西 新宿", "田太郎さん", "田 花子様",
-      "まだたろう", "ナカハナコ", " 1,234", "\u3000123-4567", "\u00A012,345")
-    val prep = Scrub.prepared(Scrub.FullOrder, 7)
-    assert(prep.names == Scrub.FullOrder)
-    val all = (1 << Scrub.FullOrder.size) - 1
-    assert((0xD800 to 0xDFFF).forall(u => prep.starts(u) == all),
-      "surrogates must dispatch to every pattern")
+      "まだたろう", "ナカハナコ", " 1,234", "\u3000123-4567", "\u00A012,345",
+      "\uDFCF23-4567", "\uDFCF,234")
     Scrub.FullOrder.zipWithIndex.foreach { case (name, bit) =>
-      val m = Patterns.pattern(name).matcher("")
+      val m = UnguardedUnion.compiled(name).matcher("")
         .useTransparentBounds(true).useAnchoringBounds(false)
       val hits = for {
-        u <- 0 to 0xFFFF if (prep.starts(u) & (1 << bit)) == 0
+        u <- 0 to 0xFFFF if (Patterns.starts(u) & (1 << bit)) == 0
         k <- continuations
         t = " " + u.toChar + k
         if m.reset(t).region(1, t.length).lookingAt()
       } yield t
       assert(hits.isEmpty, s"$name starts outside its start class: ${hits.take(3)}")
+    }
+  }
+
+  test("every matcher equals its compiled source anchored at every offset") {
+    // random strings over the units at the edges of every pattern's classes:
+    // each matcher's end (or -1) at each offset must be the end of the
+    // source regex run there with lookingAt and transparent bounds
+    val units = Vector("0", "1", "5", "9", "１", "〒", "¥", "J", "P", "Y", "A", "C", "C", "U", "S",
+      "R", "O", "D", "-", "+", "8", ",", ".", "@", "a", "b", "x", "Z", "_", "%", " ", "\u3000",
+      "\u00A0", "\n", "ー", "\u2212", "\u2010", "\u2011", "\u2013", "\uFF0D", "．", "／", "[",
+      "]", "]", "一", "龠", "龡", "都", "道", "府", "県", "市", "区", "町", "村", "山", "田", "ぁ",
+      "ゔ", "ゕ", "さ", "ん", "ち", "ゃ", "ァ", "ヶ", "ヷ", "様", "氏", "先", "生", "君",
+      "\uD835\uDFCF", "\uD835", "\uDFCF", "\uD83D\uDE00", "\u0301", "\u200C", "é", "\u0660",
+      "\u203F", "~")
+    val rnd = new java.util.Random(20261019L)
+    val ms = Patterns.byName.map { case (name, _, _) =>
+      UnguardedUnion.compiled(name).matcher("").useTransparentBounds(true).useAnchoringBounds(false)
+    }
+    for (_ <- 0 until 10000) {
+      val sb = new StringBuilder
+      for (_ <- 0 until 1 + rnd.nextInt(24)) sb.append(units(rnd.nextInt(units.size)))
+      val t = sb.toString
+      val a = t.toCharArray
+      for (i <- 0 until t.length; p <- ms.indices) {
+        val m = ms(p).reset(t).region(i, t.length)
+        val expected = if (m.lookingAt()) m.end() else -1
+        assert(Patterns.matchAt(p, a, i, t.length) == expected,
+          s"${Scrub.FullOrder(p)} at $i of ${t.map(c => f"${c.toInt}%04X").mkString(" ")}")
+      }
+    }
+  }
+
+  test("n_hits keeps the mutable.HashMap order of its counts, past ten kinds too") {
+    // counts were first kept in a mutable.HashMap and then toMap'd; its
+    // table grows on any update at the threshold, so 11 kinds with and
+    // without a later hit and 12 kinds each give their own order
+    val key = "Z3JhZnQtc3BhcmstcGlpLWRlZmF1bHQta2V5IQ=="
+    val kinds = Vector("misc", "k1", "name", "k2", "org", "k3", "address", "k4", "email",
+      "k5", "k6", "k7")
+    val rnd = new java.util.Random(11)
+    for (nKinds <- Seq(3, 5, 10, 11, 12); trailing <- Seq(0, 2); _ <- 0 until 20) {
+      val ks = scala.util.Random.javaRandomToRandom(rnd).shuffle(kinds).take(nKinds)
+      val seq = ks ++ Vector.fill(trailing)(ks(rnd.nextInt(nKinds)))
+      val text = "w" * (2 * seq.size)
+      val hits = seq.zipWithIndex.map { case (k, i) => Hit(k, "w", 2 * i, 2 * i + 1, 0.9, "model:X") }
+      val old = scala.collection.mutable.Map.empty[String, Long]
+      seq.foreach(k => old.update(k, old.getOrElse(k, 0L) + 1L))
+      for (mode <- Seq("dict", "tags", "ref")) {
+        val d = Scrub.scrubWithMode(mode, text, key, "ns", "", hits)
+        assert(d.counts.toSeq == old.toMap.toSeq, s"$mode $seq")
+      }
     }
   }
 

@@ -3,15 +3,15 @@ package graft.core
 import java.util.regex.Pattern
 
 /** The reference scan for the differential tests: the union of the
-  * reference's regexes with email UNGUARDED (the CPython pattern string),
+  * reference's regexes (the [[Patterns]] source strings, email unguarded as
+  * in CPython) compiled by `java.util.regex` with `UNICODE_CHARACTER_CLASS`,
   * run by a plain `find()` loop with no trigger prefilter. Quadratic on long
   * local-part runs after an `@`, so keep its inputs short. */
 object UnguardedUnion {
 
-  private val email = """[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"""
-
-  private def source(name: String): String =
-    if (name == "email") email else Patterns.pattern(name).pattern
+  /** One pattern compiled from its source string. */
+  def compiled(name: String): Pattern =
+    Pattern.compile(Patterns.regex(name), Pattern.UNICODE_CHARACTER_CLASS)
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[Seq[String], Pattern]()
 
@@ -19,7 +19,7 @@ object UnguardedUnion {
   def spans(text: String, names: Seq[String]): Vector[(String, Int, Int)] = {
     if (names.isEmpty) return Vector.empty
     val p = cache.computeIfAbsent(names, ns =>
-      Pattern.compile(ns.map("(" + source(_) + ")").mkString("|"),
+      Pattern.compile(ns.map("(" + Patterns.regex(_) + ")").mkString("|"),
         Pattern.UNICODE_CHARACTER_CLASS))
     val m = p.matcher(text)
     val out = Vector.newBuilder[(String, Int, Int)]
@@ -33,9 +33,8 @@ object UnguardedUnion {
 
   /** The same triples from the engine's scan loop. */
   def engineSpans(text: String, names: Seq[String]): Vector[(String, Int, Int)] = {
-    val prep = Scrub.prepared(names, Scrub.triggerMask(text))
     val out = Vector.newBuilder[(String, Int, Int)]
-    Scrub.forEachHit(prep, text, (i, s, e) => out += ((prep.names(i), s, e)))
+    Scrub.forEachHit(text, names, (p, s, e) => out += ((Scrub.FullOrder(p), s, e)))
     out.result()
   }
 

@@ -37,6 +37,19 @@ object HostileDocs {
       "postal_chain" -> fill("mail a@b.co ", size)(_.append("x1234567")),
       "phone_chain" -> fill("mail a@b.co ", size)(_.append("03-1234-5678z")),
       "all_at" -> fill("", size)(_.append('@')),
+      // a kanji run with 都 or 市 every 9-16 chars: address's {1,10} and
+      // {1,15} windows find a prefecture and a city char at most offsets
+      "kanji_pref_city" -> fill("", size) { sb =>
+        for (_ <- 0 until 8 + rnd.nextInt(8)) sb.append((0x4E00 + rnd.nextInt(0x51A0)).toChar)
+        sb.append(if (rnd.nextBoolean()) '都' else '市')
+      },
+      // runs of 1-4 digits and whitespace in turn, with a ',' or '-' now
+      // and then: amount, postal and phone start at most units and run
+      // their digit windows
+      "digit_space" -> fill("", size) { sb =>
+        for (_ <- 0 to rnd.nextInt(4)) sb.append(('0' + rnd.nextInt(10)).toChar)
+        sb.append(" \u3000 \n ,-".charAt(rnd.nextInt(7)))
+      },
       "long_line" -> fill("", size)(_.append(words(rnd.nextInt(words.size))).append(' ')),
       "repeated_lines" -> fill("", size)(_.append("x@ab.co 12\n")))
     val docs = texts.map { case (f, t) => Doc(f, t, htmlOf(t)) }

@@ -84,6 +84,29 @@ class ToxicitySpec extends AnyFunSuite {
       !lenient.getString(1).contains("damn"), lenient.getString(1))
   }
 
+  test("the pipeline evaluates the toxicity count once per row") {
+    import spark.implicits._
+    // an RDD source: a local one would be folded into the plan's literals
+    val pages = spark.sparkContext.parallelize(Seq(
+      ("https://t.example/1", new java.sql.Timestamp(0L), Array.empty[Byte],
+        "Most readers scan the first damn page of a report and move on.", "en")), 1)
+      .toDF("url", "warc_ts", "html", "text", "lang")
+    val scored = Pipeline.run(spark, pages,
+      Pipeline.Conf(toxicityByLang = Some(Map("*" -> Toxicity.DefaultList))))
+    // the count UDF returns the long n_toxic; the mask UDF returns a string
+    for (df <- Seq(scored, scored.where(col("keep")), scored.where(!col("keep")))) {
+      val plan = df.queryExecution.executedPlan
+      val counts = plan.collect { case node =>
+        node.expressions.flatMap(_.collect {
+          case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
+              if u.dataType == org.apache.spark.sql.types.LongType => u
+        })
+      }.flatten
+      assert(counts.size == 1, s"count UDF instances: ${counts.size}\n$plan")
+    }
+    assert(scored.select("drop_reason", "n_toxic").head() == org.apache.spark.sql.Row("toxicity", 1L))
+  }
+
   test("a 100-term list gives the same pipeline output as its two hot terms") {
     import spark.implicits._
     // the 98 padding terms occur in neither page, so the output must equal
