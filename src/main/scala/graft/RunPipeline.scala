@@ -32,11 +32,9 @@ object RunPipeline {
       // serializing parquet encode — keep one task per (bucket,salt) wave
       .config("spark.sql.adaptive.coalescePartitions.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "false"))
-      // codec stays an explicit knob; measured by cpuSec (BENCH.md) snappy
-      // and lz4_raw are within noise on this output, so snappy (the
-      // ecosystem default) is pinned
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "snappy"))
+      // measured by cpuSec (BENCH.md), snappy and lz4_raw are within noise
+      // on this output, so snappy (the ecosystem default) is pinned
+      .config("spark.sql.parquet.compression.codec", "snappy")
     sys.env.get("SPARK_GRAFT_CPUS").foreach { c =>
       builder.master(s"local[$c]")
         .config("spark.sql.shuffle.partitions",
@@ -64,15 +62,6 @@ object RunPipeline {
       toxicityByLang = sys.env.get("SPARK_GRAFT_TOXICITY")
         .map(spec => Map("*" -> Toxicity.listFromSpec(spark, spec))))
 
-    // SPARK_GRAFT_WARMUP=1: one untimed score-only pass first, so the timed
-    // write measures JIT steady state (a single cold pass under-reports the
-    // 32-thread stage 2-3× while C2 contends with the workers — BENCH.md).
-    // A real long-running job is at steady state for all but its first
-    // seconds; the driver-style single-shot run is the artificial case.
-    if (sys.env.get("SPARK_GRAFT_WARMUP").contains("1")) {
-      Pipeline.run(spark, spark.read.parquet(in), conf)
-        .write.format("noop").mode("overwrite").save()
-    }
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val cpu0 = osBean.getProcessCpuTime

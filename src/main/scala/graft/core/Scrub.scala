@@ -39,11 +39,13 @@ import scala.collection.mutable
   * local-part and email-domain run is read once; so a scan is linear in the
   * text.
   *
-  * The moded scrub ([[scrubWithModeRaw]]) splices the aliases of one
-  * [[Aliases]] state into a char array copied in bulk from the input's
-  * chars (the backing array of a [[CharsView]]), and looks up a repeated
+  * Every scrub (the moded [[scrubWithModeRaw]], [[scrubTags]],
+  * [[scrubDict]], [[scrubRef]]) splices the aliases of one [[Aliases]]
+  * state into a char array copied in bulk from the input's chars (the
+  * backing array of a [[CharsView]]), and looks up a repeated
   * original by hashing its chars in place, so a hit allocates only what the
-  * output keeps: a new original's String and the result maps.
+  * output keeps: a new original's String, its kind's count and the result
+  * maps.
   *
   * Three alias modes:
   *  - `tags` — fixed `<KIND>` tokens (oracle-friendly; [[scrubTags]]);
@@ -154,8 +156,12 @@ object Scrub {
     bits
   }
 
+  /** The order of each scan mask; [[FullOrder]] and [[ReferenceOrder]]
+    * themselves for theirs, which [[orderBits]] reads without a lookup. */
   private val namesByBits: Array[Vector[String]] = Array.tabulate(FullBits + 1)(b =>
-    FullOrder.indices.filter(i => (b >> i & 1) != 0).map(FullOrder).toVector)
+    if (b == FullBits) FullOrder
+    else if (b == RefBits) ReferenceOrder
+    else FullOrder.indices.filter(i => (b >> i & 1) != 0).map(FullOrder).toVector)
 
   /** Drop patterns whose trigger units do not all occur. */
   def triggered(text: CharSequence, names: Seq[String]): Seq[String] = {
@@ -215,67 +221,9 @@ object Scrub {
     }
   }
 
-  /** Builds a spliced copy of `src(0 until srcLen)`: `put` replaces a span, in text
-    * order; `spliced` is the result, or NULL when nothing was put. Text
-    * between spans is copied in bulk. */
-  private abstract class Splice(protected val src: Array[Char], protected val srcLen: Int)
-      extends HitSink {
-    private var out: Array[Char] = null
-    private var len = 0
-    private var last = 0
-
-    private def reserve(k: Int): Unit =
-      if (out == null) out = new Array[Char](math.max(srcLen + 16, k))
-      else if (len + k > out.length)
-        out = java.util.Arrays.copyOf(out, math.max(out.length * 2, len + k))
-
-    final def put(start: Int, end: Int, alias: String): Unit = {
-      val gap = start - last
-      reserve(gap + alias.length)
-      System.arraycopy(src, last, out, len, gap)
-      len += gap
-      alias.getChars(0, alias.length, out, len)
-      len += alias.length
-      last = end
-    }
-
-    final def spliced: String =
-      if (out == null) null
-      else {
-        reserve(srcLen - last)
-        System.arraycopy(src, last, out, len, srcLen - last)
-        new String(out, 0, len + srcLen - last)
-      }
-  }
-
-  /** One left-to-right pass; `aliasFor(kind, matchedText)` supplies the
-    * replacement. Returns the scrubbed text, or NULL when nothing matched —
-    * the raw form lets the fused hot path skip re-encoding an unchanged
-    * document (most web rows) instead of copying it through a String. */
-  def scrubRaw(text: CharSequence, names: Seq[String],
-               aliasFor: (String, String) => String): String = {
-    val bits = orderBits(names)
-    val n = text.length
-    if (bits == 0 || n == 0) return null
-    val a = chars(text)
-    val splice = new Splice(a, n) {
-      def hit(p: Int, start: Int, end: Int): Unit =
-        put(start, end, aliasFor(patternKind(p), new String(a, start, end - start)))
-    }
-    scan(a, n, bits & triggeredBits(a, n), splice)
-    splice.spliced
-  }
-
-  /** String-total [[scrubRaw]]: unchanged input returns the input itself. */
-  def scrub(text: String, names: Seq[String],
-            aliasFor: (String, String) => String): String = {
-    val r = scrubRaw(text, names, aliasFor)
-    if (r == null) text else r
-  }
-
   /** Fixed-token mode: every match of kind k becomes `<K>`. */
   def scrubTags(text: String, names: Seq[String] = ReferenceOrder): String =
-    scrub(text, names, (k, _) => "<" + k.toUpperCase + ">")
+    total(aliasScrub(Aliases.Tags, text, "", "", orderBits(names), Nil), text).scrubbed
 
   /** Result of a dictionary scrub: the scrubbed text, the per-document alias
     * dictionary (original → alias, insertion-ordered by first occurrence) and
@@ -291,31 +239,22 @@ object Scrub {
     * (`<PERSON_1>`, `<EMAIL_2>`, ...). The same original string always maps to
     * the same alias within a document; numbering follows first occurrence in
     * the single scan, per tag. Deterministic given (text, names). */
-  def scrubDict(text: String, names: Seq[String] = FullOrder): DictResult = {
-    val d = aliasScrub(Aliases.Dict, text, "", "", orderBits(names), Nil)
-    if (d.scrubbed == null) d.copy(scrubbed = text) else d
-  }
+  def scrubDict(text: String, names: Seq[String] = FullOrder): DictResult =
+    total(aliasScrub(Aliases.Dict, text, "", "", orderBits(names), Nil), text)
 
   /** Reference-alias mode over the reference's 4-pattern union, including the
     * JPY branch — byte-identical to the Python service for phone/amount/id. */
   def scrubRef(text: String, keyB64: String, ns: String,
                names: Seq[String] = ReferenceOrder): String =
-    scrub(text, names, (k, orig) => RefAlias.aliasWithJpyRule(k, orig, keyB64, ns))
+    total(aliasScrub(Aliases.Ref, text, keyB64, ns, orderBits(names), Nil), text).scrubbed
 
-  /** Policy-filtered pattern order, CACHED per (order, csv) — the filter
-    * must not run per row in the fused hot path. `policiesCsv` = the
-    * reference's per-request `policies` (comma-separated hit kinds,
-    * app/main.py:379); empty = all patterns. */
-  private val policyCache =
-    new java.util.concurrent.ConcurrentHashMap[(Seq[String], String), Seq[String]]()
+  /** The patterns of `order` whose kind a policies csv enables.
+    * `policiesCsv` = the reference's per-request `policies` (comma-separated
+    * hit kinds, app/main.py:379); empty = all patterns. */
   def filteredOrder(order: Seq[String], policiesCsv: String): Seq[String] =
-    if (policiesCsv.isEmpty) order
-    else policyCache.computeIfAbsent((order, policiesCsv), { case (o, csv) =>
-      val set = policyKinds(csv)
-      o.filter(n => set.contains(kindOf(n)))
-    })
+    namesByBits(orderBits(order) & policyBits(policiesCsv))
 
-  /** Hit KINDS enabled by a policies csv, cached like [[filteredOrder]]. */
+  /** Hit KINDS enabled by a policies csv, cached per csv. */
   private val policyKindsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
   def policyKinds(policiesCsv: String): Set[String] =
@@ -332,7 +271,7 @@ object Scrub {
         if (ks(patternKind(i))) m | (1 << i) else m))
     }).intValue
 
-  /** The union pass of [[scrub]] as a SPAN view: same scan, same order
+  /** The union pass of the scrub as a SPAN view: same scan, same order
     * resolution, but hits are collected instead of replaced — the input to
     * the ENHANCED merge path. conf/reason carry the rule-detector values
     * only where the merge needs them (kind + offsets + text decide). */
@@ -394,12 +333,14 @@ object Scrub {
 
   /** String-total [[scrubWithModeRaw]]: unchanged ⇒ scrubbed = the input. */
   def scrubWithMode(mode: String, t: String, keyB64: String, ns: String,
-                    policiesCsv: String, modelHits: Seq[Hit] = Nil): DictResult = {
-    val d = scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv, modelHits)
-    if (d.scrubbed == null) d.copy(scrubbed = t) else d
-  }
+                    policiesCsv: String, modelHits: Seq[Hit] = Nil): DictResult =
+    total(scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv, modelHits), t)
 
-  /** The hit kinds with a fixed index in [[Aliases]]' counts: every kind of
+  /** `d` with an unchanged (NULL) scrub replaced by the input itself. */
+  private def total(d: DictResult, t: String): DictResult =
+    if (d.scrubbed == null) d.copy(scrubbed = t) else d
+
+  /** The hit kinds with a fixed index in [[Aliases]]: every kind of
     * [[Patterns.byName]], then the model-NER-only kinds (Hf2Pii: ORG→org,
     * MISC→misc). */
   private val Kinds: Array[String] =
@@ -419,38 +360,28 @@ object Scrub {
     if (n <= CachedAliases) dictAliases(tag)(n - 1)
     else "<" + DictTags(tag) + "_" + n + ">"
 
-  /** Position of each kind of [[Kinds]] in the iteration order of a
-    * `mutable.HashMap` holding all of them. Below 11 keys such a map keeps
-    * its 16 buckets, so any subset iterates in this relative order. */
-  private val kindRank: Array[Int] = {
-    val m = mutable.HashMap.empty[String, Long]
-    Kinds.foreach(m.update(_, 0L))
-    val order = m.keys.toVector
-    Kinds.map(order.indexOf)
-  }
-
   /** One document's alias state for a scrub mode — the ONE place each
-    * mode's alias rule lives — and the splice it feeds:
+    * mode's alias rule lives — and the one splice of every scrub:
     *  - `dict`: `<TAG_n>` numbered per tag by first occurrence of each
     *    (tag, original); the aliases map lists originals in that order;
     *  - `tags`: fixed `<KIND>` tokens, no aliases;
     *  - `ref`:  [[RefAlias]] aliases with the JPY rule, keyed by original.
-    * A hit counts its kind and splices its replacement. Originals are
-    * looked up in an open-address table by hashing their chars where they
-    * lie, so a repeated original allocates nothing; the state is allocated
-    * on the first hit — most web rows have none. [[result]] builds maps
-    * with the contents and iteration order of the Scala maps the rule was
-    * first written with: a `LinkedHashMap` of aliases, a `mutable.HashMap`
-    * of `ref` aliases and of counts, each then `toMap`. */
-  private final class Aliases(rule: Int, keyB64: String, ns: String, text: Array[Char], len: Int)
-      extends Splice(text, len) {
-    // counts by kind index; kinds past Kinds are in `otherKinds`
-    private var counts: Array[Long] = null
-    private var firstSeen: Array[Int] = null // kind indices by first hit
-    private var nSeen = 0
-    private var nHits = 0
-    private var hitsAtLastNewKind = 0
-    private var otherKinds: mutable.ArrayBuffer[String] = null
+    * A hit counts its kind and appends its replacement to a char array that
+    * takes the text between hits in bulk from the input's chars; [[result]]
+    * makes the one String. Originals are looked up in an open-address table
+    * by hashing their chars where they lie, so a repeated original
+    * allocates nothing. The counts are kept in the `mutable.HashMap` whose
+    * iteration order `n_hits` exposes (after `toMap`), and [[result]]
+    * builds `alias_dict` with the contents and order of a `LinkedHashMap` of
+    * `dict` aliases or a `mutable.HashMap` of `ref` aliases, then `toMap`.
+    * All of it is allocated on the first hit — most web rows have none. */
+  private final class Aliases(rule: Int, keyB64: String, ns: String, src: Array[Char], srcLen: Int)
+      extends HitSink {
+    // the spliced text so far is out(0 until len); src continues at last
+    private var out: Array[Char] = null
+    private var len = 0
+    private var last = 0
+    private var counts: mutable.HashMap[String, Long] = null
     // alias entries in first-occurrence order, and their hash slots
     private var origs: Array[String] = null
     private var tags: Array[Int] = null
@@ -461,48 +392,40 @@ object Scrub {
     private var perTag: Array[Int] = null
 
     def hit(p: Int, start: Int, end: Int): Unit =
-      put(start, end, alias(patternKindIndex(p), src, start, end, null))
+      put(start, end, alias(patternKind(p), patternKindIndex(p), src, start, end, null))
 
     /** Splices a (rule or model) hit, aliasing its `text`. */
     def putHit(h: Hit): Unit =
-      put(h.start, h.end, alias(kindIndexOf(h.kind), h.text.toCharArray, 0, h.text.length, h.text))
+      put(h.start, h.end, alias(h.kind, kindIndex.getOrElse(h.kind, -1),
+        h.text.toCharArray, 0, h.text.length, h.text))
 
-    private def kindIndexOf(kind: String): Int = {
-      val k = kindIndex.getOrElse(kind, -1)
-      if (k >= 0) k
-      else {
-        if (otherKinds == null) otherKinds = mutable.ArrayBuffer.empty
-        val j = otherKinds.indexOf(kind)
-        if (j >= 0) Kinds.length + j
-        else { otherKinds += kind; Kinds.length + otherKinds.size - 1 }
-      }
-    }
+    private def reserve(k: Int): Unit =
+      if (out == null) out = new Array[Char](math.max(srcLen + 16, k))
+      else if (len + k > out.length)
+        out = java.util.Arrays.copyOf(out, math.max(out.length * 2, len + k))
 
-    private def kindName(k: Int): String =
-      if (k < Kinds.length) Kinds(k) else otherKinds(k - Kinds.length)
-
-    private def count(k: Int): Unit = {
-      if (counts == null) { counts = new Array[Long](Kinds.length); firstSeen = new Array[Int](4) }
-      if (k >= counts.length) counts = java.util.Arrays.copyOf(counts, k + 1)
-      if (counts(k) == 0L) {
-        if (nSeen == firstSeen.length) firstSeen = java.util.Arrays.copyOf(firstSeen, nSeen * 2)
-        firstSeen(nSeen) = k
-        nSeen += 1
-        hitsAtLastNewKind = nHits + 1
-      }
-      counts(k) += 1L
-      nHits += 1
+    /** Appends the text up to `start`, then `alias` for `src(start until end)`. */
+    private def put(start: Int, end: Int, alias: String): Unit = {
+      val gap = start - last
+      reserve(gap + alias.length)
+      System.arraycopy(src, last, out, len, gap)
+      len += gap
+      alias.getChars(0, alias.length, out, len)
+      len += alias.length
+      last = end
     }
 
     /** Replacement of `src(s until e)` (the original, `orig` when already a
-      * String) as a hit of kind `k`. */
-    private def alias(k: Int, src: Array[Char], s: Int, e: Int, orig: String): String = {
-      count(k)
+      * String) as a hit of `kind`, whose index in [[Kinds]] is `k` (-1 for a
+      * model kind outside them: tag `PII`, token `<KIND>`). */
+    private def alias(kind: String, k: Int, src: Array[Char], s: Int, e: Int, orig: String): String = {
+      if (counts == null) counts = mutable.HashMap.empty
+      counts.update(kind, counts.getOrElse(kind, 0L) + 1L)
       rule match {
         case Aliases.Tags =>
-          if (k < Kinds.length) Aliases.TagTokens(k) else "<" + kindName(k).toUpperCase + ">"
+          if (k >= 0) Aliases.TagTokens(k) else "<" + kind.toUpperCase + ">"
         case Aliases.Dict =>
-          val tag = if (k < Kinds.length) k else OtherTag
+          val tag = if (k >= 0) k else OtherTag
           val h = hashOf(tag, src, s, e)
           val i = find(tag, h, src, s, e)
           if (i >= 0) vals(i)
@@ -517,7 +440,7 @@ object Scrub {
           if (i >= 0) vals(i)
           else {
             val o = if (orig != null) orig else new String(src, s, e - s)
-            add(0, h, o, RefAlias.aliasWithJpyRule(kindName(k), o, keyB64, ns))
+            add(0, h, o, RefAlias.aliasWithJpyRule(kind, o, keyB64, ns))
           }
       }
     }
@@ -577,11 +500,13 @@ object Scrub {
       slots(j) = x + 1
     }
 
-    def result: DictResult = {
-      val scrubbed = spliced
-      if (nHits == 0) NoHits
-      else DictResult(scrubbed, aliasMap, countMap)
-    }
+    def result: DictResult =
+      if (counts == null) NoHits
+      else {
+        reserve(srcLen - last)
+        System.arraycopy(src, last, out, len, srcLen - last)
+        DictResult(new String(out, 0, len + srcLen - last), aliasMap, counts.toMap)
+      }
 
     private def aliasMap: Map[String, String] =
       if (nEntries == 0) Map.empty
@@ -597,36 +522,6 @@ object Scrub {
         val m = mutable.HashMap.empty[String, String]
         var x = 0
         while (x < nEntries) { m.update(origs(x), vals(x)); x += 1 }
-        m.toMap
-      }
-
-    private def countMap: Map[String, Long] =
-      if (otherKinds == null) {
-        // the kinds in mutable.HashMap order (kindRank), then toMap
-        val ks = java.util.Arrays.copyOf(firstSeen, nSeen)
-        var i = 1
-        while (i < nSeen) {
-          val k = ks(i)
-          var j = i - 1
-          while (j >= 0 && kindRank(ks(j)) > kindRank(k)) { ks(j + 1) = ks(j); j -= 1 }
-          ks(j + 1) = k
-          i += 1
-        }
-        val b = Map.newBuilder[String, Long]
-        i = 0
-        while (i < nSeen) { b += Kinds(ks(i)) -> counts(ks(i)); i += 1 }
-        b.result()
-      } else {
-        // rebuild the mutable.HashMap the counts were updated in: its
-        // table grows on any update at the threshold, so a hit after the
-        // last new kind is one more update
-        val m = mutable.HashMap.empty[String, Long]
-        var i = 0
-        while (i < nSeen) { m.update(kindName(firstSeen(i)), counts(firstSeen(i))); i += 1 }
-        if (nHits > hitsAtLastNewKind) {
-          val k = firstSeen(nSeen - 1)
-          m.update(kindName(k), counts(k))
-        }
         m.toMap
       }
   }

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions.{filter, lit, lower, split, udf}
   *
   * Each UDF is a deterministic Scala UDF over the pure `graft.core`
   * functions (the reference's per-request Python logic collapsed into
-  * per-row JVM calls — SURVEY.md §3). Regex `Pattern`s and models live in
-  * JVM-level lazy vals, compiled once per executor — the Spark analog of the
-  * reference's module-level precompiled regexes and `lru_cache`d models
-  * (app/detectors.py:15-25,64-74). None is marked `asNondeterministic`:
+  * per-row JVM calls — SURVEY.md §3). The scrub's matcher tables and the
+  * models live in JVM-level vals, built once per executor — the Spark analog
+  * of the reference's module-level precompiled regexes and `lru_cache`d
+  * models (app/detectors.py:15-25,64-74); no regex runs in a scrub or
+  * detector UDF. None is marked `asNondeterministic`:
   * determinism lets Catalyst freely reorder and cache them.
   *
   * Where a stage carries real model state (langid, perplexity) the

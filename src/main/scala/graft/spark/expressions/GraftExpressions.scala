@@ -37,23 +37,17 @@ object ExprHelpers {
   private def u8(s: String): UTF8String =
     langU8.computeIfAbsent(s, UTF8String.fromString)
 
-  private def strMap(m: collection.Map[String, String]): ArrayBasedMapData = {
+  /** A map column's data in `m`'s iteration order; String values as UTF-8. */
+  private def mapData(m: collection.Map[String, Any]): ArrayBasedMapData = {
     if (m.isEmpty) return emptyMapData
     val k = new Array[Any](m.size)
     val v = new Array[Any](m.size)
     var i = 0
     m.foreach { case (a, b) =>
-      k(i) = UTF8String.fromString(a); v(i) = UTF8String.fromString(b); i += 1
+      k(i) = UTF8String.fromString(a)
+      v(i) = b match { case s: String => UTF8String.fromString(s); case x => x }
+      i += 1
     }
-    new ArrayBasedMapData(new GenericArrayData(k), new GenericArrayData(v))
-  }
-
-  private def longMap(m: collection.Map[String, Long]): ArrayBasedMapData = {
-    if (m.isEmpty) return emptyMapData
-    val k = new Array[Any](m.size)
-    val v = new Array[Any](m.size)
-    var i = 0
-    m.foreach { case (a, b) => k(i) = UTF8String.fromString(a); v(i) = b; i += 1 }
     new ArrayBasedMapData(new GenericArrayData(k), new GenericArrayData(v))
   }
 
@@ -154,7 +148,7 @@ object ExprHelpers {
       m.dupLineFrac, m.dupWordFrac, m.alphaWordRatio, m.maxWordLen, m.cjkRatio))
     new GenericInternalRow(Array[Any](
       u8(l), c, p, q,
-      scrubbedOut, strMap(d.aliases), longMap(d.counts),
+      scrubbedOut, mapData(d.aliases), mapData(d.counts),
       hitsArray(modelHits)))
   }
 }

@@ -105,8 +105,7 @@ class RefParitySpec extends AnyFunSuite {
   test("reference-alias union scrub (phone/amount/id incl. JPY branch) matches") {
     val names = Vector("phone", "amount", "id")
     battery.zipWithIndex.foreach { case (s, i) =>
-      val got = Scrub.scrub(s, names,
-        (k, o) => RefAlias.aliasWithJpyRule(k, o, keyB64, ns))
+      val got = Scrub.scrubRef(s, keyB64, ns, names)
       assert(got == root.get("union_ref_all").get(i).asText, s"input=${s.take(60)}")
     }
   }

@@ -64,7 +64,7 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("q_bpe_encode matches the CPython twin over the sf0.01 corpus") {
-    val got = SparkEntry.queries("q_bpe_encode")(spark, "/root/testdata/sf0.01")
+    val got = SparkEntry.queries("q_bpe_encode")(spark, TestData("sf0.01"))
     val want = spark.read.parquet(
       "src/test/resources/golden/expected_sf0.01/bpe_encode.parquet")
     assert(got.count() == want.count())
@@ -72,7 +72,7 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("q_bpe_merges matches the CPython twin over the sf0.01 corpus") {
-    val got = SparkEntry.queries("q_bpe_merges")(spark, "/root/testdata/sf0.01")
+    val got = SparkEntry.queries("q_bpe_merges")(spark, TestData("sf0.01"))
     val want = spark.read.parquet(
       "src/test/resources/golden/expected_sf0.01/bpe_merges.parquet")
     assert(got.count() == 50)

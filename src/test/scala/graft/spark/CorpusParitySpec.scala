@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CorpusParitySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
-  private val dir = "/root/testdata/sf0.01"
+  private val dir = TestData("sf0.01")
   private val golden = "src/test/resources/golden/expected_sf0.01"
 
   test("scrub_ref matches CPython reference semantics on all 500 docs") {

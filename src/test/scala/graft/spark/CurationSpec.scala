@@ -66,7 +66,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("q_curation matches the CPython composed-curation twin") {
-    val got = graft.SparkEntry.queries("q_curation")(spark, "/root/testdata/sf0.01")
+    val got = graft.SparkEntry.queries("q_curation")(spark, TestData("sf0.01"))
       .collect().map(_.getString(0)).toSet
     val want = spark.read.parquet(
       "src/test/resources/golden/expected_sf0.01/curation.parquet")

@@ -50,7 +50,7 @@ class DecontamSpec extends AnyFunSuite {
   }
 
   test("q_decontam matches the CPython twin over the sf0.01 corpus") {
-    val got = SparkEntry.queries("q_decontam")(spark, "/root/testdata/sf0.01")
+    val got = SparkEntry.queries("q_decontam")(spark, TestData("sf0.01"))
     val want = spark.read.parquet(
       "src/test/resources/golden/expected_sf0.01/decontam.parquet")
     assert(got.count() == 500)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (brute-force) twins on the sf0.001 test tables. */
 class DedupAnnSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = TestData("sf0.001")
 
   private def docsDedup = {
     val base = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")

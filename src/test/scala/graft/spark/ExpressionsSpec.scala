@@ -90,6 +90,34 @@ class ExpressionsSpec extends AnyFunSuite {
     assertMatchesCore(pages.toDF(), pages.collect().map(p => p.url -> p.text).toMap)
   }
 
+  test("alias_dict and n_hits keep core's entry order through Spark, in every mode") {
+    // the specs above compare the maps after toMap; the stored key order is
+    // what a row-identity check over to_json reads
+    val planted = (0 until 20).map(i => s"https://o.example/$i" ->
+      (s"mail u$i@ex.com and v$i@ex.com tel 03-1234-${5678 + i} pay ¥1,${100 + i} " +
+        s"id ACC-${12345 + i} 〒100-${1000 + i} 東京都新宿区西 新宿 山田太郎さん mail u$i@ex.com"))
+    val rows = DataGen.pages(spark, 400, partitions = 4).collect().toSeq
+      .map(p => p.url -> p.text) ++ planted
+    val df = pagesDf(rows)
+    for (mode <- Seq("dict", "ref", "tags")) {
+      val conf = Pipeline.Conf(scrubMode = mode)
+      val got = Pipeline.run(spark, df, conf)
+        .select(col("url"), map_keys(col("alias_dict")), map_values(col("alias_dict")),
+          map_keys(col("n_hits")), map_values(col("n_hits")))
+        .collect().map(r => r.getString(0) -> ((r.getSeq[String](1).zip(r.getSeq[String](2)),
+          r.getSeq[String](3).zip(r.getSeq[Long](4)))))
+        .toMap
+      var manyKinds = 0
+      rows.foreach { case (url, t) =>
+        val d = Scrub.scrubWithMode(mode, t, conf.keyB64, conf.ns, "")
+        if (d.counts.size > 4) manyKinds += 1
+        assert(got(url) == ((d.aliases.toSeq, d.counts.toSeq)), s"mode=$mode url=$url")
+      }
+      // past four entries an immutable Map iterates in hash order
+      if (mode != "ref") assert(manyKinds >= 20, mode)
+    }
+  }
+
   test("page_stages byte-path decode matches the core String path on tricky unicode") {
     // 1-, 2-, 3- and 4-byte UTF-8 sequences (the 4-byte emoji become
     // surrogate PAIRS in the char view — offsets/metrics must match the
@@ -113,7 +141,7 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("page_stages stays inside whole-stage codegen over a parquet scan") {
-    val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val base = spark.read.parquet(TestData("sf0.001/documents.parquet"))
     val df = base.selectExpr(
       "page_stages(text, 'dict', '', '') AS r").select("r.lang_id", "r.q.nWords")
     val plan = df.queryExecution.executedPlan.toString

@@ -13,7 +13,7 @@ class IvfMaintenanceSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private def fixture() = {
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val e = spark.read.parquet(TestData("sf0.001/embeddings.parquet"))
     val base = e.where(col("vec_id") % 10 =!= 3) // held-out tenth appended later
     val extra = e.where(col("vec_id") % 10 === 3)
     val cents = Ann.kmeansCentroids(base, "embedding", k = 16)
@@ -94,7 +94,7 @@ class IvfMaintenanceSpec extends AnyFunSuite {
       .isEmpty, "tombstoned rows resurrected by rebuild")
     // the permanent-tombstone rule lifts with the rebuild: the deleted id
     // no longer exists anywhere, so re-inserting it is legal again
-    val resurrect = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val resurrect = spark.read.parquet(TestData("sf0.001/embeddings.parquet"))
       .where(col("vec_id") === deadIds.head)
     Ann.appendToIndex(spark, dir, resurrect, "embedding")
     assert(Ann.readIndex(spark, dir)._1

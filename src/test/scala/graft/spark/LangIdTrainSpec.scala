@@ -45,7 +45,7 @@ class LangIdTrainSpec extends AnyFunSuite {
   }
 
   test("q_langid_train matches the CPython twin over the sf0.01 corpus") {
-    val got = SparkEntry.queries("q_langid_train")(spark, "/root/testdata/sf0.01")
+    val got = SparkEntry.queries("q_langid_train")(spark, TestData("sf0.01"))
     val want = spark.read.parquet(
       "src/test/resources/golden/expected_sf0.01/langid_train.parquet")
     assert(got.count() == want.count())

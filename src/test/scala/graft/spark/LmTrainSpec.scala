@@ -65,7 +65,7 @@ class LmTrainSpec extends AnyFunSuite {
   }
 
   test("q_lm_train matches the CPython twin over the sf0.01 corpus") {
-    val got = SparkEntry.queries("q_lm_train")(spark, "/root/testdata/sf0.01")
+    val got = SparkEntry.queries("q_lm_train")(spark, TestData("sf0.01"))
     val want = spark.read.parquet(
       "src/test/resources/golden/expected_sf0.01/lm_train.parquet")
     assert(got.count() == want.count())
@@ -74,7 +74,7 @@ class LmTrainSpec extends AnyFunSuite {
 
   test("corpus-trained model orders natural text below gibberish") {
     val m = LmTrain.train(
-      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "text")
+      spark.read.parquet(TestData("sf0.001/documents.parquet")), "text")
     val natural = "the report shows that most users read the first page and move on"
     val junk = "#$%&*+=~^|@!?<>{}[]()" * 10
     // corpus-trained margin is smaller than the seed-trained models' (the

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class MultimodalNerSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = TestData("sf0.001")
 
   private def media = Multimodal.mediaTable(spark,
     spark.read.parquet(s"$dir/documents.parquet")

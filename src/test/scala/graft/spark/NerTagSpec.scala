@@ -19,7 +19,7 @@ class NerTagSpec extends AnyFunSuite {
       "Most readers scan the first page of a report and move on."
 
   test("q_ner_train matches the CPython twin over the pages corpus") {
-    val got = SparkEntry.queries("q_ner_train")(spark, "/root/testdata/sf0.01")
+    val got = SparkEntry.queries("q_ner_train")(spark, TestData("sf0.01"))
     val want = spark.read.parquet(
       "src/test/resources/golden/expected_sf0.01/ner_train.parquet")
     assert(got.count() == want.count())

@@ -43,7 +43,7 @@ class PlanSpec extends AnyFunSuite {
     // show ZERO direct parquet re-scans — every consumer (arcs + both
     // sides of the band self-join) reads the one materialized collapsed
     // relation (a LogicalRDD leaf)
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(TestData("sf0.001/documents.parquet"))
     val out = Dedup.minHashLsh(docs, "doc_id", "text",
       shingleK = 3, numHashes = 128, bands = 32, threshold = 0.5)
     assert(out.count() > 0)
@@ -70,7 +70,7 @@ class PlanSpec extends AnyFunSuite {
     // predates EnsureRequirements; the AQE root hides its subtree)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      val docs = spark.read.parquet(TestData("sf0.001/documents.parquet"))
       def exchangesOf(df: org.apache.spark.sql.DataFrame) =
         df.queryExecution.executedPlan.collect {
           case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
@@ -97,7 +97,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("persisted IVF index prunes cell partitions at planning time") {
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val e = spark.read.parquet(TestData("sf0.001/embeddings.parquet"))
     val q = e.where(col("vec_id") === 0).select(col("embedding")).head()
       .getSeq[Float](0).toArray
     val rest = e.where(col("vec_id") =!= 0)
@@ -120,7 +120,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("customer dimension join is a broadcast hash join") {
-    val plan = graft.SparkEntry.queries("q_join_agg")(spark, "/root/testdata/sf0.001")
+    val plan = graft.SparkEntry.queries("q_join_agg")(spark, TestData("sf0.001"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
@@ -178,7 +178,7 @@ class PlanSpec extends AnyFunSuite {
   test("decontamination marking is a single narrow stage — zero Exchange") {
     // benchmark membership travels as a broadcast variable inside the UDF,
     // never as a join: the corpus-side plan must not shuffle
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(TestData("sf0.001/documents.parquet"))
     val marked = Decontam.mark(docs, "doc_id", "text",
       Array(1L, 2L, 3L), k = 13)
     val plan = marked.queryExecution.executedPlan.toString
@@ -189,7 +189,7 @@ class PlanSpec extends AnyFunSuite {
     // the mapPartitions fold emits ≤ A^3 rows per partition; the plan must
     // show exactly ONE Exchange (the bounded final-agg shuffle), with a
     // partial aggregate below it
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(TestData("sf0.001/documents.parquet"))
     val plan = LmTrain.gramCounts(docs, "text")
       .queryExecution.executedPlan.toString
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
@@ -199,7 +199,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("langid-training scan prunes to the lang and text columns") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(TestData("sf0.001/documents.parquet"))
     val plan = LangIdTrain.gramCounts(docs, "lang", "text")
       .queryExecution.executedPlan.toString
     val scan = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
@@ -221,7 +221,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("per-language toxicity row prunes the documents scan to (doc_id, text)") {
     val df = graft.SparkEntry.queries("q_toxicity_bylang")(
-      spark, "/root/testdata/sf0.001")
+      spark, TestData("sf0.001"))
     val scan = df.queryExecution.executedPlan.toString
       .linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(scan.contains("doc_id") && scan.contains("text"), scan)

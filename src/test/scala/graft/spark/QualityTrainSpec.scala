@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class QualityTrainSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
-  private val dir = "/root/testdata/sf0.01"
+  private val dir = TestData("sf0.01")
 
   test("weights are bit-identical across partitionings") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
