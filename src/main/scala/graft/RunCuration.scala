@@ -27,8 +27,7 @@ object RunCuration {
       .config("spark.sql.adaptive.enabled", "true")
     sys.env.get("SPARK_GRAFT_CPUS").foreach { c =>
       builder.master(s"local[$c]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", c))
+        .config("spark.sql.shuffle.partitions", c)
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.ui.enabled", "false")
     }

@@ -30,23 +30,19 @@ object RunPipeline {
       // AQE's 64MB advisory target would coalesce the post-shuffle score+
       // write stage below the core count (8 tasks on a 500MB shuffle),
       // serializing parquet encode — keep one task per (bucket,salt) wave
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "false"))
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       // measured by cpuSec (BENCH.md), snappy and lz4_raw are within noise
       // on this output, so snappy (the ecosystem default) is pinned
       .config("spark.sql.parquet.compression.codec", "snappy")
     sys.env.get("SPARK_GRAFT_CPUS").foreach { c =>
       builder.master(s"local[$c]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", c))
+        .config("spark.sql.shuffle.partitions", c)
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.ui.enabled", "false")
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // salt width trades shuffle fan-out for parquet-encode parallelism in
-    // the write stage (bench knob; default = Conf default);
     // SPARK_GRAFT_SECURITY selects the reference's 4-level surface
     // (maximum default — model NER at enhanced/standard), and
     // SPARK_GRAFT_TOXICITY enables the C4 blocklist stage (drop + output
@@ -55,8 +51,6 @@ object RunPipeline {
     // UT1/LDNOOBW-format list loaded via the Hadoop FS API (hdfs/s3a
     // ready), anything else = an inline comma-separated list
     val conf = Pipeline.Conf(scrubMode = scrubMode,
-      saltBuckets = sys.env.get("SPARK_GRAFT_SALT").map(_.toInt)
-        .getOrElse(Pipeline.Conf().saltBuckets),
       security = Pipeline.SecurityLevel.parse(
         sys.env.getOrElse("SPARK_GRAFT_SECURITY", "maximum")),
       toxicityByLang = sys.env.get("SPARK_GRAFT_TOXICITY")

@@ -536,21 +536,22 @@ object SparkEntry {
 
     // TOXICITY filter + scrub (the north-rule's second scrub family,
     // C4-style word blocklist): counts, in-place masking, and the C4
-    // drop-on-any-hit flag — native regex expressions with an exact
-    // DuckDB mirror; toxic terms planted deterministically (the corpus
-    // itself is clean)
+    // drop-on-any-hit flag — the pipeline's automaton UDFs, with the
+    // regex form as the exact DuckDB mirror; toxic terms planted
+    // deterministically (the corpus itself is clean)
     "q_toxicity" -> ((s, dir) => {
       val id = col("doc_id")
       val tox = graft.spark.Toxicity
+      val b = s.sparkContext.broadcast(tox.LangBank(Map("*" -> tox.DefaultList)))
       val planted = concat(col("text"),
         when(id % 11 === 0, lit(" well damn that spam")).otherwise(lit("")),
         when(id % 13 === 0, lit(" what the Hell happened")).otherwise(lit("")),
         when(id % 17 === 0, lit(" total CRAP content here")).otherwise(lit("")))
       docs(s, dir).withColumn("t", planted)
         .select(col("doc_id"),
-          tox.count(col("t")).as("n_toxic"),
-          tox.scrub(col("t")).as("scrubbed_tox"),
-          tox.dropFlag(tox.count(col("t"))).as("dropped"))
+          tox.countByLangUdf(b)(lit("*"), col("t")).as("n_toxic"),
+          tox.scrubByLangUdf(b)(lit("*"), col("t")).as("scrubbed_tox"))
+        .withColumn("dropped", tox.dropFlag(col("n_toxic")))
     }),
 
     // TOXICITY at UT1/LDNOOBW list scale (10k terms): the AUTOMATON tier
@@ -564,7 +565,7 @@ object SparkEntry {
     "q_toxicity_large" -> ((s, dir) => {
       val tox = graft.spark.Toxicity
       val ws = tox.syntheticList(10000)
-      val b = s.sparkContext.broadcast(tox.Matcher(ws))
+      val b = s.sparkContext.broadcast(tox.LangBank(Map("*" -> ws)))
       val (w1, w2, w3) = (ws(17), ws(4242), ws(9999))
       val id = col("doc_id")
       val planted = concat(col("text"),
@@ -573,7 +574,7 @@ object SparkEntry {
         when(id % 13 === 0, lit(s" $w3 $w3 again")).otherwise(lit("")),
         when(id % 11 === 0, lit(s" ${w2}x miss")).otherwise(lit("")))
       docs(s, dir).withColumn("t", planted)
-        .select(col("doc_id"), tox.countUdf(b)(col("t")).as("n_toxic"))
+        .select(col("doc_id"), tox.countByLangUdf(b)(lit("*"), col("t")).as("n_toxic"))
         .withColumn("dropped", col("n_toxic") > 0)
     }),
 
@@ -1308,8 +1309,8 @@ object SparkEntry {
         s"'$GoldenDir/expected_sf0.01/decontam_report.parquet')"),
 
     "q_toxicity" -> {
-      // RE2 form: same ASCII-boundary/ASCII-fold semantics the Spark
-      // expression spells out with Java lookarounds + case classes
+      // RE2 form: the ASCII-boundary/ASCII-fold semantics the Spark
+      // automaton checks char by char
       val pat = graft.spark.Toxicity.oraclePattern()
       ("WITH t AS (SELECT doc_id, text ||" +
         " CASE WHEN doc_id % 11 = 0 THEN ' well damn that spam' ELSE '' END ||" +

@@ -66,7 +66,4 @@ object Detect {
     val filtered = if (includeAmount) hits else hits.filterNot(_.kind == "amount")
     filtered.groupBy(_.kind).map { case (k, v) => k -> v.size.toLong }
   }
-
-  /** app/main.py:725 — any hit at all. */
-  def piiFound(hits: Seq[Hit]): Boolean = hits.nonEmpty
 }

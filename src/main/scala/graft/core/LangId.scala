@@ -270,15 +270,28 @@ object LangId {
 
   private[core] def trainDefault: LangIdModel = train(seedCorpus)
 
+  /** One model per language of `corpus`, in corpus order, from the gram
+    * counts of its texts. */
   def train(corpus: Vector[(String, String)]): LangIdModel = {
-    val langs = corpus.map(_._1)
-    val counts = langs.map(_ => new scala.collection.mutable.HashMap[String, Int]).toArray
+    val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+    corpus.foreach { case (lang, text) =>
+      grams(text).foreach(g => counts((lang, g)) = counts.getOrElse((lang, g), 0L) + 1L)
+    }
+    fromCounts(corpus.map(_._1).distinct,
+      counts.iterator.map { case ((l, g), n) => (l, g, n) }.toSeq)
+  }
+
+  /** Model assembly from the (lang, gram, n) counts relation, languages in
+    * the order of `langs`: add-one smoothing over the union vocabulary,
+    * packed-key sorted layout. Every row's language must be in `langs`. */
+  def fromCounts(langs: Seq[String], rows: Seq[(String, String, Long)]): LangIdModel = {
+    val li = langs.zipWithIndex.toMap
+    val counts = langs.map(_ => scala.collection.mutable.HashMap.empty[String, Long]).toArray
     val totals = new Array[Long](langs.length)
-    corpus.zipWithIndex.foreach { case ((_, text), i) =>
-      grams(text).foreach { g =>
-        counts(i).update(g, counts(i).getOrElse(g, 0) + 1)
-        totals(i) += 1
-      }
+    rows.foreach { case (lang, gram, n) =>
+      val i = li(lang)
+      counts(i).update(gram, counts(i).getOrElse(gram, 0L) + n)
+      totals(i) += n
     }
     val vocab = counts.iterator.flatMap(_.keysIterator).toSet
     val v = vocab.size + 1
@@ -289,13 +302,13 @@ object LangId {
       var i = 0
       while (i < langs.length) {
         flat(row * langs.length + i) =
-          math.log((counts(i).getOrElse(g, 0) + 1.0) / (totals(i) + v))
+          math.log((counts(i).getOrElse(g, 0L) + 1.0) / (totals(i) + v))
         i += 1
       }
     }
     val dflt = new Array[Double](langs.length)
     var i = 0
     while (i < langs.length) { dflt(i) = math.log(1.0 / (totals(i) + v)); i += 1 }
-    LangIdModel(langs, keys, flat, dflt)
+    LangIdModel(langs.toVector, keys, flat, dflt)
   }
 }

@@ -119,7 +119,7 @@ object NerTag {
     Map("PER" -> "name", "ORG" -> "org", "LOC" -> "address", "MISC" -> "misc")
 
   /** Multinomial NB with add-one smoothing over the union feature
-    * vocabulary — [[graft.spark.LangIdTrain.fromCounts]]'s math on span
+    * vocabulary — [[LangId.fromCounts]]'s math on span
     * labels. `rows` is the (label, feat, n) sufficient statistic; the
     * BIAS feature's per-class count doubles as the class prior. */
   final class NerTagModel private[core] (

@@ -4,9 +4,8 @@ package graft.core
   *
   * Pure text → metrics → keep/drop. The metric definitions are deliberately
   * expressible in ANSI SQL (whitespace tokenization, ratio = count/count) so
-  * the DuckDB oracle can recompute them; the Spark layer can evaluate most of
-  * them either through this core (UDF) or as native Catalyst expressions —
-  * both paths are tested to agree.
+  * the DuckDB oracle can recompute them; the Spark layer calls this core
+  * inside the fused `page_stages` expression, metrics and [[decide]] alike.
   */
 object Quality {
 

@@ -22,31 +22,6 @@ import org.apache.spark.sql.functions._
   * learned merge table is byte-reproducible (CPython twin in
   * tools/gen_expected.py).
   */
-/** Per-executor-thread memo for [[BpeTrain.encodeCounts]]: keyed by the
-  * broadcast rank-map identity so a new merge table never reuses stale
-  * encodings; size-capped (clear, not evict — it is a pure-function memo,
-  * so correctness never depends on what is cached). */
-private object BpeEncodeCache {
-  private type Memo = scala.collection.mutable.HashMap[String, Array[String]]
-  private val tl = ThreadLocal.withInitial[(AnyRef, Memo)](() => (null, new Memo))
-  def get(ranks: AnyRef): Memo = {
-    val (key, memo) = tl.get()
-    if (key eq ranks) {
-      if (memo.size > 200000) memo.clear()
-      memo
-    } else {
-      val fresh = new Memo
-      tl.set((ranks, fresh))
-      // release the memo (and its strong ref to the broadcast ranks) when
-      // the task ends — otherwise every executor thread that ever ran an
-      // encode keeps up to 200k entries alive for the executor's lifetime
-      val tc = org.apache.spark.TaskContext.get()
-      if (tc != null) tc.addTaskCompletionListener[Unit](_ => tl.remove())
-      fresh
-    }
-  }
-}
-
 object BpeTrain {
 
   /** Distributed word-frequency dict: lowercase whitespace tokens
@@ -179,33 +154,6 @@ object BpeTrain {
     syms
   }
 
-  /** Corpus-wide BPE token frequencies under a learned merge table:
-    * (token, n). The merge table is broadcast; encoding memoizes per
-    * distinct word inside each partition (Zipf repetition makes the cache
-    * hit rate high; the cache is a pure-function memo, so output is
-    * independent of its behavior), and the shuffle is vocabulary-sized. */
-  def encodeCounts(df: DataFrame, textCol: String,
-                   merges: Seq[(String, String)]): DataFrame = {
-    val ranks = merges.zipWithIndex.toMap
-    val b = df.sparkSession.sparkContext.broadcast(ranks)
-    val encodeUdf = udf { t: String =>
-      if (t == null) Array.empty[String]
-      else {
-        val memo = BpeEncodeCache.get(b.value)
-        val out = Array.newBuilder[String]
-        // Locale.ROOT: the dict side lowercases via Spark SQL lower() and
-        // the twin via Python str.lower() — default-locale toLowerCase
-        // would diverge on tr-TR hosts (dotless i)
-        t.toLowerCase(java.util.Locale.ROOT).split("\\s+").foreach { w =>
-          if (w.nonEmpty) out ++= memo.getOrElseUpdate(w, encodeWord(w, b.value))
-        }
-        out.result()
-      }
-    }
-    df.select(explode(encodeUdf(col(textCol))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("n"))
-  }
-
   /** Distributed dict → driver merge loop → merge table as a driver-side
     * Seq (rank order). */
   def trainMerges(df: DataFrame, textCol: String, numMerges: Int,
@@ -236,10 +184,10 @@ object BpeTrain {
     * (minCount = 1 — every occurrence must be represented): each DISTINCT
     * word is encoded once and contributes its tokens weighted by its
     * count, so `count(token) = Σ_w n_w · occurrences(token, encode(w))` —
-    * exactly [[encodeCounts]]'s per-occurrence result, with the explode +
-    * shuffle shrunk from corpus-sized (every token occurrence) to
-    * VOCABULARY-sized, and the encode UDF run once per distinct word
-    * (Zipf repetition handled by arithmetic instead of a memo cache). */
+    * the per-occurrence count of encoding every corpus word, with the
+    * explode + shuffle VOCABULARY-sized instead of corpus-sized, and the
+    * encode UDF run once per distinct word (Zipf repetition handled by
+    * arithmetic instead of a memo cache). */
   def encodeCountsFromWordCounts(wordFreq: DataFrame,
                                  merges: Seq[(String, String)]): DataFrame = {
     val ranks = merges.zipWithIndex.toMap

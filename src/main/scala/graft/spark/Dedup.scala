@@ -51,13 +51,6 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
       .drop("digest")
 
-  /** MinHash signatures frame: (id, sig). */
-  def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        shingleK: Int = 5, numHashes: Int = 128): DataFrame =
-    df.select(
-      col(idCol),
-      PiiFunctions.minHashUdf(col(textCol), lit(shingleK), lit(numHashes)).as("sig"))
-
   /** LSH near-dup pairs with estimated Jaccard ≥ threshold.
     * Output: (a, b, sim) with a < b — a SUFFICIENT edge set for union-find
     * clustering (same connected components as the transitive closure), not

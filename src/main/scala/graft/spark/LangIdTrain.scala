@@ -40,41 +40,6 @@ object LangIdTrain {
       .groupBy(col("lang"), col("gram")).agg(count(lit(1)).as("n"))
       .where(col("n") >= minCount)
 
-  /** Driver-side model assembly from the bounded counts relation: add-one
-    * smoothing over the union vocabulary, packed-key sorted layout —
-    * the same math as `LangId.train`. */
-  def fromCounts(rows: Seq[(String, String, Long)]): LangIdModel = {
-    require(rows.nonEmpty,
-      "empty gram relation — nothing to train on (all text null/empty, or " +
-        "minCount pruned every gram); a zero-language model cannot classify")
-    val langs = rows.map(_._1).distinct.sorted.toVector
-    val li = langs.zipWithIndex.toMap
-    val counts = langs.map(_ => scala.collection.mutable.HashMap.empty[String, Long]).toArray
-    val totals = new Array[Long](langs.length)
-    rows.foreach { case (lang, gram, n) =>
-      val i = li(lang)
-      counts(i).update(gram, counts(i).getOrElse(gram, 0L) + n)
-      totals(i) += n
-    }
-    val vocab = counts.iterator.flatMap(_.keysIterator).toSet
-    val v = vocab.size + 1
-    val sorted = vocab.toArray.map(g => LangId.packed(g) -> g).sortBy(_._1)
-    val keys = sorted.map(_._1)
-    val flat = new Array[Double](keys.length * langs.length)
-    sorted.zipWithIndex.foreach { case ((_, g), row) =>
-      var i = 0
-      while (i < langs.length) {
-        flat(row * langs.length + i) =
-          math.log((counts(i).getOrElse(g, 0L) + 1.0) / (totals(i) + v))
-        i += 1
-      }
-    }
-    val dflt = new Array[Double](langs.length)
-    var i = 0
-    while (i < langs.length) { dflt(i) = math.log(1.0 / (totals(i) + v)); i += 1 }
-    LangIdModel(langs, keys, flat, dflt)
-  }
-
   /** End-to-end: distributed counts → bounded collect → model. With
     * `minCount` = 1 and one document per language this equals
     * `LangId.train` exactly; `minCount` > 1 prunes both the vocabulary and
@@ -88,7 +53,10 @@ object LangIdTrain {
     require(collected.length <= maxGrams,
       s"gram relation exceeds maxGrams=$maxGrams — " +
         "raise the bound or minCount (model assembly is driver-side)")
-    fromCounts(collected.toSeq.map(r =>
-      (r.getString(0), r.getString(1), r.getLong(2))))
+    require(collected.nonEmpty,
+      "empty gram relation — nothing to train on (all text null/empty, or " +
+        "minCount pruned every gram); a zero-language model cannot classify")
+    val rows = collected.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    LangId.fromCounts(rows.map(_._1).distinct.sorted, rows)
   }
 }

@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   * ONE native codegen expression, `page_stages`
   * ([[graft.spark.expressions.PageStagesExpr]]), whose models are per-JVM
   * defaults built from code (a trained NER tagger, the one model that is
-  * not, is broadcast into it); the keep/drop decision is a NATIVE Catalyst
-  * `when` chain over the quality struct (mirroring [[Quality.decide]]
-  * rule-for-rule — parity is tested), so Catalyst can prune/push it; the
-  * only wide operations in a full run are the salted repartition before
-  * the partitioned write and the tiny metrics agg.
+  * not, is broadcast into it). The rule-based keep/drop decision is
+  * [[Quality.decide]] under `Conf.quality`, made inside that expression;
+  * the optional toxicity and quality-model drops extend its reason here.
+  * The only wide operation in a full run is the salted repartition before
+  * the partitioned write.
   */
 object Pipeline {
 
@@ -56,6 +56,8 @@ object Pipeline {
   final case class Conf(
       keyB64: String = "Z3JhZnQtc3BhcmstcGlpLWRlZmF1bHQta2V5IQ==", // "graft-spark-pii-default-key!"
       ns: String = "tenant-a",
+      /** Thresholds of the rule-based keep/drop decision, made by
+        * [[Quality.decide]] inside the fused stage. */
       quality: Quality.Conf = Quality.Conf(),
       /** "dict" = north-star <TYPE_n> per-doc dictionary (full entity set);
         * "ref"  = reference HMAC+MT19937 aliases (byte-identical
@@ -113,14 +115,13 @@ object Pipeline {
   /** Adds lang_id/lang_conf, ppl, quality struct, scrub results, keep and
     * drop_reason to the input pages frame. Narrow (no shuffle). */
   def run(spark: SparkSession, pages: DataFrame, conf: Conf = Conf()): DataFrame = {
-    val qc = conf.quality
-
     val tagger =
       if (conf.modelNer) conf.trainedNer.map(spark.sparkContext.broadcast(_))
       else None
     val stagesCol = ExprColumn(PageStagesExpr(
       UnresolvedAttribute("text"), conf.scrubMode, conf.keyB64,
-      conf.ns, conf.policies.toSeq.sorted.mkString(","), conf.modelNer, tagger))
+      conf.ns, conf.policies.toSeq.sorted.mkString(","), conf.modelNer, tagger,
+      conf.quality))
 
     // one projection computes the fused stage; everything after reads its
     // struct fields (the expression is nondeterministic, so Catalyst never
@@ -128,25 +129,9 @@ object Pipeline {
     val staged = pages.select(col("url"), col("warc_ts"), col("lang"), col("text"),
       stagesCol.as("r"))
 
-    // Native when-chain mirror of Quality.decide (first failing rule wins;
-    // word-shape + perplexity rules gated off for CJK text — see core docs).
-    val q = col("r.q")
-    val latin = q("cjkRatio") <= 0.3
-    val dropReason: Column =
-      when(q("nChars") < qc.minChars, "too_short")
-        .when(q("nChars") > qc.maxChars, "too_long")
-        .when(latin && q("nWords") < qc.minWords, "too_few_words")
-        .when(q("nWords") > qc.maxWords, "too_many_words")
-        .when(latin && q("meanWordLen") < qc.minMeanWordLen, "mean_word_len_low")
-        .when(latin && q("meanWordLen") > qc.maxMeanWordLen, "mean_word_len_high")
-        .when(latin && q("maxWordLen") > qc.maxWordLen, "max_word_len")
-        .when(q("symbolRatio") > qc.maxSymbolRatio, "symbol_ratio")
-        .when(latin && q("stopwordRatio") < qc.minStopwordRatio, "stopword_ratio")
-        .when(latin && q("alphaWordRatio") < qc.minAlphaWordRatio, "alpha_word_ratio")
-        .when(q("dupLineFrac") > qc.maxDupLineFrac, "dup_lines")
-        .when(q("dupWordFrac") > qc.maxDupWordFrac, "dup_words")
-        .when(latin && col("r.ppl") > qc.maxPpl, "perplexity")
-        .otherwise("")
+    // the rule-based reason (Quality.decide inside the fused stage); the
+    // optional stages below only add reasons where it is ""
+    val dropReason = col("r.drop_reason")
 
     // toxicity (our extension — the reference is PII-only): lowest
     // priority, so every reference-derived drop_reason is attributed
@@ -221,7 +206,8 @@ object Pipeline {
       col("url"), col("warc_ts"), col("lang").as("lang_claimed"),
       col("r.lang_id").as("lang_id"), col("r.lang_conf").as("lang_conf"),
       col("r.ppl").as("ppl"), col("r.q").as("quality"),
-      (dropReasonAll === lit("")).as("keep"), dropReasonAll.as("drop_reason"),
+      (if (perRow.isEmpty) col("r.keep") else dropReasonAll === lit("")).as("keep"),
+      dropReasonAll.as("drop_reason"),
       scrubbedOut.as("scrubbed_text"),
       col("r.aliases").as("alias_dict"),
       col("r.counts").as("n_hits")) ++ nerCols ++ toxCount.map(_ => col("n_toxic")) ++

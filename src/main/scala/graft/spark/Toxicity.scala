@@ -13,18 +13,19 @@ import org.apache.spark.sql.functions._
   * pipelines threshold on the hit ratio) and (b) a scrub mode masking
   * the terms in place (the toxicity twin of the PII alias scrub).
   *
-  * Two tiers, same semantics (equivalence is test-pinned):
-  *  - the REGEX tier builds one case-insensitive word-boundary union
-  *    pattern — native `regexp_count`/`regexp_replace` expressions that
-  *    stay in whole-stage codegen AND have exact DuckDB equivalents, so
-  *    the driver oracle reproduces counts and scrubbed text verbatim.
-  *    The oracle queries and the property reference use it.
-  *  - the AUTOMATON tier compiles the list into an Aho-Corasick matcher
-  *    with explicit word-boundary + lowercase checks — O(|text|) per doc
+  * One implementation on the Spark side, one reference pattern:
+  *  - the AUTOMATON compiles the list into an Aho-Corasick matcher with
+  *    explicit word-boundary + lowercase checks — O(|text|) per doc
   *    regardless of list size, the shape that survives UT1/LDNOOBW-scale
   *    lists (hundreds of thousands of terms, where a regex union dies).
-  *    [[Pipeline.run]] counts and masks through it, one [[LangBank]]
-  *    whatever the list size (a single list is the "*" entry).
+  *    [[Pipeline.run]] and the q_toxicity queries count and mask through
+  *    it, one [[LangBank]] whatever the list size (a single list is the
+  *    "*" entry).
+  *  - the REGEX form of the same semantics, one case-insensitive
+  *    word-boundary union ([[pattern]] for `java.util.regex`,
+  *    [[oraclePattern]] for RE2), is the reference: the DuckDB oracle
+  *    reproduces counts and scrubbed text with it, and the tests compare
+  *    the automaton with it (equivalence is test-pinned).
   *
   * The DEFAULT list is a deliberately small English placeholder — a
   * production run swaps in per-language curated lists (broadcast, like
@@ -39,7 +40,7 @@ object Toxicity {
     "damn", "hell", "crap", "shit", "fuck", "bastard", "bitch",
     "asshole", "piss", "slut", "whore", "dick")
 
-  /** The ONE semantic all tiers implement: ASCII word boundaries
+  /** The ONE semantic every form implements: ASCII word boundaries
     * ([A-Za-z0-9_] delimits) and ASCII-only case folding. Neither engine
     * default gives this portably — Java's `\b` is Unicode-aware (no match
     * in "damn山") while RE2's is ASCII (match), and `(?i)` folds ASCII-
@@ -50,9 +51,9 @@ object Toxicity {
   private def union(words: Seq[String]): String = {
     require(words.nonEmpty && words.forall(_.matches("[A-Za-z]+")),
       "blocklist terms must be plain ASCII words (the shared boundary " +
-        "semantics); use the automaton tier for anything else")
+        "semantics); use the automaton for anything else")
     // Dedupe AFTER case folding: a list containing both "Damn" and "damn"
-    // must not break the tier equivalence (the regex union matches once
+    // must not break the regex/automaton equivalence (the regex union matches once
     // per position regardless, but an un-deduped automaton would emit one
     // hit per duplicate pattern and double-count).
     words.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
@@ -60,7 +61,7 @@ object Toxicity {
       .mkString("(?:", "|", ")")
   }
 
-  /** Java-regex form (Spark expressions): ASCII lookaround boundaries. */
+  /** Java-regex form (the test reference): ASCII lookaround boundaries. */
   def pattern(words: Seq[String] = DefaultList): String =
     "(?<![A-Za-z0-9_])" + union(words) + "(?![A-Za-z0-9_])"
 
@@ -69,32 +70,20 @@ object Toxicity {
   def oraclePattern(words: Seq[String] = DefaultList): String =
     "\\b" + union(words) + "\\b"
 
-  /** Per-doc toxic-term count (native expression; total — null text
-    * counts 0, independent of the legacy sizeOfNull setting). */
-  def count(text: Column, words: Seq[String] = DefaultList): Column =
-    when(text.isNull, lit(0L))
-      .otherwise(size(regexp_extract_all(text, lit(pattern(words)), lit(0)))
-        .cast("long"))
-
-  /** Toxicity scrub: mask every listed term in place (null in, null out). */
-  def scrub(text: Column, words: Seq[String] = DefaultList,
-            mask: String = "<TOXIC>"): Column =
-    regexp_replace(text, pattern(words), mask)
-
   /** C4 keep/drop: `maxHits = 0` drops on any hit (C4's rule); raise it
     * for threshold-style pipelines. */
   def dropFlag(nToxic: Column, maxHits: Long = 0L): Column =
     nToxic > lit(maxHits)
 
-  // ---- automaton tier (list-size-independent scan) -------------------------
+  // ---- the automaton (list-size-independent scan) ---------------------------
 
   /** Compiled blocklist: ASCII-lowercased Aho-Corasick + ASCII boundary
-    * check — the same folding the regex tiers' case classes express.
+    * check — the same folding the regex form's case classes express.
     * ASCII-only folding is deliberate: full-Unicode toLowerCase would
-    * both fold characters the regex tiers do not (U+212A KELVIN → k) and
+    * both fold characters the regex form does not (U+212A KELVIN → k) and
     * change string LENGTH (U+0130 → two chars), shifting every offset. */
   /** ASCII-only case fold, shared by the Matcher scan AND list loading —
-    * ONE normalization for the whole tier (a full-Unicode toLowerCase at
+    * ONE normalization for the whole automaton (a full-Unicode toLowerCase at
     * load time would both fold characters the scan does not and change
     * string LENGTH for e.g. U+0130, producing terms that can never match). */
   private[spark] def asciiLower(s: String): String = {
@@ -153,8 +142,8 @@ object Toxicity {
       n
     }
 
-    /** Mask every accepted span in place — the automaton twin of
-      * [[Toxicity.scrub]]. ASCII folding preserves length, so lowered
+    /** Mask every accepted span in place (the regex form: a replace of
+      * [[Toxicity.pattern]]). ASCII folding preserves length, so lowered
       * offsets index the original text directly. */
     def scrubIn(t: String, mask: String = "<TOXIC>"): String = {
       if (t == null) return null
@@ -173,13 +162,6 @@ object Toxicity {
       sb.toString
     }
   }
-
-  /** Automaton-tier count UDF (broadcast matcher — the 100-TB shape for
-    * LDNOOBW-scale lists). Nondeterministic = duplication guard, not
-    * semantics (see PageStagesExpr.deterministic): keep/drop predicates
-    * derived from this count must not clone the scan into FilterExec. */
-  def countUdf(m: Broadcast[Matcher]) =
-    udf { (t: String) => m.value.countIn(t) }.asNondeterministic()
 
   /** Per-language matcher bank: the C4/UT1 production shape — curated
     * blocklists are PER LANGUAGE, and a doc is screened against the list
@@ -202,8 +184,11 @@ object Toxicity {
       matcherFor(lang).map(_.scrubIn(t, mask)).getOrElse(t)
   }
 
-  /** Per-language count/scrub UDFs (broadcast bank; nondeterministic =
-    * the duplication guard, see [[countUdf]]). */
+  /** Per-language count/scrub UDFs over a broadcast bank (the 100-TB
+    * shape for LDNOOBW-scale lists). Nondeterministic = duplication guard,
+    * not semantics (see PageStagesExpr.deterministic): keep/drop
+    * predicates derived from the count must not clone the scan into
+    * FilterExec. */
   def countByLangUdf(b: Broadcast[LangBank]) =
     udf { (lang: String, t: String) => b.value.countIn(lang, t) }
       .asNondeterministic()

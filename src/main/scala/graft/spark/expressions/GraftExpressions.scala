@@ -32,10 +32,12 @@ object ExprHelpers {
   private val emptyMapData =
     new ArrayBasedMapData(new GenericArrayData(Array.empty[Any]),
       new GenericArrayData(Array.empty[Any]))
-  private val langU8 =
+  // interned UTF-8 of the few distinct strings a row repeats (language
+  // ids, drop reasons): no per-row copy
+  private val interned =
     new java.util.concurrent.ConcurrentHashMap[String, UTF8String]()
   private def u8(s: String): UTF8String =
-    langU8.computeIfAbsent(s, UTF8String.fromString)
+    interned.computeIfAbsent(s, UTF8String.fromString)
 
   /** A map column's data in `m`'s iteration order; String values as UTF-8. */
   private def mapData(m: collection.Map[String, Any]): ArrayBasedMapData = {
@@ -98,8 +100,9 @@ object ExprHelpers {
   private val EmptyView = new graft.core.CharsView
 
   /** The fused per-page hot path as a direct InternalRow producer: langid,
-    * perplexity, quality metrics and scrub over one decode of the row.
-    * Models are the deterministic JVM-lazy defaults, built once per
+    * perplexity, quality metrics, the keep/drop decision
+    * ([[Quality.decide]] under `quality`) and scrub over one decode of the
+    * row. Models are the deterministic JVM-lazy defaults, built once per
     * executor from code; the one model that is not in code, a trained
     * span `tagger` (null when absent), arrives as a broadcast.
     *
@@ -109,7 +112,8 @@ object ExprHelpers {
     * (postal → address, the three name patterns → name). */
   def pageStages(text: UTF8String, mode: String, keyB64: String,
                  ns: String, policiesCsv: String, ner: Boolean,
-                 tagger: Broadcast[NerTag.NerTagModel]): InternalRow = {
+                 tagger: Broadcast[NerTag.NerTagModel],
+                 quality: Quality.Conf): InternalRow = {
     // byte-level hot path: score a reused char view of the UTF-8 bytes —
     // no per-row String materialization (null text scores as empty)
     val t: graft.core.CharsView =
@@ -117,6 +121,7 @@ object ExprHelpers {
     val (l, c) = LangId.default.classify(t)
     val p = Perplexity.default.perplexity(t)
     val m = Quality.metrics(t)
+    val (keep, reason) = Quality.decide(m, p, quality)
     // ENHANCED security level (ner=true, main.py:241-245): one automaton
     // pass per row over the per-JVM default gazetteer model; its hits are
     // MERGED into the scrub span set (regex_hits.extend(ai_ner) semantics)
@@ -149,28 +154,30 @@ object ExprHelpers {
     new GenericInternalRow(Array[Any](
       u8(l), c, p, q,
       scrubbedOut, mapData(d.aliases), mapData(d.counts),
-      hitsArray(modelHits)))
+      hitsArray(modelHits), keep, u8(reason)))
   }
 }
 
 /** `page_stages(text, mode, key_b64, ns[, policies_csv[, ner]])` — the
   * whole fused pipeline stage (langid + perplexity + quality metrics +
-  * scrub, plus model NER when `ner`) as ONE native expression emitting the
-  * result struct directly as an InternalRow.
+  * keep/drop decision + scrub, plus model NER when `ner`) as ONE native
+  * expression emitting the result struct directly as an InternalRow.
   *
-  * `tagger` is not a SQL argument: `Pipeline.run` sets it to the broadcast
-  * of `Conf.trainedNer` at an effective ENHANCED level, and its hits join
-  * the gazetteer's.
+  * `tagger` and `quality` are not SQL arguments: `Pipeline.run` sets
+  * `tagger` to the broadcast of `Conf.trainedNer` at an effective ENHANCED
+  * level (its hits join the gazetteer's) and `quality` to `Conf.quality`,
+  * the thresholds of the `keep`/`drop_reason` fields; SQL callers get the
+  * default thresholds.
   *
-  * NOT null-intolerant: a null text scores as "" (and is then dropped as
-  * too_short by the rule chain) — the default UnaryExpression
-  * null-propagation would instead emit a null struct, whose nulls fall
-  * through every `when()` in the keep/drop chain and KEEP the corrupt
-  * row. */
+  * NOT null-intolerant: a null text scores as "" (and so drops as
+  * too_short) — the default UnaryExpression null-propagation would instead
+  * emit a null struct, whose null `keep` a filter downstream cannot tell
+  * from a decision. */
 case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
                           ns: String, policiesCsv: String = "",
                           ner: Boolean = false,
-                          tagger: Option[Broadcast[NerTag.NerTagModel]] = None)
+                          tagger: Option[Broadcast[NerTag.NerTagModel]] = None,
+                          quality: Quality.Conf = Quality.Conf())
     extends UnaryExpression {
   import org.apache.spark.sql.catalyst.expressions.codegen.Block._
   import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
@@ -195,7 +202,7 @@ case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
       s"page_stages requires a string argument, got ${child.dataType.catalogString}")
   override def eval(input: InternalRow): Any =
     ExprHelpers.pageStages(child.eval(input).asInstanceOf[UTF8String],
-      mode, keyB64, ns, policiesCsv, ner, tagger.orNull)
+      mode, keyB64, ns, policiesCsv, ner, tagger.orNull, quality)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val modeRef = ctx.addReferenceObj("mode", mode, "java.lang.String")
     val keyRef = ctx.addReferenceObj("keyB64", keyB64, "java.lang.String")
@@ -203,13 +210,14 @@ case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
     val polRef = ctx.addReferenceObj("policiesCsv", policiesCsv, "java.lang.String")
     val taggerRef = ctx.addReferenceObj("tagger", tagger.orNull,
       "org.apache.spark.broadcast.Broadcast")
+    val qualityRef = ctx.addReferenceObj("quality", quality, "graft.core.Quality$Conf")
     val c = child.genCode(ctx)
     ev.copy(
       code = code"""
         ${c.code}
         InternalRow ${ev.value} = graft.spark.expressions.ExprHelpers.pageStages(
           ${c.isNull} ? null : ${c.value}, $modeRef, $keyRef, $nsRef, $polRef, $ner,
-          $taggerRef);""",
+          $taggerRef, $qualityRef);""",
       isNull = FalseLiteral)
   }
   override protected def withNewChildInternal(newChild: Expression): PageStagesExpr =
@@ -218,8 +226,8 @@ case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
 }
 
 object PageStagesExpr {
-  /** Must mirror Quality.Metrics field-for-field — Pipeline.run selects
-    * subfields by these names. */
+  /** Must mirror Quality.Metrics field-for-field — the pipeline output's
+    * `quality` column and QualityTrain.scoreColumn read these names. */
   val qualitySchema: StructType = StructType(Seq(
     StructField("nChars", LongType, nullable = false),
     StructField("nWords", LongType, nullable = false),
@@ -249,7 +257,10 @@ object PageStagesExpr {
     StructField("aliases", MapType(StringType, StringType, valueContainsNull = false), nullable = false),
     StructField("counts", MapType(StringType, LongType, valueContainsNull = false), nullable = false),
     // model-NER hits (ENHANCED level only; empty array at MAXIMUM)
-    StructField("model_hits", ArrayType(hitSchema, containsNull = false), nullable = false)))
+    StructField("model_hits", ArrayType(hitSchema, containsNull = false), nullable = false),
+    // Quality.decide over `q` and `ppl`: first failing rule, "" when kept
+    StructField("keep", BooleanType, nullable = false),
+    StructField("drop_reason", StringType, nullable = false)))
 }
 
 /** Session-extension hook: `--conf spark.sql.extensions=graft.spark.expressions.GraftExtensions`. */

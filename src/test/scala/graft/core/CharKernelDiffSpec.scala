@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.spark.{DataGen, LangIdTrain}
+import graft.spark.DataGen
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * confidence compared by its raw bits, perplexity likewise, and the dedup
   * fingerprint. Run on DataGen pages and on generated text that mixes
   * scripts, case oddities, surrogate pairs and every whitespace kind, with
-  * docs past langid's 4,096-char prefix and empty or blank docs. */
+  * docs past langid's 4,096-char prefix and empty or blank docs. The
+  * langid trainer also regenerates the committed default model. */
 class CharKernelDiffSpec extends AnyFunSuite {
 
   private val odd: Seq[String] = Seq("İ", "ı", "ǅ", "Σ", "ς", "ß", "１", "Ａ", "É",
@@ -48,13 +49,14 @@ class CharKernelDiffSpec extends AnyFunSuite {
 
   private val pages: Seq[String] = (0L until 400L).map(DataGen.pageFor(_).text)
 
-  /** A model from the corpus trainer, on DataGen pages of five of the six
-    * languages: a language count and vocabulary unlike the default's. */
+  /** A model assembled from the gram counts of DataGen pages of five of
+    * the six languages: a language count and vocabulary unlike the
+    * default's. */
   private lazy val trained: LangIdModel = {
     val docs = (0L until 300L).map(DataGen.pageFor(_)).filter(_.lang != "fr")
     val counts = docs.flatMap(p => LangId.grams(p.text).map(p.lang -> _))
       .groupBy(identity).map { case ((l, g), xs) => (l, g, xs.size.toLong) }.toSeq
-    LangIdTrain.fromCounts(counts)
+    LangId.fromCounts(counts.map(_._1).distinct.sorted, counts)
   }
 
   private def assertLangIdSame(m: LangIdModel, texts: Seq[String]): Unit =
@@ -75,6 +77,11 @@ class CharKernelDiffSpec extends AnyFunSuite {
     assert(trained.langs.length == 5 && trained.langs.length != LangId.default.langs.length)
     assertLangIdSame(trained, pages)
     assertLangIdSame(trained, generated)
+  }
+
+  test("trainer regenerates the committed langid artifact byte-identically") {
+    val committed = ModelIo.resource("/graft/langid.bin").readAllBytes()
+    assert(java.util.Arrays.equals(committed, ModelIo.writeLangId(LangId.trainDefault)))
   }
 
   test("langid reads a CharsView as it reads the String") {

@@ -41,7 +41,9 @@ object ToxicityPropsSpec extends Properties("toxicity") {
       .map(_.mkString)
   }
 
-  private def regexCount(ws: Seq[String], t: String): Long = {
+  /** Count of `java.util.regex` matches of [[Toxicity.pattern]] — the
+    * reference the automaton is compared with. */
+  def regexCount(ws: Seq[String], t: String): Long = {
     val m = java.util.regex.Pattern.compile(Toxicity.pattern(ws)).matcher(t)
     var n = 0L
     while (m.find()) n += 1

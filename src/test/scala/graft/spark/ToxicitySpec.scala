@@ -1,12 +1,13 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import ToxicityPropsSpec.regexCount
 
 /** Toxicity blocklist: boundary semantics, scrub masking, C4 drop rule,
-  * and regex-tier ≡ automaton-tier equivalence (the scale path must agree
-  * with the oracle-able path exactly). */
+  * and the automaton's equivalence with the regex reference
+  * ([[Toxicity.pattern]], the form the oracle mirrors). */
 class ToxicitySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
@@ -20,16 +21,20 @@ class ToxicitySpec extends AnyFunSuite {
     "damn crap hell" -> 3L,
     // CJK-adjacent: the ASCII boundary counts these (Java's Unicode \b
     // would not — the pattern spells the boundary out with lookarounds
-    // precisely so all tiers and the RE2 oracle agree here)
+    // precisely so the automaton, the pattern and the RE2 oracle agree)
     "damn山 and 山damn and クソdamnクソ" -> 3L,
     "くそHellくそ" -> 1L)
 
-  test("regex tier: boundary-exact counts, scrub masks in place, C4 drop") {
+  private lazy val defaultBank =
+    spark.sparkContext.broadcast(Toxicity.LangBank(Map("*" -> Toxicity.DefaultList)))
+  private def countCol(t: Column): Column = Toxicity.countByLangUdf(defaultBank)(lit("*"), t)
+
+  test("automaton UDFs: boundary-exact counts, scrub masks in place, C4 drop") {
     import spark.implicits._
     val df = cases.map(_._1).toDF("t")
-      .select(col("t"), Toxicity.count(col("t")).as("n"),
-        Toxicity.scrub(col("t")).as("s"),
-        Toxicity.dropFlag(Toxicity.count(col("t"))).as("d"))
+      .select(col("t"), countCol(col("t")).as("n"),
+        Toxicity.scrubByLangUdf(defaultBank)(lit("*"), col("t")).as("s"))
+      .withColumn("d", Toxicity.dropFlag(col("n")))
     val rows = df.collect()
     rows.zip(cases).foreach { case (r, (in, want)) =>
       assert(r.getLong(1) == want, s"count for '$in'")
@@ -41,11 +46,11 @@ class ToxicitySpec extends AnyFunSuite {
     // scrub is idempotent: masked text has zero hits
     import spark.implicits._
     val rescrub = rows.map(_.getString(2)).toSeq.toDF("t")
-      .select(Toxicity.count(col("t"))).collect().map(_.getLong(0))
+      .select(countCol(col("t"))).collect().map(_.getLong(0))
     assert(rescrub.forall(_ == 0L))
     // total on null text: count 0, not null
     val nullRow = spark.sql("SELECT CAST(NULL AS STRING) t")
-      .select(Toxicity.count(col("t"))).head()
+      .select(countCol(col("t"))).head()
     assert(!nullRow.isNullAt(0) && nullRow.getLong(0) == 0L)
   }
 
@@ -215,15 +220,17 @@ class ToxicitySpec extends AnyFunSuite {
     // "Damn" and "damn" are the same term after ASCII folding; an
     // un-deduped automaton would emit one hit per duplicate pattern while
     // the regex union still matches once per position — breaking the
-    // pinned tier equivalence
+    // pinned equivalence with the regex reference
     val dupes = Seq("damn", "Damn", "DAMN", "hell", "hell")
     val m = Toxicity.Matcher(dupes)
     val text = "damn that hell of a day"
     assert(m.countIn(text) == 2L, "automaton double-counted duplicates")
     import spark.implicits._
-    val viaRegex = Seq(text).toDF("t")
-      .select(Toxicity.count(col("t"), dupes)).head().getLong(0)
-    assert(viaRegex == 2L, "regex tier diverged under duplicates")
+    val b = spark.sparkContext.broadcast(Toxicity.LangBank(Map("*" -> dupes)))
+    val viaUdf = Seq(text).toDF("t")
+      .select(Toxicity.countByLangUdf(b)(lit("*"), col("t"))).head().getLong(0)
+    assert(viaUdf == 2L, "automaton UDF double-counted duplicates")
+    assert(regexCount(dupes, text) == 2L, "regex reference diverged under duplicates")
   }
 
   test("automaton count equals the number of masked spans for overlapping term shapes") {
@@ -244,6 +251,7 @@ class ToxicitySpec extends AnyFunSuite {
     val m = Toxicity.Matcher(Toxicity.DefaultList)
     cases.foreach { case (in, want) =>
       assert(m.countIn(in) == want, s"automaton count for '$in'")
+      assert(regexCount(Toxicity.DefaultList, in) == want, s"regex count for '$in'")
     }
     assert(m.countIn(null) == 0L)
     // and across a generated corpus slice with toxic fragments PLANTED
@@ -255,14 +263,10 @@ class ToxicitySpec extends AnyFunSuite {
         when(pmod(hash(col("url")), lit(3)) === 0, lit(" damn山 hell"))
           .when(pmod(hash(col("url")), lit(3)) === 1, lit(" so Crap, ok"))
           .otherwise(lit(" clean tail"))))
-    val b = spark.sparkContext.broadcast(m)
-    val viaUdf = planted
-      .select(col("t"), Toxicity.countUdf(b)(col("t")).as("n_auto"),
-        Toxicity.count(col("t")).as("n_regex"))
-      .collect()
+    val viaUdf = planted.select(col("t"), countCol(col("t")).as("n_auto")).collect()
     assert(viaUdf.exists(_.getLong(1) > 0L), "planting produced no hits")
     viaUdf.foreach { r =>
-      assert(r.getLong(1) == r.getLong(2),
+      assert(r.getLong(1) == regexCount(Toxicity.DefaultList, r.getString(0)),
         s"tier divergence on: ...${r.getString(0).takeRight(40)}")
     }
   }

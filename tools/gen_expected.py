@@ -518,8 +518,8 @@ print(f"wrote {OUT}/gopher_ngrams.parquet ({len(gn_rows)} rows)")
 
 # ---------------------------------------------------------------------------
 # q_bpe_encode expected: corpus token frequencies under the learned merge
-# table (BpeTrain.encodeCounts twin) — per word: repeatedly merge the
-# LOWEST-rank adjacent pair present, all occurrences left to right.
+# table (BpeTrain.encodeCountsFromWordCounts twin) — per word: repeatedly
+# merge the LOWEST-rank adjacent pair present, all occurrences left to right.
 bpe_ranks = {(l, r): rank for rank, l, r, _ in merges}
 
 def bpe_encode_word(w):
