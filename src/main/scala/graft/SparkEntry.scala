@@ -536,8 +536,8 @@ object SparkEntry {
 
     // TOXICITY filter + scrub (the north-rule's second scrub family,
     // C4-style word blocklist): counts, in-place masking, and the C4
-    // drop-on-any-hit flag — the pipeline's automaton UDFs, with the
-    // regex form as the exact DuckDB mirror; toxic terms planted
+    // drop-on-any-hit flag — the LangBank automaton's column UDFs, with
+    // the regex form as the exact DuckDB mirror; toxic terms planted
     // deterministically (the corpus itself is clean)
     "q_toxicity" -> ((s, dir) => {
       val id = col("doc_id")
@@ -551,7 +551,7 @@ object SparkEntry {
         .select(col("doc_id"),
           tox.countByLangUdf(b)(lit("*"), col("t")).as("n_toxic"),
           tox.scrubByLangUdf(b)(lit("*"), col("t")).as("scrubbed_tox"))
-        .withColumn("dropped", tox.dropFlag(col("n_toxic")))
+        .withColumn("dropped", col("n_toxic") > 0)
     }),
 
     // TOXICITY at UT1/LDNOOBW list scale (10k terms): the AUTOMATON tier

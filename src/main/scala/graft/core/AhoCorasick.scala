@@ -5,13 +5,19 @@ import scala.collection.mutable
 /** Aho-Corasick multi-pattern matcher emitting ALL occurrences of every
   * dictionary entry (overlaps included, via dictionary suffix links).
   *
-  * This is the scale-correct core for gazetteer NER: one O(|text|) pass
-  * regardless of dictionary size, vs the naive per-entry `indexOf` scan
-  * that is O(entries × |text|) — at 10k+ entries and MB-sized documents
-  * the difference is 4 orders of magnitude. Built once per executor from
-  * the broadcast model bytes; matching allocates only the hit vector.
+  * This is the scale-correct core for gazetteer NER and the toxicity
+  * blocklist: one O(|text|) pass regardless of dictionary size, vs the
+  * naive per-entry `indexOf` scan that is O(entries × |text|) — at 10k+
+  * entries and MB-sized documents the difference is 4 orders of magnitude.
+  * Built once per executor from the broadcast model bytes; matching
+  * allocates nothing itself.
+  *
+  * `foldAscii` reads A-Z as a-z while scanning (ASCII-only, so offsets
+  * never shift), which lets a case-insensitive caller scan the text as is
+  * instead of a lowered copy; its patterns must then be lowercase.
   */
-final class AhoCorasick(patterns: Array[String]) extends Serializable {
+final class AhoCorasick(patterns: Array[String], foldAscii: Boolean = false)
+    extends Serializable {
 
   // an empty pattern would register on the ROOT's output list and emit
   // position-dependent phantom matches — reject it outright
@@ -56,20 +62,20 @@ final class AhoCorasick(patterns: Array[String]) extends Serializable {
     }
   }
 
-  /** All (patternIndex, endExclusive) matches in `text`. CharSequence so
-    * the fused hot path scans its reused decode buffer directly. */
-  def findAll(text: CharSequence): Vector[(Int, Int)] = {
-    val hits = Vector.newBuilder[(Int, Int)]
+  /** Hands every (patternIndex, endExclusive) match in `text` to
+    * `onMatch`, in end order. CharSequence so the fused hot path scans its
+    * reused decode buffer directly. */
+  def scan(text: CharSequence)(onMatch: (Int, Int) => Unit): Unit = {
     var node = 0
     var i = 0
     while (i < text.length) {
-      val c = text.charAt(i)
+      val raw = text.charAt(i)
+      val c = if (foldAscii && raw >= 'A' && raw <= 'Z') (raw + 32).toChar else raw
       while (node != 0 && !children(node).contains(c)) node = fail(node)
       node = children(node).getOrElse(c, 0)
       var o = out(node)
-      while (o.nonEmpty) { hits += ((o.head, i + 1)); o = o.tail }
+      while (o.nonEmpty) { onMatch(o.head, i + 1); o = o.tail }
       i += 1
     }
-    hits.result()
   }
 }

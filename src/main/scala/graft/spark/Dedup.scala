@@ -51,20 +51,6 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
       .drop("digest")
 
-  /** LSH near-dup pairs with estimated Jaccard ≥ threshold.
-    * Output: (a, b, sim) with a < b — a SUFFICIENT edge set for union-find
-    * clustering (same connected components as the transitive closure), not
-    * every pair.
-    *
-    * Scale contract — mass duplicates must never reach the band join:
-    * identical texts share every band key, so a page with k exact copies
-    * would make k²/2 candidate pairs in ONE bucket. This operator therefore
-    * exact-collapses first (min-id representative per md5 digest); each
-    * dropped copy emits a linear (rep, copy, 1.0) arc directly and only
-    * DISTINCT texts are banded. As a backstop against pathological floods
-    * of near-identical-but-distinct texts, band buckets over
-    * `maxBandBucket` members are dropped (logged recall tradeoff — at that
-    * population the texts are better served by the exact/simhash tiers). */
   /** Exact-collapse in ONE aggregation over ONE scan of the input, with
     * the MinHash signature computed MAP-SIDE per row so the shuffle never
     * carries document text: the exchange moves (digest, sig, partial ids)
@@ -104,6 +90,21 @@ object Dedup {
     (grouped, arcs)
   }
 
+  /** LSH near-dup pairs with estimated Jaccard ≥ threshold.
+    * Output: (a, b, sim) with a < b — a SUFFICIENT edge set for union-find
+    * clustering (same connected components as the transitive closure), not
+    * every pair.
+    *
+    * Scale contract — mass duplicates must never reach the band join:
+    * identical texts share every band key, so a page with k exact copies
+    * would make k²/2 candidate pairs in ONE bucket. This operator therefore
+    * exact-collapses first (min-id representative per md5 digest); each
+    * dropped copy emits a linear (rep, copy, 1.0) arc directly and only
+    * DISTINCT texts are banded. As a backstop against pathological floods
+    * of near-identical-but-distinct texts, band buckets over
+    * `maxBandBucket` members are dropped: a recall tradeoff nothing counts
+    * or logs yet (ROADMAP direction 7) — at that population the texts are
+    * better served by the exact/simhash tiers. */
   def minHashLsh(df: DataFrame, idCol: String, textCol: String,
                  shingleK: Int = 5, numHashes: Int = 128, bands: Int = 32,
                  threshold: Double = 0.8, maxBandBucket: Int = 4096,
@@ -422,8 +423,8 @@ object Dedup {
     * backstop against floods of near-identical-but-DISTINCT texts (short
     * docs, boilerplate — simhash concentrates), chunk buckets over
     * `maxChunkBucket` distinct members are dropped from candidate mining
-    * (logged recall tradeoff, same knob as `maxBandBucket`/`maxBucket` in
-    * the sibling miners). */
+    * (the same uncounted recall tradeoff as `maxBandBucket`/`maxBucket` in
+    * the sibling miners; ROADMAP direction 7). */
   def simHashDups(df: DataFrame, idCol: String, textCol: String,
                   maxDist: Int = 3, maxChunkBucket: Int = 4096,
                   materialize: Materialize = Materialize.LocalCheckpoint): DataFrame = {

@@ -57,12 +57,15 @@ object NerSlot {
       * included), hits ordered (start, end, reason, text) — a total,
       * implementation-independent order. Hit.text is the DICTIONARY
       * entry, so no substring of the input is ever taken. */
-    def hitsOf(t: CharSequence): Vector[Hit] =
-      ac.findAll(t).map { case (pi, end) =>
+    def hitsOf(t: CharSequence): Vector[Hit] = {
+      val hits = Vector.newBuilder[Hit]
+      ac.scan(t) { (pi, end) =>
         val (entity, label, conf) = entries(pi)
-        Hit(Hf2Pii.getOrElse(label, "misc"), entity, end - entity.length, end,
+        hits += Hit(Hf2Pii.getOrElse(label, "misc"), entity, end - entity.length, end,
           conf, s"model:$label")
-      }.sortBy(h => (h.start, h.end, h.reason, h.text))
+      }
+      hits.result().sortBy(h => (h.start, h.end, h.reason, h.text))
+    }
 
     /** Batch inference (mapPartitions path). */
     def infer(texts: Seq[String]): Seq[Vector[Hit]] = texts.map(hitsOf)

@@ -2,7 +2,6 @@ package graft.spark
 
 import graft.core.Quality
 import graft.spark.expressions.PageStagesExpr
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.graft.ExprColumn
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -15,9 +14,10 @@ import org.apache.spark.sql.functions._
   * ONE native codegen expression, `page_stages`
   * ([[graft.spark.expressions.PageStagesExpr]]), whose models are per-JVM
   * defaults built from code (a trained NER tagger, the one model that is
-  * not, is broadcast into it). The rule-based keep/drop decision is
-  * [[Quality.decide]] under `Conf.quality`, made inside that expression;
-  * the optional toxicity and quality-model drops extend its reason here.
+  * not, is broadcast into it, as is the optional toxicity bank). The
+  * keep/drop decision is made inside that expression: [[Quality.decide]]
+  * under `Conf.quality`, then the optional toxicity drop; only the
+  * optional quality-model drop extends its reason here.
   * The only wide operation in a full run is the salted repartition before
   * the partitioned write.
   */
@@ -87,7 +87,8 @@ object Pipeline {
         * LANGUAGE (the C4/UT1 production shape): each doc is screened
         * against the list of its OWN identified language (`lang_id` from
         * this pipeline's langid stage), via one broadcast
-        * [[Toxicity.LangBank]]. Key "*" is the fallback for languages
+        * [[Toxicity.LangBank]] that the fused stage counts and masks with
+        * on the decoded row. Key "*" is the fallback for languages
         * without a list (omit it to skip them); one list for every doc is
         * `Map("*" -> list)`. When set, docs over `toxicityMaxHits` drop
         * with reason "toxicity" (evaluated AFTER every reference-derived
@@ -118,10 +119,12 @@ object Pipeline {
     val tagger =
       if (conf.modelNer) conf.trainedNer.map(spark.sparkContext.broadcast(_))
       else None
+    val toxicity = conf.toxicityByLang.map(m =>
+      spark.sparkContext.broadcast(Toxicity.LangBank(m)))
     val stagesCol = ExprColumn(PageStagesExpr(
       UnresolvedAttribute("text"), conf.scrubMode, conf.keyB64,
       conf.ns, conf.policies.toSeq.sorted.mkString(","), conf.modelNer, tagger,
-      conf.quality))
+      conf.quality, toxicity, conf.toxicityMaxHits))
 
     // one projection computes the fused stage; everything after reads its
     // struct fields (the expression is nondeterministic, so Catalyst never
@@ -129,37 +132,10 @@ object Pipeline {
     val staged = pages.select(col("url"), col("warc_ts"), col("lang"), col("text"),
       stagesCol.as("r"))
 
-    // the rule-based reason (Quality.decide inside the fused stage); the
-    // optional stages below only add reasons where it is ""
-    val dropReason = col("r.drop_reason")
-
-    // toxicity (our extension — the reference is PII-only): lowest
-    // priority, so every reference-derived drop_reason is attributed
-    // exactly as before; the count column exists only when enabled.
-    // Count and mask both take the broadcast per-language automaton
-    // (O(|text|) whatever the list size; one list is the "*" entry),
-    // dispatched on the pipeline's OWN language id, not the claimed lang.
-    // The count is materialized as the `n_toxic` column of a projection of
-    // its own, and the drop chain reads that column: ONE evaluation per
-    // row. (A nondeterministic UDF is never inlined, so an expression
-    // referenced by both the chain and the output would be evaluated
-    // twice; a deterministic regex count in the drop chain was likewise
-    // re-evaluated per reference, +582 cpu-s in the A/B SURVEY.md records.)
-    val toxBank: Option[Broadcast[Toxicity.LangBank]] = conf.toxicityByLang
-      .map(m => pages.sparkSession.sparkContext
-        .broadcast(Toxicity.LangBank(m)))
-    val toxCount: Option[Column] =
-      toxBank.map(b => Toxicity.countByLangUdf(b)(col("r.lang_id"), col("text")).as("n_toxic"))
-    val dropReasonTox =
-      if (toxCount.isEmpty) dropReason
-      else when(dropReason =!= lit(""), dropReason)
-        .when(Toxicity.dropFlag(col("n_toxic"), conf.toxicityMaxHits), "toxicity")
-        .otherwise("")
-
     // trained quality model (CCNet-style learned filter; see Conf docs):
-    // materialized as the `model_keep` column next to `n_toxic`, so the
-    // drop chain and the output share one computation; lowest-priority
-    // drop, after toxicity
+    // materialized as the `model_keep` column of a projection of its own,
+    // so the drop chain and the output share one computation; the
+    // lowest-priority drop, only where the fused stage kept the row
     val modelKeep: Option[Column] = conf.qualityModel.map { w =>
       val mk =
         if (w.length == QualityTrain.NF)
@@ -180,37 +156,30 @@ object Pipeline {
         }
       mk.as("model_keep")
     }
-    val dropReasonAll =
-      if (modelKeep.isEmpty) dropReasonTox
-      else when(dropReasonTox =!= lit(""), dropReasonTox)
+    val dropReason =
+      if (modelKeep.isEmpty) col("r.drop_reason")
+      else when(col("r.drop_reason") =!= lit(""), col("r.drop_reason"))
         .when(!col("model_keep"), "quality_model")
         .otherwise("")
-    val perRow = toxCount.toSeq ++ modelKeep
-    val scored = if (perRow.isEmpty) staged else staged.select(col("*") +: perRow: _*)
+    val scored = modelKeep.fold(staged)(mk => staged.select(col("*"), mk))
 
     // model-assisted NER (ENHANCED level, main.py:241-245): the hits are
     // computed INSIDE the fused stage (one automaton pass per row), merged
     // into the scrubbed text + n_hits there, and surfaced as a column only
     // when the level enables them — at MAXIMUM the field is pruned away.
+    // `n_toxic` likewise only when a toxicity bank is set.
     val nerCols =
       if (conf.modelNer) Seq(col("r.model_hits").as("model_hits")) else Seq.empty
-    // with toxicity enabled the OUTPUT text carries both maskings — PII
-    // aliases from the fused stage, then the blocklist mask on top (the
-    // north-rule's "PII/toxicity-scrub"); survivors under a lenient
-    // toxicityMaxHits therefore never ship a listed term
-    val scrubbedOut = toxBank match {
-      case Some(b) => Toxicity.scrubByLangUdf(b)(col("r.lang_id"), col("r.scrubbed"))
-      case None => col("r.scrubbed")
-    }
     scored.select(Seq(
       col("url"), col("warc_ts"), col("lang").as("lang_claimed"),
       col("r.lang_id").as("lang_id"), col("r.lang_conf").as("lang_conf"),
       col("r.ppl").as("ppl"), col("r.q").as("quality"),
-      (if (perRow.isEmpty) col("r.keep") else dropReasonAll === lit("")).as("keep"),
-      dropReasonAll.as("drop_reason"),
-      scrubbedOut.as("scrubbed_text"),
+      (if (modelKeep.isEmpty) col("r.keep") else dropReason === lit("")).as("keep"),
+      dropReason.as("drop_reason"),
+      col("r.scrubbed").as("scrubbed_text"),
       col("r.aliases").as("alias_dict"),
-      col("r.counts").as("n_hits")) ++ nerCols ++ toxCount.map(_ => col("n_toxic")) ++
+      col("r.counts").as("n_hits")) ++ nerCols ++
+      toxicity.map(_ => col("r.n_toxic").as("n_toxic")) ++
       modelKeep.map(_ => col("model_keep")): _*)
   }
 

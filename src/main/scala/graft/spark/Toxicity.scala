@@ -2,7 +2,6 @@ package graft.spark
 
 import graft.core.AhoCorasick
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Toxicity filtering + scrubbing — the second scrub family the
@@ -18,9 +17,10 @@ import org.apache.spark.sql.functions._
   *    explicit word-boundary + lowercase checks — O(|text|) per doc
   *    regardless of list size, the shape that survives UT1/LDNOOBW-scale
   *    lists (hundreds of thousands of terms, where a regex union dies).
-  *    [[Pipeline.run]] and the q_toxicity queries count and mask through
-  *    it, one [[LangBank]] whatever the list size (a single list is the
-  *    "*" entry).
+  *    One [[LangBank]] holds it whatever the list size (a single list is
+  *    the "*" entry). [[Pipeline.run]] counts and masks inside the fused
+  *    `page_stages` expression, on the decoded row; the q_toxicity
+  *    queries use the bank's column UDFs.
   *  - the REGEX form of the same semantics, one case-insensitive
   *    word-boundary union ([[pattern]] for `java.util.regex`,
   *    [[oraclePattern]] for RE2), is the reference: the DuckDB oracle
@@ -70,21 +70,11 @@ object Toxicity {
   def oraclePattern(words: Seq[String] = DefaultList): String =
     "\\b" + union(words) + "\\b"
 
-  /** C4 keep/drop: `maxHits = 0` drops on any hit (C4's rule); raise it
-    * for threshold-style pipelines. */
-  def dropFlag(nToxic: Column, maxHits: Long = 0L): Column =
-    nToxic > lit(maxHits)
-
   // ---- the automaton (list-size-independent scan) ---------------------------
 
-  /** Compiled blocklist: ASCII-lowercased Aho-Corasick + ASCII boundary
-    * check — the same folding the regex form's case classes express.
-    * ASCII-only folding is deliberate: full-Unicode toLowerCase would
-    * both fold characters the regex form does not (U+212A KELVIN → k) and
-    * change string LENGTH (U+0130 → two chars), shifting every offset. */
-  /** ASCII-only case fold, shared by the Matcher scan AND list loading —
-    * ONE normalization for the whole automaton (a full-Unicode toLowerCase at
-    * load time would both fold characters the scan does not and change
+  /** ASCII-only case fold for building and loading lists: the same fold
+    * the [[Matcher]] scan applies as it reads each char (a full-Unicode
+    * toLowerCase would both fold characters the scan does not and change
     * string LENGTH for e.g. U+0130, producing terms that can never match). */
   private[spark] def asciiLower(s: String): String = {
     val b = new Array[Char](s.length)
@@ -97,66 +87,60 @@ object Toxicity {
     new String(b)
   }
 
+  /** Compiled blocklist: an Aho-Corasick automaton over the ASCII-lowered
+    * terms that folds A-Z as it scans, plus an ASCII boundary check — the
+    * same folding the regex form's case classes express. ASCII-only
+    * folding is deliberate: full-Unicode toLowerCase would both fold
+    * characters the regex form does not (U+212A KELVIN → k) and change
+    * string LENGTH (U+0130 → two chars), shifting every offset. Count and
+    * mask take any CharSequence, so the fused stage scans its decode
+    * buffer without a String copy. */
   final case class Matcher(words: Seq[String]) extends Serializable {
     // dedupe after folding — mirrors union(); see the comment there
     @transient private lazy val lowered =
       words.map(Toxicity.asciiLower).distinct.toArray
-    @transient private lazy val ac = new AhoCorasick(lowered)
+    @transient private lazy val ac = new AhoCorasick(lowered, foldAscii = true)
     private def isWord(c: Char): Boolean =
       (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
         (c >= '0' && c <= '9') || c == '_'
 
-    /** Boundary-valid spans sorted by start — the ONE span set count and
-      * scrub both consume, so they cannot diverge on overlapping hits
-      * (plain ASCII word terms cannot overlap, but automaton-only term
-      * shapes — CJK, multi-word phrases — can). Returns null when empty
-      * (the common web-doc case; avoids the buffer allocation). */
-    private def validSpans(lower: String): scala.collection.mutable.ArrayBuffer[(Int, Int)] = {
-      var spans: scala.collection.mutable.ArrayBuffer[(Int, Int)] = null
-      ac.findAll(lower).foreach { case (pi, end) =>
+    /** The ONE span set count and scrub both consume, so they cannot
+      * diverge: the boundary-valid hits by (start, end), each accepted
+      * unless it overlaps one accepted before it (plain ASCII word terms
+      * cannot overlap, but automaton-only term shapes — CJK, multi-word
+      * phrases — can). */
+    private def accepted(t: CharSequence): List[(Int, Int)] = {
+      var spans = List.empty[(Int, Int)]
+      ac.scan(t) { (pi, end) =>
         val start = end - lowered(pi).length
-        if ((start == 0 || !isWord(lower.charAt(start - 1))) &&
-            (end == lower.length || !isWord(lower.charAt(end)))) {
-          if (spans == null)
-            spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-          spans += ((start, end))
-        }
+        if ((start == 0 || !isWord(t.charAt(start - 1))) &&
+            (end == t.length || !isWord(t.charAt(end))))
+          spans ::= ((start, end))
       }
-      spans
+      spans.sorted.foldLeft(List.empty[(Int, Int)]) { (kept, s) =>
+        if (kept.nonEmpty && s._1 < kept.head._2) kept else s :: kept
+      }.reverse
     }
 
-    /** Count of the ACCEPTED (non-overlapping, left-to-right) spans — the
-      * exact set [[scrubIn]] masks, so count and scrub agree by
-      * construction for every term shape. For plain-word lists this equals
-      * the all-occurrences count (valid hits cannot overlap). */
-    def countIn(t: String): Long = {
-      if (t == null) return 0L
-      val spans = validSpans(asciiLower(t))
-      if (spans == null) return 0L
-      val sorted = spans.sortBy(_._1)
-      var n = 0L
-      var pos = 0
-      sorted.foreach { case (s0, e0) =>
-        if (s0 >= pos) { n += 1; pos = e0 }
-      }
-      n
-    }
+    /** Count of the accepted spans — the exact set [[scrubIn]] masks, so
+      * count and scrub agree by construction for every term shape. For
+      * plain-word lists this equals the all-occurrences count (valid hits
+      * cannot overlap). */
+    def countIn(t: CharSequence): Long =
+      if (t == null) 0L else accepted(t).size.toLong
 
     /** Mask every accepted span in place (the regex form: a replace of
-      * [[Toxicity.pattern]]). ASCII folding preserves length, so lowered
-      * offsets index the original text directly. */
-    def scrubIn(t: String, mask: String = "<TOXIC>"): String = {
+      * [[Toxicity.pattern]]). Folding preserves length, so span offsets
+      * index the text directly. */
+    def scrubIn(t: CharSequence, mask: String = "<TOXIC>"): String = {
       if (t == null) return null
-      val spans = validSpans(asciiLower(t))
-      if (spans == null) return t
-      val sorted = spans.sortBy(_._1)
+      val spans = accepted(t)
+      if (spans.isEmpty) return t.toString
       val sb = new java.lang.StringBuilder(t.length)
       var pos = 0
-      sorted.foreach { case (s0, e0) =>
-        if (s0 >= pos) { // skip anything overlapping an already-masked span
-          sb.append(t, pos, s0).append(mask)
-          pos = e0
-        }
+      spans.foreach { case (s0, e0) =>
+        sb.append(t, pos, s0).append(mask)
+        pos = e0
       }
       sb.append(t, pos, t.length)
       sb.toString
@@ -174,7 +158,7 @@ object Toxicity {
   final case class LangBank(lists: Map[String, Seq[String]]) extends Serializable {
     @transient private lazy val matchers: Map[String, Matcher] =
       lists.collect { case (l, ws) if ws.nonEmpty => l -> Matcher(ws) }
-    private def matcherFor(lang: String): Option[Matcher] = {
+    private[spark] def matcherFor(lang: String): Option[Matcher] = {
       val m = matchers.get(if (lang == null) "*" else lang)
       if (m.isDefined) m else matchers.get("*")
     }
@@ -184,9 +168,11 @@ object Toxicity {
       matcherFor(lang).map(_.scrubIn(t, mask)).getOrElse(t)
   }
 
-  /** Per-language count/scrub UDFs over a broadcast bank (the 100-TB
-    * shape for LDNOOBW-scale lists). Nondeterministic = duplication guard,
-    * not semantics (see PageStagesExpr.deterministic): keep/drop
+  /** Per-language count/scrub UDFs over a broadcast bank: the column-level
+    * surface of the q_toxicity queries. `Pipeline.run` does not use them;
+    * it counts and masks inside the fused stage (`PageStagesExpr`'s
+    * `toxicity` field) over the same bank. Nondeterministic = duplication
+    * guard, not semantics (see PageStagesExpr.deterministic): keep/drop
     * predicates derived from the count must not clone the scan into
     * FilterExec. */
   def countByLangUdf(b: Broadcast[LangBank]) =

@@ -1,6 +1,7 @@
 package graft.spark.expressions
 
 import graft.core.{LangId, NerTag, Perplexity, Quality, Scrub}
+import graft.spark.Toxicity
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -101,10 +102,12 @@ object ExprHelpers {
 
   /** The fused per-page hot path as a direct InternalRow producer: langid,
     * perplexity, quality metrics, the keep/drop decision
-    * ([[Quality.decide]] under `quality`) and scrub over one decode of the
+    * ([[Quality.decide]] under `quality`), scrub and, when a `toxicity`
+    * bank is set, the blocklist count and mask over one decode of the
     * row. Models are the deterministic JVM-lazy defaults, built once per
-    * executor from code; the one model that is not in code, a trained
-    * span `tagger` (null when absent), arrives as a broadcast.
+    * executor from code; the ones that are not in code, a trained span
+    * `tagger` and the toxicity bank (null when absent), arrive as
+    * broadcasts.
     *
     * `policiesCsv`: comma-separated hit KINDS to scrub (the reference's
     * per-request `policies` form field, app/main.py:379); empty = all.
@@ -113,7 +116,9 @@ object ExprHelpers {
   def pageStages(text: UTF8String, mode: String, keyB64: String,
                  ns: String, policiesCsv: String, ner: Boolean,
                  tagger: Broadcast[NerTag.NerTagModel],
-                 quality: Quality.Conf): InternalRow = {
+                 quality: Quality.Conf,
+                 toxicity: Broadcast[Toxicity.LangBank],
+                 toxicityMaxHits: Long): InternalRow = {
     // byte-level hot path: score a reused char view of the UTF-8 bytes —
     // no per-row String materialization (null text scores as empty)
     val t: graft.core.CharsView =
@@ -121,7 +126,13 @@ object ExprHelpers {
     val (l, c) = LangId.default.classify(t)
     val p = Perplexity.default.perplexity(t)
     val m = Quality.metrics(t)
-    val (keep, reason) = Quality.decide(m, p, quality)
+    // toxicity: the list of the row's OWN identified language, counted on
+    // the input; lowest priority, so it only drops rows the rules keep
+    val tox = if (toxicity == null) null else toxicity.value.matcherFor(l).orNull
+    val nToxic = if (tox == null) 0L else tox.countIn(t)
+    val decided = Quality.decide(m, p, quality)
+    val (keep, reason) =
+      if (decided._1 && nToxic > toxicityMaxHits) (false, "toxicity") else decided
     // ENHANCED security level (ner=true, main.py:241-245): one automaton
     // pass per row over the per-JVM default gazetteer model; its hits are
     // MERGED into the scrub span set (regex_hits.extend(ai_ner) semantics)
@@ -140,12 +151,19 @@ object ExprHelpers {
         if (tagger == null) gaz else gaz ++ tagger.value.hitsOf(t)
       }
     val d = Scrub.scrubWithModeRaw(mode, t, keyB64, ns, policiesCsv, modelHits)
-    // unchanged scrub (scrubbed == null): forward the input UTF8String —
-    // safe because the consuming projection copies the struct into its
+    // the blocklist mask goes on top of the PII scrub output (the input
+    // when the scrub changed nothing, which needs a mask only if the count
+    // found a term), so survivors under a lenient toxicityMaxHits never
+    // ship a listed term
+    val out: String =
+      if (tox == null || (d.scrubbed == null && nToxic == 0)) d.scrubbed
+      else tox.scrubIn(if (d.scrubbed != null) d.scrubbed else t)
+    // unchanged text (out == null): forward the input UTF8String — safe
+    // because the consuming projection copies the struct into its
     // UnsafeRow before the source advances to the next row (the same
     // contract Spark's own substring/trim expressions rely on)
     val scrubbedOut: UTF8String =
-      if (d.scrubbed != null) UTF8String.fromString(d.scrubbed)
+      if (out != null) UTF8String.fromString(out)
       else if (text == null) UTF8String.EMPTY_UTF8
       else text
     val q = new GenericInternalRow(Array[Any](
@@ -154,20 +172,23 @@ object ExprHelpers {
     new GenericInternalRow(Array[Any](
       u8(l), c, p, q,
       scrubbedOut, mapData(d.aliases), mapData(d.counts),
-      hitsArray(modelHits), keep, u8(reason)))
+      hitsArray(modelHits), keep, u8(reason), nToxic))
   }
 }
 
 /** `page_stages(text, mode, key_b64, ns[, policies_csv[, ner]])` — the
   * whole fused pipeline stage (langid + perplexity + quality metrics +
-  * keep/drop decision + scrub, plus model NER when `ner`) as ONE native
-  * expression emitting the result struct directly as an InternalRow.
+  * keep/drop decision + scrub, plus model NER when `ner` and toxicity when
+  * `toxicity` is set) as ONE native expression emitting the result struct
+  * directly as an InternalRow.
   *
-  * `tagger` and `quality` are not SQL arguments: `Pipeline.run` sets
-  * `tagger` to the broadcast of `Conf.trainedNer` at an effective ENHANCED
-  * level (its hits join the gazetteer's) and `quality` to `Conf.quality`,
-  * the thresholds of the `keep`/`drop_reason` fields; SQL callers get the
-  * default thresholds.
+  * `tagger`, `quality`, `toxicity` and `toxicityMaxHits` are not SQL
+  * arguments: `Pipeline.run` sets `tagger` to the broadcast of
+  * `Conf.trainedNer` at an effective ENHANCED level (its hits join the
+  * gazetteer's), `quality` to `Conf.quality`, the thresholds of the
+  * `keep`/`drop_reason` fields, and `toxicity` to the broadcast
+  * [[Toxicity.LangBank]] of `Conf.toxicityByLang` with its drop threshold.
+  * SQL callers get the default thresholds and no toxicity.
   *
   * NOT null-intolerant: a null text scores as "" (and so drops as
   * too_short) — the default UnaryExpression null-propagation would instead
@@ -177,7 +198,9 @@ case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
                           ns: String, policiesCsv: String = "",
                           ner: Boolean = false,
                           tagger: Option[Broadcast[NerTag.NerTagModel]] = None,
-                          quality: Quality.Conf = Quality.Conf())
+                          quality: Quality.Conf = Quality.Conf(),
+                          toxicity: Option[Broadcast[Toxicity.LangBank]] = None,
+                          toxicityMaxHits: Long = 0L)
     extends UnaryExpression {
   import org.apache.spark.sql.catalyst.expressions.codegen.Block._
   import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
@@ -202,7 +225,8 @@ case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
       s"page_stages requires a string argument, got ${child.dataType.catalogString}")
   override def eval(input: InternalRow): Any =
     ExprHelpers.pageStages(child.eval(input).asInstanceOf[UTF8String],
-      mode, keyB64, ns, policiesCsv, ner, tagger.orNull, quality)
+      mode, keyB64, ns, policiesCsv, ner, tagger.orNull, quality, toxicity.orNull,
+      toxicityMaxHits)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val modeRef = ctx.addReferenceObj("mode", mode, "java.lang.String")
     val keyRef = ctx.addReferenceObj("keyB64", keyB64, "java.lang.String")
@@ -211,13 +235,15 @@ case class PageStagesExpr(child: Expression, mode: String, keyB64: String,
     val taggerRef = ctx.addReferenceObj("tagger", tagger.orNull,
       "org.apache.spark.broadcast.Broadcast")
     val qualityRef = ctx.addReferenceObj("quality", quality, "graft.core.Quality$Conf")
+    val toxicityRef = ctx.addReferenceObj("toxicity", toxicity.orNull,
+      "org.apache.spark.broadcast.Broadcast")
     val c = child.genCode(ctx)
     ev.copy(
       code = code"""
         ${c.code}
         InternalRow ${ev.value} = graft.spark.expressions.ExprHelpers.pageStages(
           ${c.isNull} ? null : ${c.value}, $modeRef, $keyRef, $nsRef, $polRef, $ner,
-          $taggerRef, $qualityRef);""",
+          $taggerRef, $qualityRef, $toxicityRef, ${toxicityMaxHits}L);""",
       isNull = FalseLiteral)
   }
   override protected def withNewChildInternal(newChild: Expression): PageStagesExpr =
@@ -253,14 +279,18 @@ object PageStagesExpr {
     StructField("lang_conf", DoubleType, nullable = false),
     StructField("ppl", DoubleType, nullable = false),
     StructField("q", qualitySchema, nullable = false),
+    // the PII scrub output, with the toxicity mask on top when a bank is set
     StructField("scrubbed", StringType, nullable = false),
     StructField("aliases", MapType(StringType, StringType, valueContainsNull = false), nullable = false),
     StructField("counts", MapType(StringType, LongType, valueContainsNull = false), nullable = false),
     // model-NER hits (ENHANCED level only; empty array at MAXIMUM)
     StructField("model_hits", ArrayType(hitSchema, containsNull = false), nullable = false),
-    // Quality.decide over `q` and `ppl`: first failing rule, "" when kept
+    // Quality.decide over `q` and `ppl`, then the toxicity drop: first
+    // failing rule, "toxicity" past `toxicityMaxHits`, "" when kept
     StructField("keep", BooleanType, nullable = false),
-    StructField("drop_reason", StringType, nullable = false)))
+    StructField("drop_reason", StringType, nullable = false),
+    // accepted toxicity spans in the input (0 with no bank)
+    StructField("n_toxic", LongType, nullable = false)))
 }
 
 /** Session-extension hook: `--conf spark.sql.extensions=graft.spark.expressions.GraftExtensions`. */

@@ -38,9 +38,10 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
-  /** One row of the fused stage's outputs, doubles by raw bits. */
+  /** One row of the fused stage's outputs, doubles by raw bits; the last
+    * field is `n_toxic`, 0 without a toxicity bank. */
   private type Stage = (String, Long, Long, Seq[Any], Boolean, String,
-    String, Map[String, String], Map[String, Long])
+    String, Map[String, String], Map[String, Long], Long)
 
   /** `graft.core` on the row's String: the reference for the fused stage. */
   private def reference(text: String, conf: Pipeline.Conf): Stage = {
@@ -48,23 +49,33 @@ class ExpressionsSpec extends AnyFunSuite {
     val (l, c) = LangId.default.classify(t)
     val p = Perplexity.default.perplexity(t)
     val m = Quality.metrics(t)
-    val (keep, reason) = Quality.decide(m, p, conf.quality)
+    val (kept, ruleReason) = Quality.decide(m, p, conf.quality)
     val d = Scrub.scrubWithMode(conf.scrubMode, t, conf.keyB64, conf.ns, "")
+    // toxicity: counted on the input with the row's own language, a drop
+    // only where the rules kept the row, the mask over the PII output
+    val bank = conf.toxicityByLang.map(Toxicity.LangBank(_))
+    val nToxic = bank.fold(0L)(_.countIn(l, t))
+    val (keep, reason) =
+      if (kept && nToxic > conf.toxicityMaxHits) (false, "toxicity") else (kept, ruleReason)
     (l, java.lang.Double.doubleToRawLongBits(c), java.lang.Double.doubleToRawLongBits(p),
-      m.productIterator.toSeq, keep, reason, d.scrubbed, d.aliases, d.counts)
+      m.productIterator.toSeq, keep, reason, bank.fold(d.scrubbed)(_.scrubIn(l, d.scrubbed)),
+      d.aliases, d.counts, nToxic)
   }
 
   /** `Pipeline.run`'s stage outputs by url. */
-  private def engine(df: DataFrame, conf: Pipeline.Conf): Map[String, Stage] =
-    Pipeline.run(spark, df, conf)
-      .select("url", "lang_id", "lang_conf", "ppl", "quality", "keep", "drop_reason",
-        "scrubbed_text", "alias_dict", "n_hits")
+  private def engine(df: DataFrame, conf: Pipeline.Conf): Map[String, Stage] = {
+    val out = Pipeline.run(spark, df, conf)
+    out.select(Seq("url", "lang_id", "lang_conf", "ppl", "quality", "keep", "drop_reason",
+        "scrubbed_text", "alias_dict", "n_hits").map(col) :+
+        (if (out.columns.contains("n_toxic")) col("n_toxic") else lit(0L)): _*)
       .collect().map(r => r.getString(0) -> ((r.getString(1),
         java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
         java.lang.Double.doubleToRawLongBits(r.getDouble(3)),
         r.getAs[Row](4).toSeq, r.getBoolean(5), r.getString(6), r.getString(7),
-        r.getMap[String, String](8).toMap, r.getMap[String, Long](9).toMap): Stage))
+        r.getMap[String, String](8).toMap, r.getMap[String, Long](9).toMap,
+        r.getLong(10)): Stage))
       .toMap
+  }
 
   /** A pages frame over an RDD: over a local Seq the optimizer would fold
     * the stage into the relation through `eval`, not the generated code. */
@@ -75,19 +86,28 @@ class ExpressionsSpec extends AnyFunSuite {
     }, 2).toDF()
   }
 
-  private def assertMatchesCore(df: DataFrame, texts: Map[String, String]): Unit =
-    for (mode <- Seq("ref", "dict")) {
-      val conf = Pipeline.Conf(scrubMode = mode)
+  /** Checks the ref and dict modes plus any `extra` confs; returns the
+    * engine's rows per conf, in that order. */
+  private def assertMatchesCore(df: DataFrame, texts: Map[String, String],
+                                extra: Seq[Pipeline.Conf] = Nil): Seq[Map[String, Stage]] =
+    (Seq("ref", "dict").map(m => Pipeline.Conf(scrubMode = m)) ++ extra).map { conf =>
       val got = engine(df, conf)
       assert(got.keySet == texts.keySet)
       texts.foreach { case (url, t) =>
-        assert(got(url) == reference(t, conf), s"mode=$mode url=$url")
+        assert(got(url) == reference(t, conf), s"conf=$conf url=$url")
       }
+      got
     }
 
   test("page_stages in Pipeline.run == core functions on the String, row for row") {
     val pages = DataGen.pages(spark, 400, partitions = 4)
-    assertMatchesCore(pages.toDF(), pages.collect().map(p => p.url -> p.text).toMap)
+    // a per-language toxicity bank whose terms occur in the generated text:
+    // "library" also hits dup-lines pages, which the rules drop first
+    val toxicity = Pipeline.Conf(toxicityByLang =
+      Some(Map("en" -> Seq("kappa", "rho", "library"), "*" -> Seq("kappa"))))
+    val got = assertMatchesCore(pages.toDF(),
+      pages.collect().map(p => p.url -> p.text).toMap, Seq(toxicity))
+    assert(got.last.values.exists(_._10 > 0L), "no row hit the toxicity bank")
   }
 
   test("alias_dict and n_hits keep core's entry order through Spark, in every mode") {

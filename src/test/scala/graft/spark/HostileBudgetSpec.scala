@@ -93,6 +93,7 @@ class HostileBudgetSpec extends AnyFunSuite {
     assert(sec < BudgetSec, f"$what took $sec%.1f s (budget $BudgetSec%.0f s)")
   }
 
+  private val toxicity = Toxicity.Matcher(Toxicity.DefaultList)
   private val textStages: Seq[(String, HostileDocs.Doc => Any)] = Seq(
     "scrub dict" -> (d => Scrub.scrubWithModeRaw("dict", d.text, key, "ns", "")),
     "scrub tags" -> (d => Scrub.scrubWithModeRaw("tags", d.text, key, "ns", "")),
@@ -111,7 +112,10 @@ class HostileBudgetSpec extends AnyFunSuite {
       var n = 0
       while (m.find()) n += 1
       n
-    })
+    },
+    "Toxicity count" -> (d => toxicity.countIn(d.text)),
+    "Toxicity mask" -> (d => toxicity.scrubIn(d.text)),
+    "NER gazetteer" -> (d => NerSlot.defaultModel.hitsOf(d.text)))
 
   test("every text stage clears each 1 MB hostile doc within the budget") {
     for ((_, stage) <- textStages; d <- warmDocs) stage(d)
@@ -129,9 +133,16 @@ class HostileBudgetSpec extends AnyFunSuite {
       if (d.family == "invalid_utf8_html") df.withColumn("text", col("html").cast("string"))
       else df
     }
-    def run(d: HostileDocs.Doc): Long =
-      Pipeline.run(spark, oneRow(d)).select("scrubbed_text", "keep").collect().length.toLong
-    warmDocs.foreach(run)
-    docs.foreach(d => within(s"page_stages ${d.family}")(assert(run(d) == 1L)))
+    def run(conf: Pipeline.Conf)(d: HostileDocs.Doc): Long =
+      Pipeline.run(spark, oneRow(d), conf).select("scrubbed_text", "keep").collect().length.toLong
+    // the default stage, then with model NER and a toxicity bank in it too
+    val confs = Seq("page_stages" -> Pipeline.Conf(),
+      "page_stages enhanced+toxicity" -> Pipeline.Conf(
+        security = Pipeline.SecurityLevel.Enhanced,
+        toxicityByLang = Some(Map("*" -> Toxicity.DefaultList))))
+    for ((name, conf) <- confs) {
+      warmDocs.foreach(run(conf))
+      docs.foreach(d => within(s"$name ${d.family}")(assert(run(conf)(d) == 1L)))
+    }
   }
 }

@@ -34,7 +34,7 @@ class ToxicitySpec extends AnyFunSuite {
     val df = cases.map(_._1).toDF("t")
       .select(col("t"), countCol(col("t")).as("n"),
         Toxicity.scrubByLangUdf(defaultBank)(lit("*"), col("t")).as("s"))
-      .withColumn("d", Toxicity.dropFlag(col("n")))
+      .withColumn("d", col("n") > 0)
     val rows = df.collect()
     rows.zip(cases).foreach { case (r, (in, want)) =>
       assert(r.getLong(1) == want, s"count for '$in'")
@@ -98,16 +98,17 @@ class ToxicitySpec extends AnyFunSuite {
       .toDF("url", "warc_ts", "html", "text", "lang")
     val scored = Pipeline.run(spark, pages,
       Pipeline.Conf(toxicityByLang = Some(Map("*" -> Toxicity.DefaultList))))
-    // the count UDF returns the long n_toxic; the mask UDF returns a string
+    // count, drop and mask all run inside the fused stage: no ScalaUDF in
+    // the plan, and one page_stages whatever reads keep
     for (df <- Seq(scored, scored.where(col("keep")), scored.where(!col("keep")))) {
       val plan = df.queryExecution.executedPlan
-      val counts = plan.collect { case node =>
-        node.expressions.flatMap(_.collect {
-          case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
-              if u.dataType == org.apache.spark.sql.types.LongType => u
-        })
-      }.flatten
-      assert(counts.size == 1, s"count UDF instances: ${counts.size}\n$plan")
+      val exprs = plan.collect { case node => node.expressions }.flatten
+      val udfs = exprs.flatMap(_.collect {
+        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u })
+      val stages = exprs.flatMap(_.collect {
+        case e: graft.spark.expressions.PageStagesExpr => e })
+      assert(udfs.isEmpty && stages.size == 1,
+        s"ScalaUDFs: ${udfs.size}, page_stages: ${stages.size}\n$plan")
     }
     assert(scored.select("drop_reason", "n_toxic").head() == org.apache.spark.sql.Row("toxicity", 1L))
   }
